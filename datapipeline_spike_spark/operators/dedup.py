@@ -1591,8 +1591,8 @@ def dhash_neardup_pairs(
     16-bit bands cost 17x more index rows (68n vs 8n — linear, cheap)
     but collide at ~n^2 * 68/65536 ~= n^2/964: ~30x fewer candidate
     XOR-popcounts and ~30x fewer candidate join-output rows on uniform
-    corpora (measured, not guessed: tools/dhash_probe_r15.py replays
-    both layouts on uniform random hashes — see DHASH_PROBE_r15.json).
+    corpora (measured, not guessed: both layouts replayed on uniform
+    random hashes — see DHASH_PROBE_r15.json).
     Trade-off stated precisely (ADVICE r15): the probe side carries
     both hash words through the 17x explode so verification is a
     column op on the join output, i.e. the MAP-SIDE shuffle write
@@ -2149,8 +2149,8 @@ def exact_substr_char_runs(
     trade): the relaxation was probed as CONTENT-mod-s window sampling
     (keep a window iff xxhash64(content) % s == 0 — alignment-
     independent, so kept contents keep their EXACT corpus counts;
-    tools/substr_stride_probe.py, results in PLANS_r19.md and
-    SCALE_PROBE_r19.jsonl ``exact_substr_content_mod_s``). Measured at
+    results in PLANS_r19.md and SCALE_PROBE_r19.jsonl
+    ``exact_substr_content_mod_s``). Measured at
     sf0.1 / L=30: shuffle volume tracks 1/s exactly and the count
     stage speeds up proportionally, but covered-character recall
     erodes to 92.1% at s=2, 85.1% at s=4, 78.0% at s=8 — run

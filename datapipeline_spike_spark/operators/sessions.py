@@ -25,11 +25,14 @@ def sessionize(
     w = Window.partitionBy(key).orderBy(ts, tiebreak)
     gap_s = gap_minutes * 60
     prev = F.lag(ts).over(w)
-    # two-step cast: TIMESTAMP_NTZ has no direct cast to BIGINT, but
-    # NTZ->TIMESTAMP->BIGINT works and is an identity chain for an
-    # already-zoned TIMESTAMP — tolerant of either load-boundary type
+    # fractional epoch seconds (microseconds / 1e6), the same DOUBLE
+    # arithmetic as DuckDB's epoch(ts): a BIGINT cast truncates to whole
+    # seconds and misses gaps such as 1800.9 s. Two-step cast:
+    # TIMESTAMP_NTZ has no direct numeric cast, but NTZ->TIMESTAMP works
+    # and is an identity for an already-zoned TIMESTAMP — tolerant of
+    # either load-boundary type
     def _epoch_s(c):  # noqa: ANN001, ANN202
-        return c.cast("timestamp").cast("long")
+        return c.cast("timestamp").cast("double")
 
     new_session = (
         prev.isNull()

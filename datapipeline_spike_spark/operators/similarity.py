@@ -615,12 +615,17 @@ def pq_codebooks(
     form sort-shuffled k rows per subvector per iteration); the update
     shuffles (subspace, cent, dim) partial sums — map-side combined,
     wire volume m*k*(dim/m) rows per map partition regardless of corpus
-    size. Training is EAGER (iters bounded collects at call time); the
-    returned frame is the final iteration's lazy update chain.
+    size. Training is EAGER (iters bounded collects at call time, so
+    even an EXPLAIN-only caller runs it); the returned frame is the
+    final iteration's lazy update chain.
 
-    Returns (s, cent_id, cvec, n_assigned)."""
+    Returns (s, cent_id, cvec, n_assigned). Raises ValueError for
+    ``iters < 1`` or a ``dim`` that ``m`` does not divide."""
+    if iters < 1:
+        raise ValueError(f"pq_codebooks needs iters >= 1, got {iters}")
+    if m < 1 or dim % m != 0:
+        raise ValueError(f"pq_codebooks needs dim divisible by m, got dim={dim}, m={m}")
     width = dim // m
-    assert width * m == dim, "dim must divide evenly into m subspaces"
     emb = fan_out(corpus).select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
     )

@@ -56,59 +56,22 @@ def test_every_oracle_parses_in_duckdb():
 
 def test_rotation_head_invariants():
     """The driver samples the FIRST ``DRIVER_SAMPLE`` registry entries.
-    The mechanical capacity check lives in plans.rotation_preflight()
-    (VERDICT r8 item 7 / r9 item 4 — the r9 head shipped with six
-    phantom names and 30/50 slots because this test pinned stale
-    round-specific lists instead of checking the live invariants);
-    here we assert it returns NO problems, plus the ordering contract
-    it does not cover."""
+    The order is computed from the committed CORRECTNESS_rN.json files:
+    ``_CHANGED`` names lead, then oracle-backed names least recently
+    driver-green first, then the rows-only names."""
     from datapipeline_spike_spark.plans import (
-        DRIVER_SAMPLE,
+        _CHANGED,
         REGISTRY,
-        _HEAD,
-        _NO_ORACLE_PIN,
-        _QUEUED_FOR_NEXT_HEAD,
-        _R19_NEW,
+        _last_green_rounds,
         rotation_preflight,
     )
 
     assert rotation_preflight() == []
-    # the preflight PROVABLY trips on each r9-class failure mode:
-    names_all = list(REGISTRY)
-    # (a) phantom head names (the six never-built r9 queries)
-    bad = rotation_preflight(head=names_all[:49] + ["not_a_query"],
-                             tail=names_all[49:])
-    assert any("phantom" in p for p in bad)
-    # (b) under-capacity head (the 30-of-50 r9 head)
-    bad = rotation_preflight(head=names_all[:30], tail=names_all[30:])
-    assert any("capacity" in p for p in bad)
-    # (c) a registered query the rotation forgot to place
-    bad = rotation_preflight(head=names_all[:50], tail=names_all[50:-1])
-    assert any("unplaced" in p for p in bad)
-    # (d) queue overlapping the head
-    bad = rotation_preflight(head=names_all[:50],
-                             queued=(names_all[0],), tail=names_all[50:])
-    assert any("overlap" in p for p in bad)
     names = list(REGISTRY)
-    # the head IS the driver sample, in order
-    assert names[:DRIVER_SAMPLE] == [n for n in _HEAD if n in REGISTRY]
-    # every new r19 query holds a head slot this round (no
-    # changed-code slot in r19: the best_of_n NULL guard freezes with
-    # its first registration, and the cache/observability ADVICE fixes
-    # are plan-neutral)
-    assert set(_R19_NEW) <= set(_HEAD)
-    # the documented next-round queue sits immediately after the head
-    queue_live = [n for n in _QUEUED_FOR_NEXT_HEAD if n in REGISTRY]
-    assert names[DRIVER_SAMPLE : DRIVER_SAMPLE + len(queue_live)] == queue_live
-    assert len(set(names)) == len(names)
-    # the no-oracle rows-only entries stay pinned at the very tail —
-    # a head/queue slot spent on them yields zero driver verification
-    # (VERDICT r11 item 3); preflight also rejects their resurfacing
-    assert set(names[-len(_NO_ORACLE_PIN):]) == set(_NO_ORACLE_PIN)
-    bad = rotation_preflight(
-        head=[n for n in names if n not in _NO_ORACLE_PIN][:49]
-        + [_NO_ORACLE_PIN[0]],
-        tail=[n for n in names if n not in _NO_ORACLE_PIN][49:]
-        + [_NO_ORACLE_PIN[1]],
-    )
-    assert any("pinned" in p for p in bad)
+    assert names[: len(_CHANGED)] == [n for n in names if n in _CHANGED]
+    rest = names[len(_CHANGED):]
+    groups = [0 if REGISTRY[n].oracle is not None else 1 for n in rest]
+    assert groups == sorted(groups)  # rows-only names close the order
+    last = _last_green_rounds()
+    backed = [last.get(n, (0, 0)) for n, g in zip(rest, groups) if g == 0]
+    assert backed == sorted(backed)  # least recently green first

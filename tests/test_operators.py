@@ -49,6 +49,21 @@ def test_sessionize_gap_splits(spark):
     assert out[3] == 2  # 50-minute gap > 30 min
 
 
+def test_sessionize_sub_second_gaps_match_epoch_double(spark):
+    """Gaps are compared in fractional seconds, like the oracle's
+    epoch(ts): 00:00:00.05 -> 00:30:00.95 is 1800.9 s (> 1800, new
+    session) although whole seconds give 1800; 00:30:00.95 ->
+    01:00:00.55 is 1799.6 s (same session)."""
+    rows = [
+        (1, dt.datetime(2024, 1, 1, 0, 0, 0, 50_000), 1),
+        (1, dt.datetime(2024, 1, 1, 0, 30, 0, 950_000), 2),
+        (1, dt.datetime(2024, 1, 1, 1, 0, 0, 550_000), 3),
+    ]
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long")
+    out = {r["event_id"]: r["session_seq"] for r in sessionize(df).collect()}
+    assert out == {1: 1, 2: 2, 3: 2}
+
+
 def test_latest_per_key_tiebreak(spark):
     df = spark.createDataFrame(
         [(1, "a", _ts(5), 10), (1, "a", _ts(5), 11), (1, "a", _ts(1), 99)],
@@ -528,6 +543,22 @@ def test_pq_codebooks_shape_and_assignment_cover(spark, sf_dir):
         assert len(rows) <= 8
         # every corpus vector lands in exactly one centroid per subspace
         assert sum(r["n_assigned"] for r in rows) == n
+
+
+@pytest.mark.parametrize(
+    "kwargs, match",
+    [({"iters": 0}, "iters"), ({"dim": 64, "m": 5}, "divisible")],
+    ids=["iters_zero", "dim_not_divisible"],
+)
+def test_pq_codebooks_rejects_bad_parameters(spark, sf_dir, kwargs, match):
+    """No silent empty frame for iters=0, and the subspace split is a
+    ValueError that ``python -O`` cannot strip."""
+    from datapipeline_spike_spark.operators.similarity import pq_codebooks
+    from datapipeline_spike_spark.plans.registry import load
+
+    emb = load(spark, sf_dir, "embeddings")
+    with pytest.raises(ValueError, match=match):
+        pq_codebooks(emb, **{"dim": 64, "m": 4, "k": 8, "iters": 1, **kwargs})
 
 
 def test_pq_adc_lossless_when_codebook_covers_corpus(spark):

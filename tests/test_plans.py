@@ -642,24 +642,12 @@ def test_neardup_decode_stages_are_arrow_batched(spark):
         assert "BatchEvalPython" not in plan, plan
 
 
-def test_dhash_probe_tool_replays_the_operator_join(spark):
-    """ADVICE r15: tools/dhash_probe_r15.py reconstructs the operator's
-    band/probe expressions instead of sharing code (the operator's
-    internals are deliberately private), so this test mechanically
-    links the two: on hashes planted at every Hamming distance 0..8,
-    the probe's candidate set filtered to true hamming <= 7 must EQUAL
-    dhash_neardup_pairs(max_hamming=7) — if either side's band layout
-    or probe emission drifts, the recall contracts diverge and this
-    fails, flagging DHASH_PROBE_r15.json as stale evidence."""
-    import importlib.util
-
+def test_dhash_neardup_pairs_matches_brute_force_popcount(spark):
+    """On hashes planted at every Hamming distance 0..8, the multi-probe
+    band join of dhash_neardup_pairs(max_hamming=7) must return exactly
+    the pairs a brute-force XOR-popcount over all pairs keeps — if the
+    band layout or probe emission loses recall, the sets diverge."""
     from datapipeline_spike_spark.operators.dedup import dhash_neardup_pairs
-
-    spec = importlib.util.spec_from_file_location(
-        "dhash_probe_r15", "/root/repo/tools/dhash_probe_r15.py"
-    )
-    probe_mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(probe_mod)
 
     base = 0x5A5A_A5A5
     rows = [(0, (base >> 32) & 0xFFFFFFFF, base & 0xFFFFFFFF)]
@@ -683,18 +671,15 @@ def test_dhash_probe_tool_replays_the_operator_join(spark):
     def popcount(x: int) -> int:
         return bin(x).count("1")
 
-    words = {m: (w0, w1) for m, w0, w1 in rows}
-    probe_cands = set()
-    for r in probe_mod.new_multiprobe_candidates(h).collect():
-        a, b = r["id_a"], r["id_b"]
-        ham = popcount(words[a][0] ^ words[b][0]) + popcount(
-            words[a][1] ^ words[b][1]
-        )
-        if ham <= 7:
-            probe_cands.add((a, b, ham))
-    assert got == probe_cands
+    brute = set()
+    for a, a0, a1 in rows:
+        for b, b0, b1 in rows:
+            ham = popcount(a0 ^ b0) + popcount(a1 ^ b1)
+            if a < b and ham <= 7:
+                brute.add((a, b, ham))
+    assert got == brute
     # the plant is non-trivial: pairs exist at hamming 7 (kept) and
-    # the hamming-8 pair (0, 8) is excluded by BOTH sides
+    # the hamming-8 pair (0, 8) is excluded
     assert any(ham == 7 for _, _, ham in got)
     assert not any({a, b} == {0, 8} for a, b, _ in got)
 

@@ -3,11 +3,10 @@ REGISTRY entries (plans/catalog_r15). This keeps running the SAME
 differential comparison the pre-handoff gate uses
 (tools/check_oracle.compare) — against the REGISTRY entries, so the
 local evidence survives the move (the r9/r11/r12/r13 precedent) —
-plus rotation/head invariants for the r15 rotation (the eight lead,
-then the dhash changed-code slot) and registered-form sanity floors
-(the audio slice must produce real same-family pairs; BT strengths
-must be normalized and rank-consistent with the planted truth; the
-substr quote plant must surface long runs)."""
+plus registered-form sanity floors (the audio slice must produce real
+same-family pairs; BT strengths must be normalized and rank-consistent
+with the planted truth; the substr quote plant must surface long
+runs)."""
 
 from __future__ import annotations
 
@@ -21,7 +20,6 @@ from datapipeline_spike_spark.plans import (  # noqa: F401  (imports catalog_r15
     REGISTRY,
     rotation_preflight,
 )
-from datapipeline_spike_spark.plans import _R15_CHANGED, _R15_NEW
 from datapipeline_spike_spark.plans.catalog_r15 import R15_REGISTERED
 from datapipeline_spike_spark.plans.registry import TABLES
 
@@ -47,17 +45,14 @@ def oracle_con(sf_dir):
 
 def test_r15_moves_are_all_registered():
     assert len(R15_REGISTERED) == 8
-    assert tuple(R15_REGISTERED) == _R15_NEW
     missing = [n for n in R15_REGISTERED if n not in REGISTRY]
     assert not missing, missing
 
 
 def test_r15_moves_remain_placed_by_the_rotation():
-    """The r15 'head leads with the eight + dhash' pin retired with the
-    r16 rotation (the r13-gate precedent); what must stay true forever:
-    all nine remain registered, placed, and the rotation is sound."""
-    placed = set(REGISTRY)
-    assert set(_R15_NEW) | set(_R15_CHANGED) <= placed
+    """All eight remain registered, so the computed order places them,
+    and the order is sound."""
+    assert set(R15_REGISTERED) <= set(REGISTRY)
     assert rotation_preflight() == []
 
 

@@ -3,12 +3,10 @@ REGISTRY entries (plans/catalog_r16). This keeps running the SAME
 differential comparison the pre-handoff gate uses
 (tools/check_oracle.compare) — against the REGISTRY entries, so the
 local evidence survives the move (the r9/r11/r12/r13/r15 precedent) —
-plus rotation/head invariants for the r16 rotation (the six lead, then
-the ngram_containment_pairs changed-code slot) and registered-form
-sanity floors (the pagerank ranks must sum to 1 over the host graph;
-the detector plants must surface every family/license; the VAD corpus
-must produce real multi-segment clips; the curriculum schedule must be
-phase-major)."""
+plus registered-form sanity floors (the pagerank ranks must sum to 1
+over the host graph; the detector plants must surface every
+family/license; the VAD corpus must produce real multi-segment clips;
+the curriculum schedule must be phase-major)."""
 
 from __future__ import annotations
 
@@ -22,7 +20,6 @@ from datapipeline_spike_spark.plans import (  # noqa: F401  (imports catalog_r16
     REGISTRY,
     rotation_preflight,
 )
-from datapipeline_spike_spark.plans import _R16_CHANGED, _R16_NEW
 from datapipeline_spike_spark.plans.catalog_r16 import R16_REGISTERED
 from datapipeline_spike_spark.plans.registry import TABLES
 
@@ -48,18 +45,14 @@ def oracle_con(sf_dir):
 
 def test_r16_moves_are_all_registered():
     assert len(R16_REGISTERED) == 6
-    assert tuple(R16_REGISTERED) == _R16_NEW
     missing = [n for n in R16_REGISTERED if n not in REGISTRY]
     assert not missing, missing
 
 
 def test_r16_moves_remain_placed_by_the_rotation():
-    """The r16 'head leads with the six + ngram' pin retired with the
-    r17 rotation (the r13/r15-gate precedent); what must stay true
-    forever: all seven remain registered, placed, and the rotation is
-    sound."""
-    placed = set(REGISTRY)
-    assert set(_R16_NEW) | set(_R16_CHANGED) <= placed
+    """All six remain registered, so the computed order places them,
+    and the order is sound."""
+    assert set(R16_REGISTERED) <= set(REGISTRY)
     assert rotation_preflight() == []
 
 

@@ -3,12 +3,10 @@ now REGISTRY entries (plans/catalog_r17). This keeps running the SAME
 differential comparison the pre-handoff gate uses
 (tools/check_oracle.compare) — against the REGISTRY entries, so the
 local evidence survives the move (the r9/r11/r12/r13/r15/r16
-precedent) — plus rotation/head invariants for the r17 rotation (the
-eleven lead, then the three changed-code slots), the LPA tie-break
-regression pins (VERDICT r16 item 6: planted path-graph +
-disjoint-triangle + string-vertex replays must ride the registration
-gate before the hash freezes), and registered-form sanity floors for
-every new entry."""
+precedent) — plus the LPA tie-break regression pins (VERDICT r16 item
+6: planted path-graph + disjoint-triangle + string-vertex replays must
+ride the registration gate before the hash freezes), and
+registered-form sanity floors for every new entry."""
 
 from __future__ import annotations
 
@@ -23,7 +21,6 @@ from datapipeline_spike_spark.plans import (  # noqa: F401  (imports catalog_r17
     REGISTRY,
     rotation_preflight,
 )
-from datapipeline_spike_spark.plans import _R17_CHANGED, _R17_NEW
 from datapipeline_spike_spark.plans.catalog_r17 import R17_REGISTERED
 from datapipeline_spike_spark.plans.registry import TABLES
 
@@ -47,28 +44,32 @@ def oracle_con(sf_dir):
     con.close()
 
 
+# the persist() conversions (exact_substr_runs kept frame, dhash hash
+# frame — which audio_fingerprint_neardup reuses) must leave every
+# value identical, so they re-verify beside the eleven
+_PERSIST_CONVERTED = (
+    "exact_substr_runs",
+    "dhash_neardup_pairs",
+    "audio_fingerprint_neardup",
+)
+
+
 def test_r17_moves_are_all_registered():
     assert len(R17_REGISTERED) == 11
-    assert tuple(R17_REGISTERED) == _R17_NEW
     missing = [n for n in R17_REGISTERED if n not in REGISTRY]
     assert not missing, missing
 
 
 def test_r17_moves_remain_placed_by_the_rotation():
-    """The r17 'head leads with the eleven + the changed slots' pin
-    retired with the r18 rotation (the r13/r15/r16-gate precedent);
-    what must stay true forever: all fourteen remain registered,
-    placed, and the rotation is sound."""
-    placed = set(REGISTRY)
-    assert set(_R17_NEW) | set(_R17_CHANGED) <= placed
+    """All eleven and the three persist-converted queries remain
+    registered, so the computed order places them, and the order is
+    sound."""
+    assert set(R17_REGISTERED) | set(_PERSIST_CONVERTED) <= set(REGISTRY)
     assert rotation_preflight() == []
 
 
-# the changed-code slots re-verify here too: the persist() conversions
-# (exact_substr_runs kept frame, dhash hash frame — which
-# audio_fingerprint_neardup reuses) must leave every value identical
 @pytest.mark.parametrize(
-    "name", sorted(set(R17_REGISTERED) | set(_R17_CHANGED))
+    "name", sorted(set(R17_REGISTERED) | set(_PERSIST_CONVERTED))
 )
 def test_registered_query_matches_oracle(spark, sf_dir, oracle_con, name):
     q = REGISTRY[name]

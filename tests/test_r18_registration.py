@@ -3,9 +3,6 @@ now REGISTRY entries (plans/catalog_r18). This keeps running the SAME
 differential comparison the pre-handoff gate uses
 (tools/check_oracle.compare) — against the REGISTRY entries, so the
 local evidence survives the move (the r9..r17 precedent) — plus
-rotation/head invariants for the r18 rotation (the three lead; there
-is no changed-code slot this round — the ADVICE r17 fixes touched only
-staged operators and the unpersist mechanism is plan-neutral), and
 registered-form sanity floors for every new entry."""
 
 from __future__ import annotations
@@ -20,7 +17,6 @@ from datapipeline_spike_spark.plans import (  # noqa: F401  (imports catalog_r18
     REGISTRY,
     rotation_preflight,
 )
-from datapipeline_spike_spark.plans import _R18_NEW
 from datapipeline_spike_spark.plans.catalog_r18 import R18_REGISTERED
 from datapipeline_spike_spark.plans.registry import TABLES
 
@@ -46,18 +42,14 @@ def oracle_con(sf_dir):
 
 def test_r18_moves_are_all_registered():
     assert len(R18_REGISTERED) == 3
-    assert tuple(R18_REGISTERED) == _R18_NEW
     missing = [n for n in R18_REGISTERED if n not in REGISTRY]
     assert not missing, missing
 
 
 def test_r18_moves_remain_placed_by_the_rotation():
-    """The r18 'head leads with the cohort' pin retired at the r19
-    rotation (the r16->r17->r18 precedent): the durable invariant is
-    that every r18 move stays registered and placed, and the rotation
-    is sound."""
-    placed = set(REGISTRY)
-    assert set(_R18_NEW) <= placed
+    """All three remain registered, so the computed order places them,
+    and the order is sound."""
+    assert set(R18_REGISTERED) <= set(REGISTRY)
     assert rotation_preflight() == []
 
 

@@ -1,7 +1,8 @@
-"""Rotation-capacity preflight (VERDICT r8 item 7 / r9 item 4): fails
-loudly if the rotation head in plans/__init__.py lists queries that do
-not exist, misses driver-sample capacity, or documents a queue that
-cannot fit the next head. Run standalone or via the test suite
+"""Driver-sample preflight: fails loudly if the computed registry
+order in plans/__init__.py is unsound — a ``_CHANGED`` name that is
+not registered, has no oracle or does not fit the driver sample, or a
+head that is not DRIVER_SAMPLE distinct oracle-backed names. Run
+standalone or via the test suite
 (tests/test_entry.py::test_rotation_head_invariants).
 
 Usage: python tools/rotation_preflight.py
