@@ -111,12 +111,6 @@ def materialize_barrier(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-def lazy_barrier(df: DataFrame) -> DataFrame:
-    """:func:`materialize_barrier` with ``eager=False`` in a
-    ``DataFrame.transform``-friendly single-argument form."""
-    return materialize_barrier(df, eager=False)
-
-
 def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
     """Ids of every RDD currently pinned to storage (persist()ed
     DataFrames once materialized, localCheckpoint RDDs, raw persisted

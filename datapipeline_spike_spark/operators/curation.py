@@ -35,18 +35,16 @@ content hashes, so reruns and backfills produce identical corpora.
 
 Cache lifecycle: the scoring frame is persisted once (three consumers
 — dedup input, survivor scoring, final join — would each re-run the
-paragraph-dedup + scoring subtree). Callers that collect/write the
-result and want the memory back should use ``curate_corpus_scoped``
-(a context manager that unpersists on exit) or pass ``cache_handle``
-(a list the persisted frames are appended to; unpersist them when
-done). The bare call keeps the cache alive for the returned lazy plan
-— but freeing it no longer requires ``spark.catalog.clearCache()``,
-which evicts every OTHER cache in the session too.
+paragraph-dedup + scoring subtree), and the paragraph, survivor-id and
+redacted frames and ``dedup_corpus``'s barriers pin storage too.
+Callers that collect/write the result and want the memory back wrap
+the call in ``cache.scoped_cache``: every frame pinned inside the block
+is released at exit, and frames pinned before it keep their cache.
+The bare call keeps the pins alive for the returned lazy plan until
+the session drain (``cache.unpersist_all``).
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -67,7 +65,7 @@ from datapipeline_spike_spark.operators.sampling import (
     deterministic_shuffle,
 )
 
-__all__ = ["curate_corpus", "curate_corpus_scoped", "curation_profile"]
+__all__ = ["curate_corpus", "curation_profile"]
 
 
 def _curation_stages(
@@ -81,7 +79,6 @@ def _curation_stages(
     token_budget: float | None = None,
     n_shards: int | None = None,
     seed: int = 0,
-    cache_handle: list[DataFrame] | None = None,
 ) -> list[tuple[str, DataFrame]]:
     """The shared stage chain: an ordered list of (stage_name, frame)
     pairs whose LAST element is the curated result. ``curate_corpus``
@@ -96,10 +93,7 @@ def _curation_stages(
 
     # corpus-wide boilerplate removal at paragraph grain; empty docs
     # (all-boilerplate or empty extraction) drop here
-    cleaned = paragraph_dedup(
-        df, text_col=text_col, id_col=id_col, sep="\n",
-        cache_handle=cache_handle,
-    )
+    cleaned = paragraph_dedup(df, text_col=text_col, id_col=id_col, sep="\n")
     cleaned = cleaned.filter(F.length(F.col(text_col)) > 0).select(
         id_col, text_col
     )
@@ -112,18 +106,14 @@ def _curation_stages(
     # consumer (the profile's stage-10 aggregate used to re-run the
     # whole paragraph pipeline). The extra columns on the stage-10
     # frame are harmless: the profile aggregates (n_docs, n_tokens)
-    # and curate_corpus only consumes the LAST stage. Lifecycle:
-    # appended to ``cache_handle`` when given so the caller can
-    # unpersist exactly this frame (see module docstring);
-    # curate_corpus_scoped wraps that pattern as a context manager.
+    # and curate_corpus only consumes the LAST stage. Lifecycle: the
+    # caller's ``scoped_cache`` releases it (see module docstring).
     prefloor = cleaned.select(
         F.col(id_col),
         F.col(text_col),
         F.round(quality_score_from_tokens(t, text_col), 6).alias("quality"),
         F.size(t).alias("n_tokens"),
     ).persist()
-    if cache_handle is not None:
-        cache_handle.append(prefloor)
     stages.append(("10_paragraph_dedup", prefloor))
 
     scored = prefloor.filter(F.col("quality") >= min_quality)
@@ -140,22 +130,16 @@ def _curation_stages(
     # the survivor id set is consumed by every downstream stage frame
     # (the profile's stage-30 aggregate AND the redaction branch) —
     # pin the tiny id frame once so the select_canonical joins don't
-    # replay per consumer. persist(), not the r19 eager localCheckpoint
-    # (ADVICE r19: the checkpoint's blocks were pinned OUTSIDE
-    # cache_handle — DataFrame.unpersist cannot release checkpoint
-    # blocks, so curate_corpus_scoped's 'nothing leaks' contract was
-    # quietly false until a session-wide drain). persist registers in
-    # the handle like the other two frames, shares one materialization
-    # across consumers the same way, stays recomputable, and its plan
-    # is shallow anyway (dedup_corpus's internals are barrier-
-    # truncated), so the checkpoint's plan-size argument doesn't apply.
+    # replay per consumer. persist() rather than an eager
+    # localCheckpoint: it shares one materialization across consumers
+    # the same way, stays recomputable, and its plan is shallow anyway
+    # (dedup_corpus's internals are barrier-truncated), so the
+    # checkpoint's plan-size argument doesn't apply.
     keep_ids = (
         keep.filter(F.col(id_col) == F.col("keep_id"))
         .select(id_col)
         .persist()
     )
-    if cache_handle is not None:
-        cache_handle.append(keep_ids)
     survivors = scored.join(keep_ids, id_col)
     stages.append(("30_neardup_best_copy", survivors))
 
@@ -165,8 +149,6 @@ def _curation_stages(
     # persist so redact runs once per document, not once per consumer
     # (r19; same lifecycle as the pre-floor frame above)
     out = survivors.withColumn(text_col, redact(text_col)).persist()
-    if cache_handle is not None:
-        cache_handle.append(out)
     stages.append(("40_redacted", out))
 
     if token_budget is not None:
@@ -176,8 +158,6 @@ def _curation_stages(
         out = budget_select(out, "quality", "n_tokens", token_budget, id_col)
         if n_shards is not None:
             out = out.persist()
-            if cache_handle is not None:
-                cache_handle.append(out)
         stages.append(("50_budget", out))
     if n_shards is not None:
         out = deterministic_shuffle(out, id_col, n_shards, seed=seed)
@@ -196,7 +176,6 @@ def curate_corpus(
     token_budget: float | None = None,
     n_shards: int | None = None,
     seed: int = 0,
-    cache_handle: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Run the full curation pipeline; see module docstring for the
     stage chain and ordering rationale.
@@ -205,9 +184,9 @@ def curate_corpus(
     — one row per surviving document, redacted text, deterministic
     across reruns and input layouts. ``html_col`` switches the front
     door to HTML extraction; ``token_budget``/``n_shards`` enable the
-    optional tail stages. Pass ``cache_handle`` (or use
-    ``curate_corpus_scoped``) to reclaim the internal persisted frame
-    without nuking the whole session cache."""
+    optional tail stages. Wrap the call in ``cache.scoped_cache`` and
+    consume the result inside the block to release its pinned frames
+    without touching the rest of the session cache."""
     return _curation_stages(
         df,
         html_col=html_col,
@@ -218,33 +197,7 @@ def curate_corpus(
         token_budget=token_budget,
         n_shards=n_shards,
         seed=seed,
-        cache_handle=cache_handle,
     )[-1][1]
-
-
-@contextmanager
-def curate_corpus_scoped(df: DataFrame, **kwargs):
-    """``with curate_corpus_scoped(df, ...) as out:`` — consume ``out``
-    (collect/write) INSIDE the block; every internal pinned frame (the
-    persisted scoring/redact frames AND the survivor-id frame — ADVICE
-    r19 closed: all three ride the handle now, none is a checkpoint)
-    is unpersisted on exit, so nothing leaks into the session cache and
-    no other cache is touched. Using the lazy ``out`` after the block
-    still works but recomputes the scoring subtree."""
-    if "cache_handle" in kwargs:
-        # forwarding it verbatim would collide with the internal handle
-        # below (duplicate keyword); callers who want to own the
-        # lifecycle should call curate_corpus(cache_handle=...) directly
-        raise TypeError(
-            "curate_corpus_scoped manages cache_handle itself; use "
-            "curate_corpus(cache_handle=...) for a manual lifecycle"
-        )
-    handle: list[DataFrame] = []
-    try:
-        yield curate_corpus(df, cache_handle=handle, **kwargs)
-    finally:
-        for frame in handle:
-            frame.unpersist()
 
 
 def curation_profile(
@@ -266,10 +219,7 @@ def curation_profile(
     per-stage aggregate is a count/sum over the stage frame — the
     profile adds one bounded aggregation per stage on top of the
     pipeline's own cost, nothing corpus-scale."""
-    handle = kwargs.pop("cache_handle", None)
-    stages = _curation_stages(
-        df, text_col=text_col, id_col=id_col, cache_handle=handle, **kwargs
-    )
+    stages = _curation_stages(df, text_col=text_col, id_col=id_col, **kwargs)
     rows = []
     for name, frame in stages:
         if name == "60_shards":

@@ -1194,7 +1194,6 @@ def paragraph_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     sep: str = "\n\n",
-    cache_handle: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Paragraph-grain exact dedup across the corpus (the MassiveText /
     Gopher boilerplate-removal step — Rae et al. 2021 run dedup at
@@ -1239,14 +1238,13 @@ def paragraph_dedup(
     # MEMORY_AND_DISK — it spills rather than evicting execution
     # memory at scale. A digest-only frame cannot serve both consumers
     # (the reassembly aggregate needs the paragraph TEXT). Lifecycle:
-    # appended to ``cache_handle`` when given (curation threads its
-    # handle through); otherwise the deliberate session-bounded leak
-    # every shared-subtree persist in this module documents.
+    # wrap the call in ``cache.scoped_cache`` to release the frame when
+    # the result is consumed; a bare call leaves it pinned until the
+    # session drain (``cache.unpersist_all``), like every shared-subtree
+    # persist in this module.
     fp = parts.withColumn(
         "_pd_fp", F.md5(F.trim(F.lower(F.col("_pd_para"))))
     ).persist()
-    if cache_handle is not None:
-        cache_handle.append(fp)
     winners = fp.groupBy("_pd_fp").agg(
         F.min(F.struct(F.col(id_col).alias("wid"), F.col("_pd_pos").alias("wpos"))).alias("_pd_w")
     )

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from datapipeline_spike_spark.cache import materialize_barrier, lazy_barrier
+from datapipeline_spike_spark.cache import materialize_barrier
 from datapipeline_spike_spark.functions.vectors import (
     cosine,
     cosine_with_norms,
@@ -1757,10 +1757,10 @@ def matryoshka_recall(
     # branch from the checkpoint, but BUILDING the frame (EXPLAIN,
     # plan audits, registry wiring) stays free like every other
     # operator here. The materialized frame is only k x |queries| rows.
-    full = (
+    full = materialize_barrier(
         brute_force_topk(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
-        .select("query_id", "neighbor_id")
-        .transform(lazy_barrier)
+        .select("query_id", "neighbor_id"),
+        eager=False,
     )
     out: DataFrame | None = None
     for m in dims:

@@ -23,12 +23,6 @@ from datapipeline_spike_spark.plans.catalog_extensions import (
 )
 from datapipeline_spike_spark.plans.registry import load, register
 
-# Module-level cache handle for q_curation_stage_profile: the query
-# returns a LAZY DataFrame whose plan reads the persisted scoring
-# frame, so the frame must outlive the builder call; each invocation
-# frees the previous run's frame (steady-state: one cached funnel).
-_CURATION_CACHE: list[DataFrame] = []
-
 # --- shared SQL fragments -----------------------------------------------------
 
 _SQL_TOKS_OF = (
@@ -252,13 +246,12 @@ _SQL_CURATION = f"""
     the COMPOSITION, not just the stages in isolation. Tokens are
     recomputed from each stage's current text (the funnel downstream
     actually trains on). Scale: the profile adds one bounded aggregate
-    per stage on top of the pipeline's own guarded-LSH cost; the
-    scoring frame is persisted once into a module-level handle and the
-    PREVIOUS run's frame is unpersisted at the start of each run (the
-    returned DataFrame is lazy, so the frame must outlive this call —
-    a run-scoped local could never be freed; ADVICE r9 item 1), so
-    steady-state holds exactly one funnel cache and no clearCache
-    sledgehammer is needed.""",
+    per stage on top of the pipeline's own guarded-LSH cost. The
+    returned DataFrame is lazy and reads the funnel's persisted
+    frames, so they outlive this call: wrap the call and its
+    consumption in ``cache.scoped_cache`` to release them (as
+    tools/check_oracle does), or drain the session between jobs with
+    ``cache.unpersist_all`` (as bench.py does).""",
     tags=("curation", "pipeline", "dedup", "quality", "sampling"),
 )
 def q_curation_stage_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,25 +267,12 @@ def q_curation_stage_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("lang"),
         ).alias("text"),
     )
-    # free the PREVIOUS invocation's persisted scoring frame, then hand
-    # the module-level handle to this run (see doc: the result is lazy,
-    # so the cache must outlive this function). Defensive (r11): the
-    # previous frame may belong to a STOPPED SparkContext (bench.py now
-    # restarts sessions between extras chunks) — its blocks died with
-    # the context, so a failing unpersist is already-freed, not a leak.
-    for frame in _CURATION_CACHE:
-        try:
-            frame.unpersist()
-        except Exception:  # noqa: BLE001  (stopped-context handle)
-            pass
-    _CURATION_CACHE.clear()
     return curation_profile(
         pages,
         min_quality=_MIN_QUALITY,
         jaccard_threshold=0.8,
         token_budget=_TOKEN_BUDGET,
         n_shards=_N_SHARDS,
-        cache_handle=_CURATION_CACHE,
     )
 
 

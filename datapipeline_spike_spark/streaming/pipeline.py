@@ -18,7 +18,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datapipeline_spike_spark.cache import materialize_barrier
+from datapipeline_spike_spark.cache import materialize_barrier, scoped_cache
 from datapipeline_spike_spark.functions import features as feat
 
 WATERMARK = "2 minutes"  # ST2: 2x the 1-minute feature window (SURVEY §2.9)
@@ -290,7 +290,10 @@ def ingest_with_dedup(
 
     The verdict is localCheckpoint'ed once per batch, so the fan-out to
     six sinks re-executes neither the classification joins nor the
-    admitted projection."""
+    admitted projection. Every frame a batch pins (the verdict, the
+    admitted frame, ``incremental_dedup``'s barrier) is released when
+    the handler returns: each batch runs inside ``scoped_cache``, so a
+    long-running stream holds no pins between batches."""
     from pyspark.sql import Window
     from pyspark.sql.utils import AnalysisException
 
@@ -308,6 +311,10 @@ def ingest_with_dedup(
     )
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
+        with scoped_cache(batch_df.sparkSession):
+            admit(batch_df, epoch_id)
+
+    def admit(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
 
         def read_index_excluding(path: str) -> DataFrame | None:

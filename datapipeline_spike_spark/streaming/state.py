@@ -97,80 +97,3 @@ def track_processing_state(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# --- transformWithState form (Spark 4 arbitrary-state API) -------------------
-
-try:  # Spark >= 4.0 only; the applyInPandasWithState form above runs anywhere
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ProcessingTracker(StatefulProcessor):
-        """transformWithStateInPandas twin of :func:`track_processing_state`
-        — the CURRENT arbitrary-state API (SPARK-49564): named state
-        variables in the checkpointed store (ValueState here; List/Map
-        state and event-time timers are available for richer trackers),
-        same per-key O(1) payload and update-mode emission semantics.
-        Kept semantically identical to the GroupState form so either can
-        back the ST4 contract; the streaming test drives both against
-        the same batch ground truth. ENV GATE: the transformWithState
-        driver worker speaks protobuf to the JVM state server; in a
-        container without the protobuf package the worker cannot start
-        (the test skips with the plan-construction check only) — on a
-        stock cluster image it runs as-is."""
-
-        def __init__(self, value_col: str = "value", invalid_above: float = 100.0):
-            self._value_col = value_col
-            self._invalid_above = invalid_above
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counts = handle.getValueState(
-                "counts", "n_records long, n_invalid long, last_ts_us long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            got = self._counts.get() if self._counts.exists() else None
-            n, bad, last_us = got if got is not None else (0, 0, None)
-            for pdf in rows:
-                n += len(pdf)
-                bad += int((pdf[self._value_col] > self._invalid_above).sum())
-                if len(pdf):
-                    batch_us = int(pdf["ts"].max().value // 1000)
-                    last_us = batch_us if last_us is None else max(last_us, batch_us)
-            self._counts.update((n, bad, last_us))
-            label = "degraded" if n and bad * 10 > n else "processing"
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "n_records": [n],
-                    "n_invalid": [bad],
-                    "state": [label],
-                    "last_ts": [
-                        pd.Timestamp(last_us * 1000) if last_us is not None else pd.NaT
-                    ],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    def track_processing_state_tws(
-        records: DataFrame,
-        key_col: str = "machine",
-        value_col: str = "value",
-        invalid_above: float = 100.0,
-    ) -> DataFrame:
-        """ST4 via ``transformWithStateInPandas`` (Spark 4). Same output
-        schema and semantics as :func:`track_processing_state`."""
-        return records.groupBy(key_col).transformWithStateInPandas(
-            ProcessingTracker(value_col=value_col, invalid_above=invalid_above),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-
-except ImportError:  # pragma: no cover - older Spark
-    ProcessingTracker = None  # type: ignore[assignment]
-    track_processing_state_tws = None  # type: ignore[assignment]

@@ -1,10 +1,14 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this suite sits in, not an installed copy, and its tools/
+# (the oracle compare and the plan-audit allowlists) as plain modules
+ROOT = Path(__file__).resolve().parents[1]
+sys.path[:0] = [str(ROOT), str(ROOT / "tools")]
 
 from datapipeline_spike_spark.session import get_session
 

@@ -98,60 +98,40 @@ def test_curate_corpus_html_front_door_and_tail_stages(spark):
     assert key(again) == key(out)
 
 
-def test_curate_corpus_scoped_frees_exactly_its_cache(spark):
-    """r9 cache lifecycle: the scoped form unpersists the internal
-    scoring frame on exit WITHOUT touching other session caches."""
+def test_scoped_cache_frees_exactly_curate_corpus_pins(spark):
+    """Cache lifecycle: ``scoped_cache`` around a curate_corpus call
+    releases every frame the pipeline pinned (persisted stage frames
+    and dedup_corpus's checkpoint barriers) on exit WITHOUT touching
+    other session caches."""
     from pyspark.sql import functions as F
 
-    from datapipeline_spike_spark.operators.curation import (
-        curate_corpus_scoped,
+    from datapipeline_spike_spark.cache import (
+        _cached_plans,
+        _persistent_rdd_ids,
+        scoped_cache,
     )
 
-    from datapipeline_spike_spark.operators.curation import curate_corpus
+    def entries():
+        return sorted(p.toString() for p in _cached_plans(spark))
 
     unrelated = spark.range(10).withColumn("v", F.col("id") * 2).persist()
     unrelated.count()
+    rdds_before, entries_before = _persistent_rdd_ids(spark), entries()
 
-    # handle path: exactly the pipeline's persisted frames (the
-    # paragraph-fingerprint frame — r20 — the pre-floor scoring frame,
-    # the survivor-id frame — ADVICE r19 — and the redacted 40-frame)
-    # are registered, cached after the action, and freed by
-    # unpersisting the handle — no clearCache()
-    handle = []
-    out = curate_corpus(
-        _corpus(spark), min_quality=0.35, jaccard_threshold=0.5,
-        cache_handle=handle,
-    )
-    assert len(out.collect()) >= 3
-    assert len(handle) == 4
-    for f in handle:
-        lvl = f.storageLevel
-        assert lvl.useMemory or lvl.useDisk
-    for f in handle:
-        f.unpersist()
-    for f in handle:
-        lvl = f.storageLevel
-        assert not lvl.useMemory and not lvl.useDisk
+    with scoped_cache(spark):
+        out = curate_corpus(
+            _corpus(spark), min_quality=0.35, jaccard_threshold=0.5
+        ).collect()
+        assert len(out) >= 3
+        # the block really pinned frames of its own
+        assert _persistent_rdd_ids(spark) - rdds_before
+        assert len(entries()) > len(entries_before)
 
-    # scoped form does the same automatically
-    with curate_corpus_scoped(
-        _corpus(spark), min_quality=0.35, jaccard_threshold=0.5
-    ) as out2:
-        assert len(out2.collect()) >= 3
-
-    # the unrelated cache survived both (clearCache would have nuked it)
+    assert _persistent_rdd_ids(spark) == rdds_before
+    assert entries() == entries_before
+    # the unrelated cache survived (clearCache would have nuked it)
     assert unrelated.storageLevel.useMemory
     unrelated.unpersist()
-
-    # r10 (ADVICE r9 item 2): a caller-supplied cache_handle previously
-    # raised a confusing duplicate-keyword TypeError from the verbatim
-    # kwargs forward; now it is rejected explicitly, naming the manual
-    # alternative
-    import pytest as _pytest
-
-    with _pytest.raises(TypeError, match="curate_corpus\\(cache_handle"):
-        with curate_corpus_scoped(_corpus(spark), cache_handle=[]):
-            pass
 
 
 def test_curation_profile_funnel_is_monotone(spark):

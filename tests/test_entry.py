@@ -3,10 +3,6 @@ sf0.001, and the queries()/oracle_sql() key sets are consistent."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import __spark_entry__ as entrymod
 
 

@@ -277,9 +277,6 @@ def test_plan_audit_headline_queries_clean(spark):
     products, no nested-loop joins, no row-at-a-time Python UDFs, no
     surprise Python stages outside the documented allowlists
     (tools/plan_audit.py runs the same rules over the full registry)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     from plan_audit import BNLJ_OK, CARTESIAN_OK, PANDAS_NODES, PANDAS_OK
 
     import bench

@@ -609,7 +609,8 @@ def test_weighted_sample_equals_python_es_bottom_k(spark, rows, k):
 
     from datapipeline_spike_spark.operators.sampling import weighted_sample
 
-    uniq = sorted({(i, w) for i, w in rows})
+    # one weight per id: weighted_sample requires a unique key per row
+    uniq = sorted(dict(rows).items())
     df = spark.createDataFrame(
         [(i, float(w)) for i, w in uniq], "doc_id long, w double"
     )

@@ -7,26 +7,14 @@ and the recall-audit sanity floor for the registered IVF-PQ form."""
 
 from __future__ import annotations
 
-import importlib.util
-import sys
-
 import duckdb
 import pytest
+from check_oracle import compare
 from pyspark.sql import functions as F
 
 from datapipeline_spike_spark.plans import REGISTRY  # noqa: F401  (imports catalog_r12)
 from datapipeline_spike_spark.plans.catalog_r12 import R12_REGISTERED
 from datapipeline_spike_spark.plans.registry import TABLES
-
-
-def _compare_fn():
-    spec = importlib.util.spec_from_file_location(
-        "check_oracle", "/root/repo/tools/check_oracle.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules.setdefault("check_oracle", mod)
-    spec.loader.exec_module(mod)
-    return mod.compare
 
 
 @pytest.fixture(scope="module")
@@ -50,7 +38,7 @@ def test_registered_query_matches_oracle(spark, sf_dir, oracle_con, name):
     sdf = q.spark(spark, sf_dir).toPandas()
     assert q.oracle is not None  # all six ship full-value oracles
     odf = oracle_con.execute(q.oracle).df()
-    problems = _compare_fn()(name, sdf, odf)
+    problems = compare(name, sdf, odf)
     assert not problems, problems
 
 

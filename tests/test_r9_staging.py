@@ -12,25 +12,13 @@ sees it.
 
 from __future__ import annotations
 
-import importlib.util
-import sys
-
 import duckdb
 import pytest
+from check_oracle import compare
 
 from datapipeline_spike_spark.plans import REGISTRY  # noqa: F401  (imports catalog_r9)
 from datapipeline_spike_spark.plans.catalog_r9 import R9_REGISTERED
 from datapipeline_spike_spark.plans.registry import TABLES
-
-
-def _compare_fn():
-    spec = importlib.util.spec_from_file_location(
-        "check_oracle", "/root/repo/tools/check_oracle.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules.setdefault("check_oracle", mod)
-    spec.loader.exec_module(mod)
-    return mod.compare
 
 
 @pytest.fixture(scope="module")
@@ -56,5 +44,5 @@ def test_registered_query_matches_oracle(spark, sf_dir, oracle_con, name):
         assert len(sdf) >= 0  # rows-only contract, driver-style
         return
     odf = oracle_con.execute(q.oracle).df()
-    problems = _compare_fn()(name, sdf, odf)
+    problems = compare(name, sdf, odf)
     assert not problems, problems

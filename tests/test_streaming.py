@@ -495,72 +495,6 @@ def test_available_now_trigger_drains_and_stops(spark, events_dir):
     assert got == want
 
 
-def test_transform_with_state_matches_groupstate_form(spark, events_dir):
-    """ST4 on the CURRENT API: transformWithStateInPandas tracker
-    (named ValueState in the checkpointed store) produces the same
-    cumulative per-key truth as batch aggregation — the modern twin of
-    the applyInPandasWithState test above."""
-    from datapipeline_spike_spark.streaming.state import track_processing_state_tws
-
-    if track_processing_state_tws is None:
-        pytest.skip("transformWithState requires Spark >= 4.0")
-    # the transformWithState driver worker speaks protobuf to the state
-    # server; without the protobuf package the worker crashes on init
-    # (env-gated like the Kafka connector jar — the API usage itself is
-    # exercised up to plan construction below either way)
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        tracked = track_processing_state_tws(
-            spark.readStream.schema(
-                spark.read.parquet(events_dir).schema
-            ).parquet(events_dir),
-            key_col="machine",
-            invalid_above=100.0,
-        )
-        assert tracked.isStreaming  # logical plan builds; runtime needs protobuf
-        pytest.skip("google.protobuf absent: transformWithState worker cannot start")
-    import pandas as pd
-
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(events_dir)
-    )
-    tracked = track_processing_state_tws(stream, key_col="machine", invalid_above=100.0)
-    q = (
-        tracked.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("tws_stream")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql("SELECT * FROM tws_stream").toPandas()
-        final = got.groupby("key").last()
-        batch = (
-            spark.read.parquet(events_dir)
-            .groupBy("machine")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("value") > 100.0).cast("long")).alias("bad"),
-                F.max("ts").alias("last_ts"),
-            )
-            .toPandas()
-            .set_index("machine")
-        )
-        for m in batch.index:
-            assert final.loc[m, "n_records"] == batch.loc[m, "n"]
-            assert final.loc[m, "n_invalid"] == batch.loc[m, "bad"]
-            assert pd.Timestamp(final.loc[m, "last_ts"]) == pd.Timestamp(
-                batch.loc[m, "last_ts"]
-            )
-        assert set(final["state"]) <= {"processing", "degraded"}
-    finally:
-        q.stop()
-
-
 def test_streaming_ingest_dedup_admission(spark):
     """Continuous-crawl admission: micro-batches classify against the
     growing lake — exact/near dups of EARLIER batches are rejected with
@@ -686,6 +620,54 @@ def test_ingest_dedup_within_batch_dups_and_retry_idempotent(spark):
         assert rejected[12] == ("exact_dup", 1)  # copy inherits rep 11's fate
         assert {r["doc_id"] for r in spark.read.parquet(lake).collect()} == {1, 2}
     finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_ingest_dedup_releases_batch_pins(spark):
+    """A long-running ingest stream must not accumulate pinned frames:
+    every barrier a micro-batch pins (the verdict, the admitted frame,
+    incremental_dedup's index barrier) is released when the handler
+    returns. Persist mode is the one whose pins are CacheManager entries
+    as well as persistent RDDs, so both populations are checked."""
+    import random
+    import shutil
+
+    from datapipeline_spike_spark.cache import _cached_plans, _persistent_rdd_ids
+    from datapipeline_spike_spark.streaming.pipeline import ingest_with_dedup
+
+    conf = "spark.datapipeline.materialize"
+    prev = spark.conf.get(conf, None)
+    spark.conf.set(conf, "persist")
+    root = tempfile.mkdtemp(prefix="ingest_dedup_pins_")
+    lake, ok, rej = f"{root}/lake", f"{root}/admitted", f"{root}/rejected"
+    try:
+        handle = ingest_with_dedup(lake, ok, rej)
+        rdds_before = _persistent_rdd_ids(spark)
+        n_entries = len(_cached_plans(spark))
+        texts = {}
+        for epoch in range(4):
+            rng = random.Random(epoch)
+            rows = [
+                (epoch * 100 + i, " ".join(f"w{rng.randrange(5000)}" for _ in range(40)))
+                for i in range(20)
+            ]
+            # plus an exact copy of the previous batch's first doc, so
+            # every epoch after the first classifies against the index
+            if epoch:
+                rows.append((epoch * 100 + 99, texts[epoch - 1]))
+            texts[epoch] = rows[0][1]
+            handle(spark.createDataFrame(rows, "doc_id long, text string"), epoch)
+            assert _persistent_rdd_ids(spark) == rdds_before, epoch
+            assert len(_cached_plans(spark)) == n_entries, epoch
+        lake_ids = {r["doc_id"] for r in spark.read.parquet(lake).collect()}
+        assert len(lake_ids) == 80
+        rejected = {r["doc_id"] for r in spark.read.parquet(rej).collect()}
+        assert rejected == {199, 299, 399}
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
         shutil.rmtree(root, ignore_errors=True)
 
 

@@ -4,13 +4,8 @@ divergences the driver's hash is sensitive to."""
 
 from __future__ import annotations
 
-import sys
-
 import pyarrow as pa
-
-sys.path.insert(0, "/root/repo/tools")
-
-from preflight import _canon_arrow_type, _canon_spark_type, type_audit  # noqa: E402
+from preflight import _canon_arrow_type, _canon_spark_type, type_audit
 
 
 def test_canonical_type_classes():

@@ -22,8 +22,9 @@ from __future__ import annotations
 
 import hashlib
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def main() -> int:
@@ -32,15 +33,7 @@ def main() -> int:
     salt = sys.argv[3] if len(sys.argv) > 3 else "r18"
 
     import duckdb
-
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "check_oracle", "/root/repo/tools/check_oracle.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules.setdefault("check_oracle", mod)
-    spec.loader.exec_module(mod)
+    from check_oracle import compare
 
     from datapipeline_spike_spark.plans import DRIVER_SAMPLE, REGISTRY
     from datapipeline_spike_spark.plans.registry import TABLES
@@ -66,7 +59,7 @@ def main() -> int:
         try:
             sdf = q.spark(spark, sf_dir).toPandas()
             odf = con.execute(q.oracle).df()
-            problems = mod.compare(name, sdf, odf)
+            problems = compare(name, sdf, odf)
         except Exception as exc:  # noqa: BLE001 — report, keep sampling
             problems = [f"exception: {exc}"]
         if problems:

@@ -31,8 +31,9 @@ Exit status: number of violations.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from datapipeline_spike_spark.plans import REGISTRY  # noqa: E402
 from datapipeline_spike_spark.session import get_session  # noqa: E402

@@ -29,13 +29,14 @@ from __future__ import annotations
 
 import argparse
 import sys
+from pathlib import Path
 import time
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from datapipeline_spike_spark.plans.registry import TABLES  # noqa: E402
 from datapipeline_spike_spark.session import get_session  # noqa: E402

@@ -15,9 +15,10 @@ from __future__ import annotations
 import gc
 import json
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from datapipeline_spike_spark.cache import unpersist_all  # noqa: E402
 from datapipeline_spike_spark.plans import REGISTRY  # noqa: E402

@@ -12,8 +12,9 @@ Exit status: number of problems (0 = sound).
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from datapipeline_spike_spark.plans import rotation_preflight  # noqa: E402
 

@@ -15,8 +15,9 @@ to what registration will lift into the catalog."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from datapipeline_spike_spark.session import get_session  # noqa: E402
 
