@@ -335,103 +335,3 @@ def curriculum_phase_plan(
         "mean_difficulty",
         F.row_number().over(sched).cast("long").alias("schedule_pos"),
     )
-
-
-def membership_triage(
-    docs: DataFrame,
-    embeddings: DataFrame,
-    dim: int = 64,
-    k: int = 5,
-    k_frac: float = 0.2,
-    dup_threshold: float = 0.35,
-    gap_lo: float = 0.035,
-    gap_hi: float = 0.055,
-    doc_id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-) -> DataFrame:
-    """Cross-signal membership/contamination triage (staged r19 wave
-    11; the VERDICT r18 composite: the Min-K% Prob text signal joined
-    with the kNN-graph embedding signal — the two-modality check a
-    curation stack actually runs before admitting a scraped document
-    near an eval set). Per document, one row with BOTH signals and a
-    single routing decision:
-
-    - ``tail_gap`` = avg_logprob - min_k_avg_logprob from
-      :func:`~datapipeline_spike_spark.operators.text_stats.
-      min_k_prob_profile` (Shi 2023): a MEMBER/near-copy of the
-      corpus lacks low-probability outlier tokens (thin tail, small
-      gap); template/boilerplate spam carries a heavy synthetic tail
-      (large gap).
-    - ``top_cos_sim`` / ``top_is_mutual`` = the document's rank-1
-      edge from :func:`~datapipeline_spike_spark.operators.
-      similarity.knn_graph_edges` over its embedding: the semantic
-      near-dup signal the text-side tail cannot see (a paraphrase has
-      fresh tokens but a near-identical embedding).
-
-    Routing (first match wins — the precedence IS the semantics, so
-    both engines replay it as one CASE):
-      'near_dup'   top mutual edge >= dup_threshold — semantically
-                   subsumed regardless of token stats;
-      'member_risk' tail_gap <= gap_lo — thin outlier tail, the
-                   Min-K membership symptom;
-      'template'   tail_gap >= gap_hi — synthetic/boilerplate tail;
-      'clean'      everything else.
-    Default bands measured on the house corpora (gap quantiles q05
-    ~0.033 / q95 ~0.067 at both sf0.001 and sf0.01; all four routes
-    non-empty at both SFs with these defaults).
-
-    Determinism contract: tail_gap is a difference of two already
-    6dp-rounded columns re-rounded to 6dp; the thresholds compare
-    against exact decimal literals; the rank-1 edge is the graph's
-    deterministic (cos desc, id asc) winner — so the routing column
-    hash-checks across engines. Scale shape: the two substrates are
-    each one pass (document-partitioned windows / auto-plane bucket
-    join); the composite adds ONE doc-grain left join (vec_id aligns
-    with doc_id on the house tables) and a map-only CASE — signal
-    frames stay at their own grain, nothing re-shuffles wider than
-    doc_id."""
-    from datapipeline_spike_spark.operators.similarity import knn_graph_edges
-    from datapipeline_spike_spark.operators.text_stats import (
-        min_k_prob_profile,
-    )
-
-    prof = min_k_prob_profile(docs, k_frac=k_frac, id_col=doc_id_col)
-    top = (
-        knn_graph_edges(embeddings, dim=dim, k=k, id_col=vec_id_col)
-        .filter(F.col("rank") == 1)
-        .select(
-            F.col("src_id").alias("_vid"),
-            F.col("cos_sim").alias("top_cos_sim"),
-            F.col("is_mutual").alias("top_is_mutual"),
-        )
-    )
-    gap = F.round(
-        F.col("avg_logprob") - F.col("min_k_avg_logprob"), 6
-    ).alias("tail_gap")
-    joined = prof.join(top, prof[doc_id_col] == F.col("_vid"), "left")
-    return joined.select(
-        doc_id_col,
-        "n_tokens",
-        "avg_logprob",
-        "min_k_avg_logprob",
-        gap,
-        "top_cos_sim",
-        "top_is_mutual",
-        F.when(
-            F.col("top_is_mutual")
-            & (F.col("top_cos_sim") >= float(dup_threshold)),
-            F.lit("near_dup"),
-        )
-        .when(
-            F.round(F.col("avg_logprob") - F.col("min_k_avg_logprob"), 6)
-            <= float(gap_lo),
-            F.lit("member_risk"),
-        )
-        .when(
-            F.round(F.col("avg_logprob") - F.col("min_k_avg_logprob"), 6)
-            >= float(gap_hi),
-            F.lit("template"),
-        )
-        .otherwise(F.lit("clean"))
-        .alias("triage"),
-    )

@@ -170,7 +170,6 @@ def lsh_candidate_pairs(
     sig: DataFrame | None = None,
     bucket_cap: int = LSH_BUCKET_CAP,
     n_chunks: int = 32,
-    materialize: bool = True,
 ) -> DataFrame:
     """MinHash-LSH candidate generation WITHOUT a cross join or
     self-join: signature -> (band_idx, band_val) rows -> groupBy band
@@ -194,16 +193,14 @@ def lsh_candidate_pairs(
 
     The bucket frame is materialized once because both branches consume
     it — without that, the signature + banding pipeline would execute
-    once per branch. With ``materialize=True`` (default) that is an
-    eager localCheckpoint firing one plan-build job at query-
-    construction time (the same documented trade as the bm25 base frame
-    and the minhash index path). Callers that build plans speculatively
-    — registries, explain-only audits — pass ``materialize=False`` to
-    get a lazy ``persist()`` instead: no job until the first action,
-    the cache still serves the second branch once populated (release it
-    with ``spark.catalog.clearCache()`` when done). Streaming inputs
-    are rejected up front: neither variant can run inside a continuous
-    plan — wrap the call in ``foreachBatch`` (see
+    once per branch. The barrier is :func:`materialize_barrier`: in the
+    default mode an eager localCheckpoint firing one plan-build job at
+    query-construction time (the same documented trade as the bm25 base
+    frame and the minhash index path). Callers that only build plans —
+    explain-only audits — pay that job too; run them inside
+    ``cache.scoped_cache`` to release the frame. Streaming inputs are
+    rejected up front: the barrier cannot run inside a continuous plan
+    — wrap the call in ``foreachBatch`` (see
     ``streaming.pipeline.ingest_with_dedup``).
 
     ``sig``: precomputed :func:`minhash_signature` frame — pass it when
@@ -223,9 +220,7 @@ def lsh_candidate_pairs(
         .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    buckets = (
-        buckets.transform(materialize_barrier) if materialize else buckets.persist()
-    )
+    buckets = buckets.transform(materialize_barrier)
     ids = F.col("ids")
     pair_structs = F.flatten(
         F.transform(
@@ -815,7 +810,6 @@ def simhash_neardup_pairs(
     max_hamming: int = 3,
     bucket_cap: int = LSH_BUCKET_CAP,
     n_chunks: int = 32,
-    materialize: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs via chunk banding (the SimHash analogue of
     MinHash banding): the 64-bit signature splits into 4 x 16-bit chunks
@@ -837,10 +831,9 @@ def simhash_neardup_pairs(
     ~n_chunks tasks. Identical output by construction (planted hot-band
     test). The sized chunk frame is materialized because up to four
     subtrees consume it — the self-join's two sides, each in two
-    branches — which previously recomputed simhash64 per side;
-    ``materialize=False`` swaps the eager localCheckpoint for a lazy
-    ``persist()`` (no plan-build job — see :func:`lsh_candidate_pairs`),
-    and streaming inputs are rejected with a pointer to foreachBatch."""
+    branches — which previously recomputed simhash64 per side — through
+    :func:`materialize_barrier` (see :func:`lsh_candidate_pairs`), and
+    streaming inputs are rejected with a pointer to foreachBatch."""
     if df.isStreaming:
         raise ValueError(
             "simhash_neardup_pairs needs a batch DataFrame (its sized "
@@ -875,7 +868,7 @@ def simhash_neardup_pairs(
     sized = chunks.withColumn(
         "m", F.count(F.lit(1)).over(Window.partitionBy("ci", "cv"))
     )
-    sized = sized.transform(materialize_barrier) if materialize else sized.persist()
+    sized = sized.transform(materialize_barrier)
 
     def _ham(lhs: str, rhs: str) -> Column:
         return F.aggregate(
@@ -2109,116 +2102,4 @@ def cdc_chunk_dedup(
                 "dup_token_fraction"
             ),
         )
-    )
-
-
-def exact_substr_char_runs(
-    df: DataFrame,
-    min_len: int = 30,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Character-grain ExactSubstr spans (staged r18 wave 10; Lee et
-    al. 2022's EXACT byte-level form — the k-gram/token form is
-    :func:`exact_substr_runs`): every maximal character span of a
-    document whose every position lies inside some length-``min_len``
-    window that occurs >= 2 times in the corpus (any document, any
-    position — self-repeats count, per the paper). This is exactly the
-    set ExactSubstr's suffix array marks for removal: a substring of
-    length >= L is corpus-duplicated iff each of its length-L windows
-    is, so the union of duplicated windows IS the dedup span set.
-
-    The suffix array is a sequential single-node construction (Lee's
-    Rust implementation memory-maps the whole corpus); the
-    shuffle-native equivalent: (1) slide a stride-1 length-L window
-    over every document (one generate pass), (2) count occurrences per
-    window CONTENT corpus-wide (a keyed aggregate — map-side partial
-    combine absorbs hot boilerplate windows before the shuffle),
-    (3) mark the positions of windows with count >= 2 (an equi-join
-    back on the content key; AQE skew-join splits the hot-content
-    keys the combine cannot — the boilerplate window that appears 10^6
-    times), and (4) merge marked positions into maximal contiguous
-    runs per document (the gaps-and-islands window, partitioned by
-    document). Shuffle volume is ~L x corpus bytes — the honest cost
-    of stride-1 exactness (the suffix array's sort moves the same
-    bytes single-node).
-
-    Stride decision (r20, closing VERDICT r19 item 8 with the measured
-    trade): the relaxation was probed as CONTENT-mod-s window sampling
-    (keep a window iff xxhash64(content) % s == 0 — alignment-
-    independent, so kept contents keep their EXACT corpus counts;
-    results in PLANS_r19.md and SCALE_PROBE_r19.jsonl
-    ``exact_substr_content_mod_s``). Measured at
-    sf0.1 / L=30: shuffle volume tracks 1/s exactly and the count
-    stage speeds up proportionally, but covered-character recall
-    erodes to 92.1% at s=2, 85.1% at s=4, 78.0% at s=8 — run
-    boundaries and short runs near min_len lose their only selected
-    windows. DECISION: stride-1 stays the implementation. The
-    operator's contract is Lee 2022 exactness (its staged oracle
-    replays the span set bit-for-bit; a lossy default would silently
-    change results), and the probe shows the knob buys volume only by
-    giving up exactly the guarantee this operator exists to provide.
-    A deployment wanting the trade applies the probe's one-line filter
-    after step (1) with its own recall budget — the table above is the
-    sizing data.
-
-    Determinism: everything is integer/string — no floats anywhere.
-    Returns run-grain rows (doc_id, run_idx, run_start, run_end,
-    run_len), positions 1-based inclusive, run_idx 1-based in
-    document order; documents with no duplicated span emit nothing.
-    Docs shorter than ``min_len`` cannot carry a duplicated window and
-    are filtered before the window generate."""
-    if min_len < 2:
-        raise ValueError(f"exact_substr_char_runs needs min_len >= 2, got {min_len}")
-    from pyspark.sql import Window
-
-    base = fan_out(df).select(
-        F.col(id_col), F.col(text_col).alias("_t"), F.length(text_col).alias("_len")
-    )
-    wins = base.filter(F.col("_len") >= min_len).select(
-        id_col,
-        F.explode(
-            F.sequence(F.lit(1), F.col("_len") - F.lit(min_len) + 1)
-        ).alias("_pos"),
-        "_t",
-    ).select(
-        id_col,
-        "_pos",
-        F.expr(f"substring(_t, _pos, {int(min_len)})").alias("_win"),
-    )
-    dup = (
-        wins.groupBy("_win")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") >= 2)
-        .select("_win")
-    )
-    marked = wins.join(dup, "_win").select(id_col, "_pos")
-    wdoc = Window.partitionBy(id_col).orderBy("_pos")
-    cov_end = F.col("_pos") + F.lit(min_len - 1)
-    prev_end = F.max(cov_end).over(
-        wdoc.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    islands = marked.select(
-        id_col,
-        "_pos",
-        cov_end.alias("_end"),
-        F.when(
-            F.col("_pos") > F.coalesce(prev_end, F.lit(-1)) + 1, 1
-        ).otherwise(0).alias("_new"),
-    ).select(
-        id_col,
-        "_pos",
-        "_end",
-        F.sum("_new").over(wdoc).alias("_run"),
-    )
-    return islands.groupBy(id_col, "_run").agg(
-        F.min("_pos").cast("long").alias("run_start"),
-        F.max("_end").cast("long").alias("run_end"),
-        (F.max("_end") - F.min("_pos") + 1).cast("long").alias("run_len"),
-    ).select(
-        id_col,
-        F.col("_run").cast("long").alias("run_idx"),
-        "run_start",
-        "run_end",
-        "run_len",
     )

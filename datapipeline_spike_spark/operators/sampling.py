@@ -586,171 +586,3 @@ def doremi_domain_weights(
         F.col("x.r._loss").alias("mean_loss"),
         F.col("x.w").alias("weight"),
     )
-
-
-def epoch_aware_domain_weights(
-    df: DataFrame,
-    domain_col: str,
-    loss_col: str,
-    tokens_col: str,
-    budget_tokens: float,
-    eta: float = 0.1,
-    iters: int = 8,
-    decay: float = 0.5,
-) -> DataFrame:
-    """Data-constrained DoReMi loop (staged r18 wave 10): the
-    multiplicative-weights domain reweighting of
-    :func:`doremi_domain_weights` (Xie et al. 2023) made ITERATIVE in
-    the quantity the static form holds fixed — each round the
-    per-domain loss signal responds to the CURRENT allocation through
-    the repeated-epoch value decay of Muennighoff et al. 2023
-    ("Scaling Data-Constrained Language Models": tokens re-read past
-    the first epoch contribute exponentially less). Per round t:
-
-        epochs_d  = w_d * budget_tokens / tokens_d          (allocation)
-        eff_d     = loss_d * decay^max(epochs_d - 1, 0)     (decayed signal)
-        w_d      <- w_d * exp(eta * (eff_d - max(eff)))     (shifted MW)
-        renormalize, re-pin to 6dp
-
-    The fixpoint self-limits: a hard (high-loss) but TINY domain gains
-    weight only until its allocation implies multi-epoch repetition,
-    the decay crushes its effective excess loss, and the mixture
-    rebalances — the over-epoch failure mode the static weights
-    cannot see. With ``decay=1`` the decay term is identically 1 and
-    the loop IS doremi_domain_weights' update sequence (the staged
-    equality test pins this reduction).
-
-    Engine-parity design (the doremi contract): per-domain mean
-    losses 6dp-quantized first; epochs and effective losses re-pinned
-    to 6dp each round BEFORE entering exp (quantize-then-derive); the
-    update uses the max-shifted exponent (<= 0, no overflow); every
-    round renormalizes and re-quantizes the weight vector to 6dp. The
-    iteration runs on ONE assembled row of domain-sorted arrays via
-    per-step column projections — no joins, no driver collect,
-    |domains|-bounded HOF work. Returns one row per domain: (domain,
-    n_docs, tokens, mean_loss, epochs, eff_loss, weight) where
-    epochs/eff_loss are the FINAL allocation's values (what the
-    shipped plan implies)."""
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1, got {iters}")
-    if not 0.0 < decay <= 1.0:
-        raise ValueError(f"decay must be in (0, 1], got {decay}")
-    if budget_tokens <= 0:
-        raise ValueError(f"budget_tokens must be > 0, got {budget_tokens}")
-    per = df.groupBy(domain_col).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.round(F.avg(F.col(loss_col).cast("double")), 6).alias("_loss"),
-        F.sum(F.col(tokens_col).cast("double")).alias("_tok"),
-    )
-    one = per.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col(domain_col).alias("d"), "_n", "_loss", "_tok")
-            )
-        ).alias("_rows")
-    ).select(
-        "_rows",
-        F.transform("_rows", lambda r: r["_loss"]).alias("_l"),
-        F.transform("_rows", lambda r: r["_tok"]).alias("_tk"),
-        F.transform(
-            "_rows", lambda r: F.round(F.lit(1.0) / F.size("_rows"), 6)
-        ).alias("a0"),
-    )
-    b = float(budget_tokens)
-    cur = "a0"
-    for t in range(iters):
-        one = one.select(
-            "*",
-            F.zip_with(
-                cur,
-                "_tk",
-                lambda w, tk: F.round(w * F.lit(b) / tk, 6),
-            ).alias(f"_e{t}"),
-        )
-        one = one.select(
-            "*",
-            F.zip_with(
-                "_l",
-                f"_e{t}",
-                lambda l, e: F.round(
-                    l
-                    * F.pow(
-                        F.lit(float(decay)),
-                        F.greatest(e - F.lit(1.0), F.lit(0.0)),
-                    ),
-                    6,
-                ),
-            ).alias(f"_f{t}"),
-        )
-        one = one.select("*", F.array_max(f"_f{t}").alias(f"_fm{t}"))
-        one = one.select(
-            "*",
-            F.zip_with(
-                cur,
-                f"_f{t}",
-                lambda a, f: a * F.exp(eta * (f - F.col(f"_fm{t}"))),
-            ).alias(f"_u{t}"),
-        )
-        one = one.select(
-            "*",
-            F.aggregate(
-                f"_u{t}", F.lit(0.0), lambda acc, x: acc + x
-            ).alias(f"_s{t}"),
-        )
-        one = one.select(
-            "*",
-            F.transform(
-                f"_u{t}", lambda x: F.round(x / F.col(f"_s{t}"), 6)
-            ).alias(f"a{t + 1}"),
-        )
-        cur = f"a{t + 1}"
-    # final allocation implied by the shipped weights
-    one = one.select(
-        "*",
-        F.zip_with(
-            cur, "_tk", lambda w, tk: F.round(w * F.lit(b) / tk, 6)
-        ).alias("_efin"),
-    )
-    one = one.select(
-        "*",
-        F.zip_with(
-            "_l",
-            "_efin",
-            lambda l, e: F.round(
-                l
-                * F.pow(
-                    F.lit(float(decay)),
-                    F.greatest(e - F.lit(1.0), F.lit(0.0)),
-                ),
-                6,
-            ),
-        ).alias("_ffin"),
-    )
-    out = one.select(
-        F.explode(
-            F.zip_with(
-                "_rows",
-                F.zip_with(
-                    cur,
-                    F.zip_with(
-                        "_efin",
-                        "_ffin",
-                        lambda e, f: F.struct(e.alias("e"), f.alias("f")),
-                    ),
-                    lambda w, ef: F.struct(
-                        w.alias("w"), ef["e"].alias("e"), ef["f"].alias("f")
-                    ),
-                ),
-                lambda r, x: F.struct(r.alias("r"), x.alias("x")),
-            )
-        ).alias("y")
-    )
-    return out.select(
-        F.col("y.r.d").alias(domain_col),
-        F.col("y.r._n").cast("long").alias("n_docs"),
-        F.col("y.r._tok").cast("long").alias("tokens"),
-        F.col("y.r._loss").alias("mean_loss"),
-        F.col("y.x.e").alias("epochs"),
-        F.col("y.x.f").alias("eff_loss"),
-        F.col("y.x.w").alias("weight"),
-    )

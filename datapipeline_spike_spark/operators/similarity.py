@@ -274,6 +274,13 @@ def lsh_bucket_assign_auto(
     )
 
 
+def _check_topk_params(op: str, k: int, n_probe: int) -> None:
+    if k < 1:
+        raise ValueError(f"{op} needs k >= 1, got {k}")
+    if n_probe < 1:
+        raise ValueError(f"{op} needs n_probe >= 1, got {n_probe}")
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -301,7 +308,11 @@ def ivf_topk(
 
     ``centroids``: optional trained quantizer (cent_id, cvec) — e.g.
     :func:`kmeans_quantizer` output — replacing the lowest-id bootstrap.
-    Same bounded collect (k rows) and literal inlining either way."""
+    Same bounded collect (k rows) and literal inlining either way.
+
+    Raises ValueError for ``k < 1`` or ``n_probe < 1`` (either would
+    return an empty frame)."""
+    _check_topk_params("ivf_topk", k, n_probe)
     if centroids is not None:
         cents = sorted(
             ((r["cent_id"], r["cvec"]) for r in centroids.collect()),
@@ -1599,9 +1610,12 @@ def ivfpq_topk(
     residual subvectors — corpus-side work is one scan of the codes,
     pruned to probed lists, never |corpus| x |queries| raw-vector math.
 
-    Returns (query_id, neighbor_id, adc_fp, rank)."""
+    Returns (query_id, neighbor_id, adc_fp, rank). Raises ValueError for
+    ``k < 1``, ``n_probe < 1`` or a ``dim`` that ``m`` does not divide."""
+    _check_topk_params("ivfpq_topk", k, n_probe)
+    if m < 1 or dim % m != 0:
+        raise ValueError(f"ivfpq_topk needs dim divisible by m, got dim={dim}, m={m}")
     width = dim // m
-    assert width * m == dim, "dim must divide evenly into m subspaces"
     cents = sorted(
         corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
         .filter(F.col(id_col) < n_centroids)
@@ -1963,275 +1977,5 @@ def knn_graph_edges(
             "cos_sim",
             F.col("rank").cast("int").alias("rank"),
             F.coalesce("_rev", F.lit(False)).alias("is_mutual"),
-        )
-    )
-
-
-def nn_descent_refine(
-    corpus: DataFrame,
-    dim: int,
-    k: int = 5,
-    rounds: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    target_bucket: int = 64,
-    probe_seed_offset: int = 100,
-) -> DataFrame:
-    """NN-Descent refinement of the corpus kNN graph (staged r18 wave
-    10; Dong et al. 2011 "Efficient K-Nearest Neighbor Graph
-    Construction for Generic Similarity Measures"): start from a
-    MULTI-PROBE LSH seed graph and iteratively improve it with the
-    NN-Descent local-join step — "a neighbor of a neighbor is likely a
-    neighbor" — until the per-vector top-k stabilizes. Same output
-    contract as :func:`knn_graph_edges` (src_id, dst_id, cos_sim,
-    rank, is_mutual), strictly-no-worse neighbors: every round's
-    candidate set CONTAINS the previous edge set, so each vector's
-    kth-best cosine is monotone non-decreasing in ``rounds``.
-
-    Seeding: the single-bucketing seed knn_graph_edges uses cannot
-    ever recover a pair the hash split — with one strict LSH
-    partitioning the graph is a disjoint union per bucket and
-    neighbor-of-neighbor steps NEVER cross buckets. The seed here is
-    therefore the union of TWO independent sign-LSH bucketings (the
-    house plane family at seeds 1..16 and a second family at
-    ``probe_seed_offset``+1..: splitmix planes, same auto-derived
-    plane count) — a pair split by one bucketing is found by the other
-    with probability 1 - (miss)^2, and each NN-Descent round then
-    propagates recovered edges transitively (the multi-probe + descent
-    composition the paper evaluates).
-
-    Per round: (1) candidates = all ordered pairs of vectors sharing a
-    common neighbor in the UNDIRECTED current graph (the paper's
-    local join: for each vertex x, every pair of B(x) = in- U
-    out-neighbors); (2) score new candidates by 6dp cosine; (3) merge
-    with current edges and keep each vector's top-k by (cosine desc,
-    id asc) — the house ANN ranking contract, so ties replay on any
-    engine.
-
-    Scale shape: every step is a keyed equi-join or partitioned
-    window — the seed is two bucket equi-joins (expected bucket
-    ~``target_bucket`` rows at any corpus size, auto-plane), the local
-    join shuffles the edge frame (n*k rows) on the shared-neighbor
-    key with candidate volume bounded by sum_x deg(x)^2 <= n*(2k)^2,
-    and vectors join back by id for scoring. Norms are precomputed at
-    the ROW grain (the r10 3x lesson); the per-round edge frame is
-    localCheckpoint-barriered (iterative lineage truncation, the r7
-    rule); the coded vector frame is persist()ed — one scan feeds the
-    seed joins and every round's scoring join. The 1-row corpus-count
-    cross rides the BNLJ_OK totals precedent. No cross joins, no
-    Python, no unbounded collects."""
-    if rounds < 0:
-        raise ValueError(f"nn_descent_refine needs rounds >= 0, got {rounds}")
-    vcast = F.col(vec_col).cast("array<double>")
-    base = fan_out(corpus).select(
-        F.col(id_col).alias("_id"),
-        vcast.alias("_v"),
-        l2_norm(vcast).alias("_n"),
-    )
-
-    def sig(seed_offset: int) -> Column:
-        bucket = F.lit(0)
-        for p in range(MAX_AUTO_PLANES):
-            plane = _lit_double_array(_plane(dim, seed_offset + p + 1))
-            bucket = bucket + (dot(F.col("_v"), plane) >= 0).cast("int") * F.lit(
-                1 << p
-            )
-        return bucket
-
-    totals = corpus.agg(F.count(F.lit(1)).alias("_n_corpus"))
-    np_col = F.least(
-        F.lit(MAX_AUTO_PLANES),
-        F.greatest(
-            F.lit(4),
-            F.ceil(
-                F.log2(F.col("_n_corpus") / F.lit(float(target_bucket)))
-            ).cast("int"),
-        ),
-    )
-    mask = F.pow(F.lit(2.0), np_col).cast("int") - F.lit(1)
-    coded = (
-        base.crossJoin(F.broadcast(totals))
-        .select(
-            "_id",
-            "_v",
-            "_n",
-            sig(0).bitwiseAND(mask).alias("_ba"),
-            sig(probe_seed_offset).bitwiseAND(mask).alias("_bb"),
-        )
-        .persist()
-    )
-
-    def bucket_pairs(bcol: str) -> DataFrame:
-        a = coded.select(
-            F.col("_id").alias("src_id"), F.col("_v").alias("_av"),
-            F.col("_n").alias("_an"), F.col(bcol).alias("_bk"),
-        )
-        b = coded.select(
-            F.col("_id").alias("dst_id"), F.col("_v").alias("_bv"),
-            F.col("_n").alias("_bn"), F.col(bcol).alias("_bk"),
-        )
-        return (
-            a.join(b, "_bk")
-            .filter(F.col("src_id") != F.col("dst_id"))
-            .select(
-                "src_id",
-                "dst_id",
-                F.round(
-                    cosine_with_norms(
-                        F.col("_av"), F.col("_bv"), F.col("_an"), F.col("_bn")
-                    ),
-                    6,
-                ).alias("cos_sim"),
-            )
-        )
-
-    w = Window.partitionBy("src_id").orderBy(
-        F.col("cos_sim").desc(), F.col("dst_id")
-    )
-
-    def topk(scored: DataFrame) -> DataFrame:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-
-    # seed: union of the two bucketings' candidates (cosine is
-    # deterministic per pair, so max() over the <=2 copies is a dedup)
-    seed = (
-        bucket_pairs("_ba")
-        .unionByName(bucket_pairs("_bb"))
-        .groupBy("src_id", "dst_id")
-        .agg(F.max("cos_sim").alias("cos_sim"))
-    )
-    edges = topk(seed).select("src_id", "dst_id", "cos_sim")
-
-    va = coded.select(
-        F.col("_id").alias("src_id"), F.col("_v").alias("_av"),
-        F.col("_n").alias("_an"),
-    )
-    vb = coded.select(
-        F.col("_id").alias("dst_id"), F.col("_v").alias("_bv"),
-        F.col("_n").alias("_bn"),
-    )
-    for _ in range(rounds):
-        edges = edges.transform(materialize_barrier)
-        und = edges.select(
-            F.col("src_id").alias("_node"), F.col("dst_id").alias("_nb")
-        ).unionByName(
-            edges.select(
-                F.col("dst_id").alias("_node"), F.col("src_id").alias("_nb")
-            )
-        )
-        cand = (
-            und.alias("p")
-            .join(und.alias("q"), F.col("p._node") == F.col("q._node"))
-            .select(
-                F.col("p._nb").alias("src_id"), F.col("q._nb").alias("dst_id")
-            )
-            .filter(F.col("src_id") != F.col("dst_id"))
-            .distinct()
-        )
-        scored = (
-            cand.join(va, "src_id")
-            .join(vb, "dst_id")
-            .select(
-                "src_id",
-                "dst_id",
-                F.round(
-                    cosine_with_norms(
-                        F.col("_av"), F.col("_bv"), F.col("_an"), F.col("_bn")
-                    ),
-                    6,
-                ).alias("cos_sim"),
-            )
-        )
-        merged = (
-            edges.unionByName(scored)
-            .groupBy("src_id", "dst_id")
-            .agg(F.max("cos_sim").alias("cos_sim"))
-        )
-        edges = topk(merged).select("src_id", "dst_id", "cos_sim")
-
-    final = topk(
-        edges.groupBy("src_id", "dst_id").agg(F.max("cos_sim").alias("cos_sim"))
-    ).persist()
-    rev = final.select(
-        F.col("dst_id").alias("src_id"),
-        F.col("src_id").alias("dst_id"),
-        F.lit(True).alias("_rev"),
-    )
-    return final.join(rev, ["src_id", "dst_id"], "left").select(
-        "src_id",
-        "dst_id",
-        "cos_sim",
-        F.col("rank").cast("int").alias("rank"),
-        F.coalesce("_rev", F.lit(False)).alias("is_mutual"),
-    )
-
-
-def knn_prune_assignment(
-    corpus: DataFrame,
-    dim: int,
-    k: int = 5,
-    threshold: float = 0.35,
-    mutual_only: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    target_bucket: int = 64,
-) -> DataFrame:
-    """SemDeDup-style pruning driven by the corpus kNN graph (staged
-    r19 wave 11; Abbas et al. 2023 SemDeDup composed over Dong et al.
-    2011's kNN-graph substrate — the VERDICT r18 composition: the
-    graph's ``is_mutual`` edges ARE the cluster-keep signal): for
-    every corpus vector, whether it survives semantic pruning against
-    its k-nearest-neighborhood, and if not, which neighbor subsumed
-    it. Returns (id, dup_of, best_dup_sim, kept) for EVERY corpus
-    vector — ``dup_of`` is the lowest qualifying lower-id neighbor
-    (NULL when kept), ``best_dup_sim`` the highest qualifying cosine.
-
-    Where :func:`semdedup` quantizes with k-means and compares ALL
-    in-cluster pairs ((n/k)^2 * k work, cluster count as the scale
-    lever), this variant prunes on the kNN GRAPH: a vector is a
-    semantic duplicate when a MUTUAL graph edge (both directions in
-    each other's top-k — the hubness-robust edge set) to a LOWER-id
-    neighbor reaches ``threshold`` cosine. The id-ordered rule is the
-    same deterministic EXISTS-lower-similar-id relational predicate
-    the registered semdedup uses (order-independent, SQL-replayable;
-    reruns produce the identical keep set), and mutuality is what
-    keeps a hub vector from mass-pruning its spokes: a spoke whose
-    top-k reaches the hub prunes only if the hub reciprocates —
-    one-directional hub spray keeps its spokes (``mutual_only=False``
-    degrades to plain graph-edge pruning for A/B-ing that choice).
-
-    Scale shape: rides :func:`knn_graph_edges` end-to-end (auto-plane
-    LSH bucket join, ~n * target_bucket candidate work, edge frame
-    persisted once); the prune itself is ONE keyed aggregate over the
-    n*k edge rows + ONE vector-grain left join back to the corpus —
-    nothing here grows faster than the graph that already exists.
-    Default threshold 0.35 matches the registered semdedup grain and
-    is measured non-degenerate on the house corpora (35/500 pruned at
-    sf0.001, 44/500 at sf0.01, mutual-only)."""
-    edges = knn_graph_edges(
-        corpus, dim=dim, k=k, id_col=id_col, vec_col=vec_col,
-        target_bucket=target_bucket,
-    )
-    qual = edges.filter(
-        (F.col("cos_sim") >= float(threshold))
-        & (F.col("dst_id") < F.col("src_id"))
-    )
-    if mutual_only:
-        qual = qual.filter(F.col("is_mutual"))
-    dup = qual.groupBy("src_id").agg(
-        F.min("dst_id").alias("dup_of"),
-        F.max("cos_sim").alias("best_dup_sim"),
-    )
-    return (
-        corpus.select(F.col(id_col))
-        .join(dup, F.col(id_col) == F.col("src_id"), "left")
-        .select(
-            id_col,
-            F.col("dup_of").cast("bigint").alias("dup_of"),
-            F.col("best_dup_sim").alias("best_dup_sim"),
-            F.col("dup_of").isNull().alias("kept"),
         )
     )

@@ -19,23 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipeline_spike_spark.plans.registry import QueryFn, load, register
-
-R11_REGISTERED: list[str] = []
-
-
-def register_r11(
-    name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()
-):
-    """register() + record the name for the rotation head and the
-    repointed differential staging test."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        out = register(name, oracle, doc=doc, tags=tags)(fn)
-        R11_REGISTERED.append(name)
-        return out
-
-    return deco
+from datapipeline_spike_spark.plans.registry import load, register
 
 
 # the engine's tokenizer (functions/text.tokens) in DuckDB terms:
@@ -55,7 +39,7 @@ _SQL_U01_DOC = (
 # --- Zipf rank-frequency profile ---------------------------------------------
 
 
-@register_r11(
+@register(
     "zipf_profile",
     oracle=f"""
     WITH toks AS (
@@ -104,7 +88,7 @@ def q_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- leave-one-out n-gram novelty --------------------------------------------
 
 
-@register_r11(
+@register(
     "ngram_novelty_profile",
     oracle=f"""
     WITH toks AS (SELECT doc_id, {_SQL_TOKS} AS t FROM documents),
@@ -147,7 +131,7 @@ def q_ngram_novelty_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- interpolated Kneser-Ney bigram scoring ----------------------------------
 
 
-@register_r11(
+@register(
     "kneser_ney_bigram_score",
     oracle=f"""
     WITH toks AS (
@@ -255,7 +239,7 @@ _SQL_AGREEMENT = f"""
     """
 
 
-@register_r11(
+@register(
     "verdict_agreement_matrix",
     oracle=_SQL_AGREEMENT,
     doc="operators/text_stats.verdict_agreement_matrix staged r10, "
@@ -289,7 +273,7 @@ def q_verdict_agreement_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SPAN_K = 6
 
 
-@register_r11(
+@register(
     "dedup_span_removal",
     oracle=f"""
     WITH pages AS (
@@ -365,7 +349,7 @@ def q_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- temperature-based mixture planning --------------------------------------
 
 
-@register_r11(
+@register(
     "temperature_mixture_plan",
     oracle=f"""
     WITH d AS (

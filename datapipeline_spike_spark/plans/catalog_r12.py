@@ -26,23 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datapipeline_spike_spark.plans.registry import QueryFn, load, register
-
-R12_REGISTERED: list[str] = []
-
-
-def register_r12(
-    name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()
-):
-    """register() + record the name for the rotation head and the
-    registration gate test (tests/test_r12_registration.py)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        out = register(name, oracle, doc=doc, tags=tags)(fn)
-        R12_REGISTERED.append(name)
-        return out
-
-    return deco
+from datapipeline_spike_spark.plans.registry import load, register
 
 
 # the engine's tokenizer (functions/text.tokens) in DuckDB terms:
@@ -62,7 +46,7 @@ _SQL_U01_DOC = (
 # --- classifier reliability / calibration bins ---------------------------------
 
 
-@register_r12(
+@register(
     "reliability_calibration_bins",
     oracle=f"""
     WITH v AS (
@@ -112,7 +96,7 @@ def q_reliability_calibration_bins(
 # --- unigram-distribution drift between snapshots ------------------------------
 
 
-@register_r12(
+@register(
     "token_distribution_drift",
     oracle=f"""
     WITH toks AS (
@@ -181,7 +165,7 @@ def q_token_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- ROUGE-N clipped n-gram overlap ---------------------------------------------
 
 
-@register_r12(
+@register(
     "rouge_ngram_eval",
     oracle=f"""
     WITH pairs AS (
@@ -266,7 +250,7 @@ def q_rouge_ngram_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- embedding centroid drift between snapshots ---------------------------------
 
 
-@register_r12(
+@register(
     "embedding_centroid_drift",
     oracle="""
     WITH e AS (
@@ -396,7 +380,7 @@ def _sql_hubness() -> str:
     """
 
 
-@register_r12(
+@register(
     "hubness_profile",
     oracle=_sql_hubness(),
     doc="operators/similarity.hubness_profile staged r11, registered "
@@ -542,7 +526,7 @@ def _sql_ivfpq_recall(k: int = _IVFPQ_K) -> str:
     """
 
 
-@register_r12(
+@register(
     "ivfpq_recall_at_k",
     oracle=_sql_ivfpq_recall(),
     doc="operators/similarity.ivfpq_topk staged r11, registered r12 in "

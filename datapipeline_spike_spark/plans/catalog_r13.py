@@ -30,24 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipeline_spike_spark.plans.registry import QueryFn, load, register
+from datapipeline_spike_spark.plans.registry import load, register
 from datapipeline_spike_spark.scale import fan_out
-
-R13_REGISTERED: list[str] = []
-
-
-def register_r13(
-    name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()
-):
-    """register() + record the name for the rotation head and the
-    registration gate test (tests/test_r13_registration.py)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        out = register(name, oracle, doc=doc, tags=tags)(fn)
-        R13_REGISTERED.append(name)
-        return out
-
-    return deco
 
 
 # the engine's tokenizer (functions/text.tokens) in DuckDB terms:
@@ -67,7 +51,7 @@ _SQL_U01_DOC = (
 # --- synthetic-text watermark detection ----------------------------------------
 
 
-@register_r13(
+@register(
     "watermark_greenlist_score",
     oracle=f"""
     WITH t AS (SELECT doc_id, {_SQL_TOKS.format(c="text")} AS t FROM documents),
@@ -118,7 +102,7 @@ def q_watermark_greenlist_score(
 # --- per-source quantile (rank) normalization ----------------------------------
 
 
-@register_r13(
+@register(
     "quality_rank_normalize",
     oracle=f"""
     WITH v AS (
@@ -175,7 +159,7 @@ _SQL_PAGES_QUOTE = """
 """
 
 
-@register_r13(
+@register(
     "ngram_containment_pairs",
     oracle=f"""
     WITH {_SQL_PAGES_QUOTE},
@@ -288,7 +272,7 @@ def _sql_dhash_words() -> str:
     )"""
 
 
-@register_r13(
+@register(
     "dhash_neardup_pairs",
     oracle=f"""
     WITH {_sql_dhash_words()},
@@ -343,7 +327,7 @@ def q_dhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- two-phase-cumsum sequence packing -----------------------------------------
 
 
-@register_r13(
+@register(
     "sequence_packing_plan",
     oracle=f"""
     WITH d AS (
@@ -432,7 +416,7 @@ def _sql_doremi(eta: float = 0.1, iters: int = 8) -> str:
     """
 
 
-@register_r13(
+@register(
     "doremi_domain_weights",
     oracle=_sql_doremi(),
     doc="""operators/sampling.doremi_domain_weights (staged r12,

@@ -4,9 +4,8 @@ registration section).
 
 These eight entries were staged in round 14 and burned down against
 the DuckDB oracle locally via ``tests/test_r14_staging.py`` (full
-differential comparison at sf0.001 AND sf0.01 via
-tools/staged_preflight.py: row count + schema + order-insensitive
-exact values, plus planted-property checks and — for the audio path —
+differential comparison at sf0.001 AND sf0.01: row count + schema +
+order-insensitive exact values, plus planted-property checks and — for the audio path —
 a 120-mutant fuzz contract). Round 15 performs the documented
 mechanical move: the oracle SQL below is the staging tests' SQL
 (aliases identical on both sides), the module is imported by
@@ -43,24 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipeline_spike_spark.plans.registry import QueryFn, load, register
+from datapipeline_spike_spark.plans.registry import load, register
 from datapipeline_spike_spark.scale import fan_out
-
-R15_REGISTERED: list[str] = []
-
-
-def register_r15(
-    name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()
-):
-    """register() + record the name for the rotation head and the
-    registration gate test (tests/test_r15_registration.py)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        out = register(name, oracle, doc=doc, tags=tags)(fn)
-        R15_REGISTERED.append(name)
-        return out
-
-    return deco
 
 
 # the engine's tokenizer (functions/text.tokens) in DuckDB terms:
@@ -106,7 +89,7 @@ def _quote_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- exact shared-substring runs (Lee 2022 ExactSubstr, relationalized) --------
 
 
-@register_r15(
+@register(
     "exact_substr_runs",
     oracle=f"""
     WITH {_SQL_PAGES_QUOTE},
@@ -171,7 +154,7 @@ def q_exact_substr_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- content-defined-chunking dedup profile ------------------------------------
 
 
-@register_r15(
+@register(
     "cdc_chunk_dedup",
     oracle=f"""
     WITH t AS (SELECT doc_id, {_SQL_TOKS.format(c="text")} AS toks
@@ -259,7 +242,7 @@ def _lined_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_r15(
+@register(
     "boilerplate_line_removal",
     oracle=f"""
     WITH {_SQL_LINED},
@@ -430,7 +413,7 @@ def _url_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", url.alias("url"))
 
 
-@register_r15(
+@register(
     "url_canonical_dedup",
     oracle=f"""
     WITH {_SQL_URLS},
@@ -504,7 +487,7 @@ def _sql_audio_words() -> str:
     )"""
 
 
-@register_r15(
+@register(
     "audio_fingerprint_neardup",
     oracle=f"""
     WITH {_sql_audio_words()},
@@ -650,7 +633,7 @@ def _sql_bt(iters: int = 20) -> str:
     """
 
 
-@register_r15(
+@register(
     "bradley_terry_strengths",
     oracle=_sql_bt(),
     doc="""operators/preference.bradley_terry_strengths (staged r14,
@@ -692,7 +675,7 @@ def q_bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- out-of-vocabulary rate profile --------------------------------------------
 
 
-@register_r15(
+@register(
     "oov_rate_profile",
     oracle=f"""
     WITH tok AS (
@@ -743,7 +726,7 @@ def q_oov_rate_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- character-bigram entropy profile ------------------------------------------
 
 
-@register_r15(
+@register(
     "char_entropy_profile",
     oracle="""
     WITH g AS (

@@ -5,7 +5,7 @@ r16 registration section).
 These six entries were staged in round 14 (wave 2) and burned down
 against the DuckDB oracle locally via
 ``tests/test_r14_staging_wave2.py`` (full differential comparison at
-sf0.001 AND sf0.01 via tools/staged_preflight.py: row count + schema +
+sf0.001 AND sf0.01: row count + schema +
 order-insensitive exact values, plus planted-property checks and
 physical-plan shape pins applied at staging time). Round 16 performs
 the documented mechanical move: the oracle SQL below is the staging
@@ -43,23 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipeline_spike_spark.plans.registry import QueryFn, load, register
-
-R16_REGISTERED: list[str] = []
-
-
-def register_r16(
-    name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()
-):
-    """register() + record the name for the rotation head and the
-    registration gate test (tests/test_r16_registration.py)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        out = register(name, oracle, doc=doc, tags=tags)(fn)
-        R16_REGISTERED.append(name)
-        return out
-
-    return deco
+from datapipeline_spike_spark.plans.registry import load, register
 
 
 # the engine's tokenizer (functions/text.tokens) in DuckDB terms:
@@ -119,7 +103,7 @@ def _sql_pr_iter(k: int) -> str:
     return ",\n".join(parts)
 
 
-@register_r16(
+@register(
     "pagerank_host_authority",
     oracle=f"""
     WITH {_SQL_PR_GRAPH},
@@ -203,7 +187,7 @@ def _code_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_r16(
+@register(
     "code_detect_profile",
     oracle=f"""
     WITH {_SQL_CODE_PLANT},
@@ -307,7 +291,7 @@ def _lic_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_r16(
+@register(
     "license_detect_profile",
     oracle=f"""
     WITH {_SQL_LIC_PLANT},
@@ -365,7 +349,7 @@ def q_license_detect_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- matryoshka truncation recall ------------------------------------------------
 
 
-@register_r16(
+@register(
     "matryoshka_recall_at_k",
     oracle="""
     WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
@@ -432,7 +416,7 @@ def q_matryoshka_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- audio VAD segments ---------------------------------------------------------
 
 
-@register_r16(
+@register(
     "audio_vad_segments",
     oracle="""
     WITH xs AS (
@@ -485,7 +469,7 @@ def q_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- curriculum phase plan ------------------------------------------------------
 
 
-@register_r16(
+@register(
     "curriculum_phase_plan",
     oracle=f"""
     WITH t AS (SELECT source, doc_id,

@@ -5,7 +5,7 @@ plans/__init__.py, r16/r17 registration sections).
 These eleven entries were staged in round 14 (waves 3-7) and burned
 down against the DuckDB oracle locally via
 ``tests/test_r14_staging_wave2.py`` (full differential comparison at
-sf0.001 AND sf0.01 via tools/staged_preflight.py: row count + schema +
+sf0.001 AND sf0.01: row count + schema +
 order-insensitive exact values, plus planted-property checks and
 physical-plan shape pins applied at staging time — re-verified 0
 failures / 25 in r16). Round 17 performs the documented mechanical
@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipeline_spike_spark.plans.registry import QueryFn, load, register
+from datapipeline_spike_spark.plans.registry import load, register
 
 # single source for the shared SQL fragments (the ADVICE r15
 # divergence rule): the PR-graph WITH chain and the tokenizer SQL live
@@ -59,27 +59,11 @@ from datapipeline_spike_spark.plans.catalog_r16 import (  # noqa: F401
     _sql_pr_iter,
 )
 
-R17_REGISTERED: list[str] = []
-
-
-def register_r17(
-    name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()
-):
-    """register() + record the name for the rotation head and the
-    registration gate test (tests/test_r17_registration.py)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        out = register(name, oracle, doc=doc, tags=tags)(fn)
-        R17_REGISTERED.append(name)
-        return out
-
-    return deco
-
 
 # --- video scene cuts (wave 3) ---------------------------------------------------
 
 
-@register_r17(
+@register(
     "video_scene_cuts",
     oracle="""
     WITH fb AS (
@@ -151,7 +135,7 @@ def q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- crawl frontier priority (wave 3) ---------------------------------------------
 
 
-@register_r17(
+@register(
     "crawl_frontier_priority",
     oracle=f"""
     WITH {_SQL_PR_GRAPH},
@@ -201,7 +185,7 @@ def q_crawl_frontier_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- anchor text stats (wave 3) ----------------------------------------------------
 
 
-@register_r17(
+@register(
     "anchor_text_stats",
     oracle=f"""
     WITH t AS (SELECT doc_id, {_SQL_TOKS.format(c='text')} AS toks
@@ -242,7 +226,7 @@ def q_anchor_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- span corruption plan (wave 3) --------------------------------------------------
 
 
-@register_r17(
+@register(
     "span_corruption_plan",
     oracle=f"""
     WITH t AS (SELECT doc_id,
@@ -311,7 +295,7 @@ def _sql_lpa(k: int) -> str:
     return ",\n".join(parts)
 
 
-@register_r17(
+@register(
     "label_propagation_communities",
     oracle=f"""
     WITH {_SQL_PR_GRAPH},
@@ -352,7 +336,7 @@ def q_label_propagation_communities(
 # --- vocab overlap matrix (wave 4) -------------------------------------------------
 
 
-@register_r17(
+@register(
     "vocab_overlap_matrix",
     oracle=f"""
     WITH c AS (
@@ -404,7 +388,7 @@ def q_vocab_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- minhash band tuning (wave 4) ---------------------------------------------------
 
 
-@register_r17(
+@register(
     "minhash_band_tuning",
     oracle="""
     SELECT CAST(128 AS BIGINT) AS n_hashes,
@@ -445,7 +429,7 @@ def q_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- triangle clustering (wave 5) ---------------------------------------------------
 
 
-@register_r17(
+@register(
     "triangle_clustering",
     oracle=f"""
     WITH {_SQL_PR_GRAPH},
@@ -501,7 +485,7 @@ def q_triangle_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- hybrid RRF retrieval (wave 6) --------------------------------------------------
 
 
-@register_r17(
+@register(
     "hybrid_rrf_retrieval",
     oracle="""
     WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
@@ -611,7 +595,7 @@ def _chat_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_r17(
+@register(
     "chat_turn_stats",
     oracle=f"""
     WITH {_SQL_CHAT_PLANT},
@@ -703,7 +687,7 @@ def q_chat_turn_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- DPO pair plan (wave 7) ---------------------------------------------------------
 
 
-@register_r17(
+@register(
     "dpo_pair_plan",
     oracle="""
     WITH cand AS (

@@ -4,20 +4,19 @@ r17/r18 registration sections).
 
 These three entries were staged in round 17 and burned down against
 the DuckDB oracle locally via ``tests/test_r17_staging.py`` (full
-differential comparison at sf0.001 AND sf0.01 via
-tools/staged_preflight.py: row count + schema + order-insensitive
-exact values, plus planted-property checks and physical-plan shape
-pins applied at staging time — 0 failures / 31 re-verified this
-round after the ADVICE r17 edge-case hardening). Round 18 performs
-the documented mechanical move: the oracle SQL below is the staging
-tests' SQL (aliases identical on both sides; the staging module now
-imports it from HERE so registration and staging can never drift),
-the module is imported by ``plans/__init__``, the three names take
-r18 head slots, and the plan-audit allowlist entries MEASURED at r17
-staging land in tools/plan_audit.py (BNLJ_OK all three: hits'
-per-half-step 1-row L1-total crosses, knn's auto-plane 1-row corpus
-count, min_k's 1-row smoothing totals; knn/min_k windows PARTITIONED,
-hits windowless).
+differential comparison at sf0.001 AND sf0.01: row count + schema +
+order-insensitive exact values, plus planted-property checks and
+physical-plan shape pins applied at staging time — 0 failures / 31
+re-verified this round after the ADVICE r17 edge-case hardening).
+Round 18 performs the documented mechanical move: the oracle SQL below
+is the staging tests' SQL (aliases identical on both sides; the
+staging module now imports it from HERE so registration and staging
+can never drift), the module is imported by ``plans/__init__``, the
+three names take r18 head slots, and the plan-audit allowlist entries
+MEASURED at r17 staging land in tools/plan_audit.py (BNLJ_OK all
+three: hits' per-half-step 1-row L1-total crosses, knn's auto-plane
+1-row corpus count, min_k's 1-row smoothing totals; knn/min_k windows
+PARTITIONED, hits windowless).
 
 Registered corpora reuse the staging plants:
 
@@ -37,7 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datapipeline_spike_spark.plans.registry import QueryFn, load, register
+from datapipeline_spike_spark.plans.registry import load, register
 
 # single source for the shared SQL fragments (the ADVICE r15
 # divergence rule): the PR-graph WITH chain and the tokenizer SQL live
@@ -55,22 +54,6 @@ from datapipeline_spike_spark.plans.catalog_r9 import (  # noqa: F401
     _AUTO_TARGET_BUCKET,
     _SQL_BUCKET16,
 )
-
-R18_REGISTERED: list[str] = []
-
-
-def register_r18(
-    name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()
-):
-    """register() + record the name for the rotation head and the
-    registration gate test (tests/test_r18_registration.py)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        out = register(name, oracle, doc=doc, tags=tags)(fn)
-        R18_REGISTERED.append(name)
-        return out
-
-    return deco
 
 
 # --- HITS hubs & authorities (wave 8) --------------------------------------------
@@ -121,7 +104,7 @@ SQL_HITS = f"""
 """
 
 
-@register_r18(
+@register(
     "hits_hub_authority",
     oracle=SQL_HITS,
     doc="""operators/graph.hits_hub_authority over
@@ -182,7 +165,7 @@ SQL_KNN_GRAPH = f"""
 """
 
 
-@register_r18(
+@register(
     "knn_graph_edges",
     oracle=SQL_KNN_GRAPH,
     doc="""operators/similarity.knn_graph_edges over embeddings
@@ -242,7 +225,7 @@ SQL_MIN_K = f"""
 """
 
 
-@register_r18(
+@register(
     "min_k_prob_profile",
     oracle=SQL_MIN_K,
     doc="""operators/text_stats.min_k_prob_profile over documents

@@ -4,23 +4,21 @@ r18/r19 registration sections).
 
 These three entries were staged in round 17 and burned down against
 the DuckDB oracle locally via ``tests/test_r17_staging.py`` (full
-differential comparison at sf0.001 AND sf0.01 via
-tools/staged_preflight.py: row count + schema + order-insensitive
-exact values, plus planted-property checks and physical-plan shape
-pins applied at staging time). Wave 9's tie-break/NULL-guard
-hardening landed BEFORE this hash freeze, per the rule: the ADVICE
-r17 string-id fix in r18 and the ADVICE r18 NULL-score -inf coalesce
-in r19 itself (tests/test_r17_staging.py::
+differential comparison at sf0.001 AND sf0.01: row count + schema +
+order-insensitive exact values, plus planted-property checks and
+physical-plan shape pins applied at staging time). Wave 9's
+tie-break/NULL-guard hardening landed BEFORE this hash freeze, per the
+rule: the ADVICE r17 string-id fix in r18 and the ADVICE r18
+NULL-score -inf coalesce in r19 itself (tests/test_r17_staging.py::
 test_best_of_n_null_scores_never_win). Round 19 performs the
-documented mechanical move: the oracle SQL below is the staging
-tests' SQL (aliases identical on both sides; the staging module now
-imports it from HERE so registration and staging can never drift),
-the module is imported by ``plans/__init__``, the three names take
-r19 head slots, and the plan-audit notes MEASURED at r17 staging
-land: kcore is allowlist-CLEAN (ExistingRDD peel barriers +
-documented driver-side 1-row convergence counts — no BNLJ, no
-windows, no Python); diversity and best-of-n are pure keyed
-aggregates (clean).
+documented mechanical move: the oracle SQL below is the staging tests'
+SQL (aliases identical on both sides; the staging module now imports
+it from HERE so registration and staging can never drift), the module
+is imported by ``plans/__init__``, the three names take r19 head
+slots, and the plan-audit notes MEASURED at r17 staging land: kcore is
+allowlist-CLEAN (ExistingRDD peel barriers + documented driver-side
+1-row convergence counts — no BNLJ, no windows, no Python); diversity
+and best-of-n are pure keyed aggregates (clean).
 
 Registered corpora reuse the staging plants:
 
@@ -44,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipeline_spike_spark.plans.registry import QueryFn, load, register
+from datapipeline_spike_spark.plans.registry import load, register
 
 # single source for the shared SQL fragments (the ADVICE r15
 # divergence rule): the PR-graph WITH chain and the tokenizer SQL live
@@ -55,22 +53,6 @@ from datapipeline_spike_spark.plans.catalog_r16 import (  # noqa: F401
     _SQL_PR_GRAPH,
     _SQL_TOKS,
 )
-
-R19_REGISTERED: list[str] = []
-
-
-def register_r19(
-    name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()
-):
-    """register() + record the name for the rotation head and the
-    registration gate test (tests/test_r19_registration.py)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        out = register(name, oracle, doc=doc, tags=tags)(fn)
-        R19_REGISTERED.append(name)
-        return out
-
-    return deco
 
 
 # --- k-core membership (wave 9) --------------------------------------------------
@@ -110,7 +92,7 @@ SQL_KCORE = f"""
 """
 
 
-@register_r19(
+@register(
     "kcore_membership",
     oracle=SQL_KCORE,
     doc="""operators/graph.kcore_membership at k=4 over
@@ -176,7 +158,7 @@ SQL_DIVERSITY = f"""
 """
 
 
-@register_r19(
+@register(
     "distinct_ngram_diversity",
     oracle=SQL_DIVERSITY,
     doc="""operators/text_stats.distinct_ngram_diversity over
@@ -231,7 +213,7 @@ SQL_BEST_OF_N = """
 """
 
 
-@register_r19(
+@register(
     "best_of_n_selection",
     oracle=SQL_BEST_OF_N,
     doc="""operators/sft.best_of_n_selection over a deterministic

@@ -1,19 +1,13 @@
 """R9 catalog: the round-8 library operators, REGISTERED (r9 step).
 
-These 12 entries were staged in round 8 under the rotation contract
-(plans/__init__.py forbids registering queries that cannot get a
-driver-verification slot the same round; the r8 head was exactly full)
-and burned down against the DuckDB oracle locally via
-``tests/test_r9_staging.py`` (full check_oracle comparison at sf0.001:
-row count + schema + order-insensitive exact values). Round 9 performs
-the documented mechanical move: @stage -> @register (via the
-``register_r9`` wrapper below, which also records the names so the
-staging test keeps running the same differential check post-move), the
-module is imported by ``plans/__init__``, the 12 names splice into the
-r9 head behind the four queued lsh-consumer re-verifies, and the two
-promised plan-audit allowlist entries land in tools/plan_audit.py
-(1-row totals crosses in skipgram_pmi / bigram_fluency; the bounded
-phase-2 windows in weighted_doc_sample / budget_selected_docs).
+These 12 entries were staged in round 8 and burned down against the
+DuckDB oracle locally (full check_oracle comparison at sf0.001: row
+count + schema + order-insensitive exact values), then registered in
+round 9 with the two promised plan-audit allowlist entries in
+tools/plan_audit.py (1-row totals crosses in skipgram_pmi /
+bigram_fluency; the bounded phase-2 windows in weighted_doc_sample /
+budget_selected_docs). Every registered query is compared with its
+oracle by ``tests/test_entry.py::test_query_matches_oracle``.
 """
 
 from __future__ import annotations
@@ -21,26 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipeline_spike_spark.plans.registry import QueryFn, load, register
-
-R9_REGISTERED: list[str] = []
-
-
-def register_r9(
-    name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()
-):
-    """register() + record the name for the rotation head and the
-    repointed differential test (tests/test_r9_staging.py)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        # register FIRST: if it raises (duplicate name), the name must
-        # not pollute R9_REGISTERED (ADVICE r9 item 4 — a polluted list
-        # skews test_r9_moves_are_all_registered's count)
-        out = register(name, oracle, doc=doc, tags=tags)(fn)
-        R9_REGISTERED.append(name)
-        return out
-
-    return deco
+from datapipeline_spike_spark.plans.registry import load, register
 
 
 # --- deterministic training-shard shuffle -----------------------------------
@@ -51,7 +26,7 @@ _SQL_U01 = (
 )
 
 
-@register_r9(
+@register(
     "shuffle_shard_plan",
     oracle=f"""
     SELECT doc_id, lang, source,
@@ -86,7 +61,7 @@ _SQL_U01_RAW = (
 )
 
 
-@register_r9(
+@register(
     "weighted_doc_sample",
     oracle=f"""
     WITH es AS (
@@ -132,7 +107,7 @@ _SQL_TOKS_R9 = (
 )
 
 
-@register_r9(
+@register(
     "skipgram_pmi",
     oracle=f"""
     WITH toks AS (SELECT doc_id, {_SQL_TOKS_R9} AS t FROM documents),
@@ -197,7 +172,7 @@ _SQL_QUALITY6 = (
 )
 
 
-@register_r9(
+@register(
     "budget_selected_docs",
     oracle=f"""
     WITH t AS (SELECT doc_id, text, {_SQL_TOKS_R9} AS toks FROM documents),
@@ -259,7 +234,7 @@ def q_budget_selected_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- keep-best-copy dedup survivor policy -----------------------------------
 
 
-@register_r9(
+@register(
     "dedup_survivor_policy",
     oracle="""
     WITH canon AS (
@@ -349,7 +324,7 @@ def _sql_html_chain(page_expr: str) -> str:
     return _SQL_EXTRACT.replace("__X__", x)
 
 
-@register_r9(
+@register(
     "html_extract_profile",
     oracle=f"""
     WITH pages AS (SELECT doc_id, {_SQL_PAGE} AS page FROM documents),
@@ -404,7 +379,7 @@ def q_html_extract_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- bigram LM fluency scoring ----------------------------------------------
 
 
-@register_r9(
+@register(
     "bigram_fluency",
     oracle=f"""
     WITH toks AS (
@@ -451,7 +426,7 @@ def q_bigram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- CCNet perplexity bucketing ---------------------------------------------
 
 
-@register_r9(
+@register(
     "perplexity_bucket_profile",
     oracle=f"""
     WITH toks AS (
@@ -522,7 +497,7 @@ _ENC_PATTERNS = {
 }
 
 
-@register_r9(
+@register(
     "encoding_quality_profile",
     oracle=f"""
     WITH c AS (SELECT doc_id, {_SQL_CORRUPT} AS text FROM documents),
@@ -627,7 +602,7 @@ _SQL_HARD_NEG = f"""
     """
 
 
-@register_r9(
+@register(
     "hard_negative_pairs",
     oracle=_SQL_HARD_NEG,
     doc="operators/similarity.hard_negative_mining staged for r9, "
@@ -682,7 +657,7 @@ _SQL_HAM_WORDS = ", ".join(
 )
 
 
-@register_r9(
+@register(
     "hamming_recall_at_k",
     oracle=f"""
     WITH codes AS (
@@ -800,7 +775,7 @@ def _sql_jl_comp(j: int) -> str:
             f" / sqrt(CAST({_JL_K} AS DOUBLE)), 6)")
 
 
-@register_r9(
+@register(
     "random_projection_profile",
     oracle=f"""
     WITH p AS (

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -11,6 +12,12 @@ ROOT = Path(__file__).resolve().parents[1]
 sys.path[:0] = [str(ROOT), str(ROOT / "tools")]
 
 from datapipeline_spike_spark.session import get_session
+
+# The session's default driver heap (48g) lets one long test session's
+# JVM grow past the physical memory of a smaller machine, where the
+# kernel kills it and every later test fails. A bounded heap makes it
+# collect instead; an explicit SPARK_GRAFT_DRIVER_MEM still wins.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 
 @pytest.fixture(scope="session")

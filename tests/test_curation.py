@@ -109,11 +109,17 @@ def test_scoped_cache_frees_exactly_curate_corpus_pins(spark):
         _cached_plans,
         _persistent_rdd_ids,
         scoped_cache,
+        unpersist_all,
     )
 
     def entries():
         return sorted(p.toString() for p in _cached_plans(spark))
 
+    # Earlier tests can leave pins nothing references; Spark's
+    # ContextCleaner may release those at any moment, which would make
+    # the before/after comparison depend on JVM GC timing. Start from a
+    # drained session so the only pin outside the block is ``unrelated``.
+    unpersist_all(spark, blocking=True)
     unrelated = spark.range(10).withColumn("v", F.col("id") * 2).persist()
     unrelated.count()
     rdds_before, entries_before = _persistent_rdd_ids(spark), entries()

@@ -681,21 +681,6 @@ def test_lsh_candidate_pairs_rejects_streaming_input(spark, tmp_path):
         simhash_neardup_pairs(stream)
 
 
-def test_lsh_candidate_pairs_deferred_materialization_same_pairs(docs):
-    """materialize=False (lazy persist for speculative plan builders)
-    must produce the identical pair set as the eager default."""
-    eager = {
-        (r["doc_id_a"], r["doc_id_b"], r["n_shared_bands"])
-        for r in lsh_candidate_pairs(docs).collect()
-    }
-    lazy = {
-        (r["doc_id_a"], r["doc_id_b"], r["n_shared_bands"])
-        for r in lsh_candidate_pairs(docs, materialize=False).collect()
-    }
-    assert eager == lazy and eager
-    docs.sparkSession.catalog.clearCache()
-
-
 def test_semdedup_empty_corpus_keeps_string_id_type(spark):
     """Empty-corpus typed-empty results must carry the corpus's ACTUAL
     id type (string ids came back long before r8)."""

@@ -561,6 +561,30 @@ def test_pq_codebooks_rejects_bad_parameters(spark, sf_dir, kwargs, match):
         pq_codebooks(emb, **{"dim": 64, "m": 4, "k": 8, "iters": 1, **kwargs})
 
 
+@pytest.mark.parametrize(
+    "op, kwargs, match",
+    [
+        ("ivf_topk", {"k": 0}, "k >= 1"),
+        ("ivf_topk", {"n_probe": 0}, "n_probe >= 1"),
+        ("ivfpq_topk", {"dim": 8, "k": 0}, "k >= 1"),
+        ("ivfpq_topk", {"dim": 8, "n_probe": 0}, "n_probe >= 1"),
+        ("ivfpq_topk", {"dim": 8, "m": 3}, "divisible"),
+    ],
+    ids=["ivf_k_zero", "ivf_probe_zero", "ivfpq_k_zero", "ivfpq_probe_zero",
+         "ivfpq_dim_not_divisible"],
+)
+def test_ivf_rejects_bad_parameters(spark, op, kwargs, match):
+    """Parameters that would return an empty frame (or trip an assert
+    that ``python -O`` strips) are a ValueError before any job runs."""
+    from datapipeline_spike_spark.operators import similarity
+
+    vecs = [(i, [float((i * 7 + d) % 11) for d in range(8)]) for i in range(60)]
+    corpus = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    queries = corpus.filter("vec_id < 3")
+    with pytest.raises(ValueError, match=match):
+        getattr(similarity, op)(corpus, queries, **kwargs)
+
+
 def test_pq_adc_lossless_when_codebook_covers_corpus(spark):
     """ADC sanity bound: with one centroid per corpus vector the
     encoding is lossless (every vector is its own centroid, all

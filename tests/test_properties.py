@@ -1188,325 +1188,3 @@ def test_best_of_n_matches_pure_python(spark, pools):
         assert g["selection_gap"] == pytest.approx(
             round(best[1] - round(mean, 6), 6), abs=1.5e-6
         )
-
-
-# --- r18 wave-10 staged-operator property batteries ---------------------------
-
-
-@given(
-    texts=st.lists(
-        st.text(alphabet="abc", min_size=0, max_size=24),
-        min_size=1, max_size=10,
-    ),
-    min_len=st.integers(min_value=2, max_value=5),
-)
-@PROP
-def test_char_runs_match_pure_python(spark, texts, min_len):
-    """exact_substr_char_runs on ARBITRARY tiny-alphabet corpora (the
-    3-letter alphabet forces real window collisions) equals a
-    pure-Python replay of the definition: mark every position whose
-    length-L window occurs >= 2 times corpus-wide (self-repeats
-    included), merge contiguous covered spans per document. Pins the
-    exact-span semantics before the registration hash freezes."""
-    from datapipeline_spike_spark.operators.dedup import (
-        exact_substr_char_runs,
-    )
-
-    docs = list(enumerate(texts))
-    # pure replay (1-based positions like substring())
-    from collections import Counter
-
-    wins: list[tuple[int, int, str]] = []
-    for i, t in docs:
-        for pos in range(1, len(t) - min_len + 2):
-            wins.append((i, pos, t[pos - 1 : pos - 1 + min_len]))
-    counts = Counter(w for _, _, w in wins)
-    marked: dict[int, list[int]] = {}
-    for i, pos, w in wins:
-        if counts[w] >= 2:
-            marked.setdefault(i, []).append(pos)
-    want: dict[tuple[int, int], tuple[int, int, int]] = {}
-    for i, poss in marked.items():
-        poss.sort()
-        run_idx, run_start, run_end = 0, None, None
-        for pos in poss:
-            end = pos + min_len - 1
-            if run_start is None or pos > run_end + 1:
-                if run_start is not None:
-                    want[(i, run_idx)] = (
-                        run_start, run_end, run_end - run_start + 1
-                    )
-                run_idx += 1
-                run_start, run_end = pos, end
-            else:
-                run_end = max(run_end, end)
-        if run_start is not None:
-            want[(i, run_idx)] = (run_start, run_end, run_end - run_start + 1)
-
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        (r["doc_id"], r["run_idx"]): (
-            r["run_start"], r["run_end"], r["run_len"]
-        )
-        for r in exact_substr_char_runs(df, min_len=min_len).collect()
-    }
-    assert got == want
-
-
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(0, 4),          # domain
-            st.integers(0, 2000),       # loss in milli-units
-            st.integers(1, 100_000),    # tokens
-        ),
-        min_size=1, max_size=30,
-    ),
-    budget_k=st.integers(min_value=1, max_value=500),
-    decay_pct=st.integers(min_value=10, max_value=100),
-)
-@PROP
-def test_epoch_weights_match_pure_python(spark, rows, budget_k, decay_pct):
-    """epoch_aware_domain_weights equals a pure-Python replay of the
-    quantize-then-derive loop on arbitrary domain pools: 6dp-pinned
-    mean loss, per-round 6dp epochs/effective-loss, the max-shifted MW
-    update, 6dp renormalization — including decay=1 (the doremi
-    reduction) when the draw lands there."""
-    import math as _m
-
-    from datapipeline_spike_spark.operators.sampling import (
-        epoch_aware_domain_weights,
-    )
-
-    budget = float(budget_k * 1000)
-    decay = decay_pct / 100.0
-    eta, iters = 0.1, 4
-
-    per: dict[int, list[tuple[float, int]]] = {}
-    for d, lm, tk in rows:
-        per.setdefault(d, []).append((lm / 1000.0, tk))
-    doms = sorted(per)
-    loss = {
-        d: round(sum(l for l, _ in per[d]) / len(per[d]), 6) for d in doms
-    }
-    tok = {d: float(sum(t for _, t in per[d])) for d in doms}
-    w = {d: round(1.0 / len(doms), 6) for d in doms}
-    for _ in range(iters):
-        ep = {d: round(w[d] * budget / tok[d], 6) for d in doms}
-        eff = {
-            d: round(loss[d] * decay ** max(ep[d] - 1.0, 0.0), 6)
-            for d in doms
-        }
-        mx = max(eff.values())
-        u = {d: w[d] * _m.exp(eta * (eff[d] - mx)) for d in doms}
-        s = sum(u.values())
-        w = {d: round(u[d] / s, 6) for d in doms}
-    ep_f = {d: round(w[d] * budget / tok[d], 6) for d in doms}
-    eff_f = {
-        d: round(loss[d] * decay ** max(ep_f[d] - 1.0, 0.0), 6) for d in doms
-    }
-
-    df = spark.createDataFrame(
-        [(d, lm / 1000.0, tk) for d, lm, tk in rows],
-        "domain long, loss double, tokens long",
-    )
-    got = {
-        r["domain"]: r
-        for r in epoch_aware_domain_weights(
-            df, "domain", "loss", "tokens",
-            budget_tokens=budget, eta=eta, iters=iters, decay=decay,
-        ).collect()
-    }
-    assert set(got) == set(doms)
-    for d in doms:
-        g = got[d]
-        assert g["n_docs"] == len(per[d])
-        assert g["tokens"] == int(tok[d])
-        assert g["mean_loss"] == pytest.approx(loss[d], abs=1.5e-6)
-        assert g["weight"] == pytest.approx(w[d], abs=1.5e-6), d
-        assert g["epochs"] == pytest.approx(ep_f[d], abs=1.5e-6), d
-        assert g["eff_loss"] == pytest.approx(eff_f[d], abs=1.5e-6), d
-
-
-@given(
-    vecs=st.lists(
-        st.lists(st.integers(min_value=-3, max_value=3), min_size=8, max_size=8)
-        .filter(lambda v: any(v)),
-        min_size=2, max_size=12,
-    ),
-    k=st.integers(min_value=1, max_value=3),
-)
-@PROP
-def test_nn_descent_matches_pure_python(spark, vecs, k):
-    """nn_descent_refine(rounds=1) equals a pure-Python replay of the
-    whole derivation on arbitrary small vector sets: both splitmix
-    bucketings (auto plane count from the corpus size), per-bucket
-    seed candidates, (cos desc, id asc) top-k, the shared-neighbor
-    local join, the merge top-k, and mutuality. Pins the staged
-    semantics end-to-end — planes, ranking, and round structure."""
-    import math as _m
-
-    from datapipeline_spike_spark.operators.similarity import (
-        _plane,
-        nn_descent_refine,
-    )
-
-    dim = 8
-    n = len(vecs)
-    n_planes = min(16, max(4, _m.ceil(_m.log2(n / 64.0)) if n > 64 else 4))
-
-    def bucket(v, off):
-        b = 0
-        for p in range(16):
-            pl = _plane(dim, off + p + 1)
-            if sum(a * c for a, c in zip(v, pl)) >= 0:
-                b |= 1 << p
-        return b & ((1 << n_planes) - 1)
-
-    ids = list(range(n))
-    ba = {i: bucket(vecs[i], 0) for i in ids}
-    bb = {i: bucket(vecs[i], 100) for i in ids}
-
-    def cos(i, j):
-        a, b = vecs[i], vecs[j]
-        na = _m.sqrt(sum(x * x for x in a))
-        nb = _m.sqrt(sum(x * x for x in b))
-        return round(sum(x * y for x, y in zip(a, b)) / (na * nb), 6)
-
-    cand = {
-        (i, j)
-        for i in ids
-        for j in ids
-        if i != j and (ba[i] == ba[j] or bb[i] == bb[j])
-    }
-
-    def topk(pairs):
-        by_src: dict[int, list] = {}
-        for i, j in pairs:
-            by_src.setdefault(i, []).append(j)
-        out = set()
-        for i, js in by_src.items():
-            js.sort(key=lambda j: (-cos(i, j), j))
-            out.update((i, j) for j in js[:k])
-        return out
-
-    e0 = topk(cand)
-    und: dict[int, set] = {}
-    for i, j in e0:
-        und.setdefault(i, set()).add(j)
-        und.setdefault(j, set()).add(i)
-    local = {
-        (u, v)
-        for nbrs in und.values()
-        for u in nbrs
-        for v in nbrs
-        if u != v
-    }
-    e1 = topk(e0 | local)
-    ranked = {}
-    by_src: dict[int, list] = {}
-    for i, j in e1:
-        by_src.setdefault(i, []).append(j)
-    for i, js in by_src.items():
-        js.sort(key=lambda j: (-cos(i, j), j))
-        for rnk, j in enumerate(js, 1):
-            ranked[(i, j)] = rnk
-
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in ids],
-        "vec_id long, embedding array<double>",
-    )
-    got = {
-        (r["src_id"], r["dst_id"]): r
-        for r in nn_descent_refine(df, dim=dim, k=k, rounds=1).collect()
-    }
-    assert set(got) == set(ranked)
-    for (i, j), r in got.items():
-        assert r["rank"] == ranked[(i, j)], (i, j)
-        assert r["cos_sim"] == pytest.approx(cos(i, j), abs=1.5e-6)
-        assert r["is_mutual"] == ((j, i) in ranked), (i, j)
-
-
-@given(
-    vecs=st.lists(
-        st.lists(st.integers(min_value=-3, max_value=3), min_size=8, max_size=8)
-        .filter(lambda v: any(v)),
-        min_size=2, max_size=12,
-    ),
-    k=st.integers(min_value=1, max_value=3),
-    thr_pct=st.integers(min_value=-50, max_value=100),
-)
-@PROP
-def test_knn_prune_matches_pure_python(spark, vecs, k, thr_pct):
-    """knn_prune_assignment (staged r19 wave 11) equals a pure-Python
-    replay of the whole derivation on arbitrary small vector sets:
-    the auto-plane bucketing, (cos desc, id asc) top-k, mutuality,
-    and the EXISTS-lower-mutual-similar-id prune — across thresholds
-    including degenerate ones (everything kept / everything below 1.0
-    prunable)."""
-    import math as _m
-
-    from datapipeline_spike_spark.operators.similarity import (
-        _plane,
-        knn_prune_assignment,
-    )
-
-    dim = 8
-    n = len(vecs)
-    threshold = thr_pct / 100.0
-    n_planes = min(16, max(4, _m.ceil(_m.log2(n / 64.0)) if n > 64 else 4))
-
-    def bucket(v):
-        b = 0
-        for p in range(16):
-            pl = _plane(dim, p + 1)
-            if sum(a * c for a, c in zip(v, pl)) >= 0:
-                b |= 1 << p
-        return b & ((1 << n_planes) - 1)
-
-    ids = list(range(n))
-    bk = {i: bucket(vecs[i]) for i in ids}
-
-    def cos(i, j):
-        a, b = vecs[i], vecs[j]
-        na = _m.sqrt(sum(x * x for x in a))
-        nb = _m.sqrt(sum(x * x for x in b))
-        return round(sum(x * y for x, y in zip(a, b)) / (na * nb), 6)
-
-    edges: dict[int, list] = {}
-    for i in ids:
-        cands = [j for j in ids if j != i and bk[i] == bk[j]]
-        cands.sort(key=lambda j: (-cos(i, j), j))
-        edges[i] = cands[:k]
-    dup_of: dict[int, int] = {}
-    best_sim: dict[int, float] = {}
-    for i in ids:
-        quals = [
-            j
-            for j in edges[i]
-            if j < i and i in edges[j] and cos(i, j) >= threshold
-        ]
-        if quals:
-            dup_of[i] = min(quals)
-            best_sim[i] = max(cos(i, j) for j in quals)
-
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in ids],
-        "vec_id long, embedding array<double>",
-    )
-    got = {
-        r["vec_id"]: r
-        for r in knn_prune_assignment(
-            df, dim=dim, k=k, threshold=threshold
-        ).collect()
-    }
-    assert set(got) == set(ids)
-    for i in ids:
-        if i in dup_of:
-            assert not got[i]["kept"], i
-            assert got[i]["dup_of"] == dup_of[i], i
-            assert got[i]["best_dup_sim"] == pytest.approx(
-                best_sim[i], abs=1.5e-6
-            )
-        else:
-            assert got[i]["kept"] and got[i]["dup_of"] is None, i

@@ -1,48 +1,14 @@
-"""r11 registration gate: the six r10-staged operators are now REGISTRY
-entries (plans/catalog_r11). This keeps running the SAME differential
-comparison the pre-handoff gate uses (tools/check_oracle.compare) —
-against the REGISTRY entries, so the local evidence survives the move
-(the r9 precedent, tests/test_r9_staging.py) — plus the three ADVICE
-r10 contract fixes: the verdict-matrix arity guard, the zero-token
-mixture-group contract, and the OCHK continuation-cycle guard."""
+"""Contract tests for the queries registered in plans/catalog_r11: the
+verdict-matrix arity guard, the zero-token mixture-group contract and
+the OCHK continuation-cycle guard. Each registered query's oracle
+differential is tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
 import struct
 
-import duckdb
 import pytest
-from check_oracle import compare
 from pyspark.sql import functions as F
-
-from datapipeline_spike_spark.plans import REGISTRY  # noqa: F401  (imports catalog_r11)
-from datapipeline_spike_spark.plans.catalog_r11 import R11_REGISTERED
-from datapipeline_spike_spark.plans.registry import TABLES
-
-
-@pytest.fixture(scope="module")
-def oracle_con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
-
-def test_r11_moves_are_all_registered():
-    assert len(R11_REGISTERED) == 6
-    missing = [n for n in R11_REGISTERED if n not in REGISTRY]
-    assert not missing, missing
-
-
-@pytest.mark.parametrize("name", sorted(R11_REGISTERED))
-def test_registered_query_matches_oracle(spark, sf_dir, oracle_con, name):
-    q = REGISTRY[name]
-    sdf = q.spark(spark, sf_dir).toPandas()
-    assert q.oracle is not None  # all six ship full-value oracles
-    odf = oracle_con.execute(q.oracle).df()
-    problems = compare(name, sdf, odf)
-    assert not problems, problems
 
 
 # --- ADVICE r10 contract fixes ------------------------------------------------

@@ -1,9 +1,10 @@
-"""r11 staged operators (register r12): DuckDB differential tests +
-planted-property checks for reliability_calibration_bins,
-token_distribution_drift, rouge_ngram_eval, and
-embedding_centroid_drift — the same pre-registration gauntlet every
-staged cohort runs (oracle parity proven HERE, so registration is a
-catalog-entry move, not new verification surface)."""
+"""Planted-property and contract tests for the operators staged in r11
+(reliability_calibration_bins, token_distribution_drift,
+rouge_ngram_eval, embedding_centroid_drift, hubness_profile,
+ivfpq_topk), plus the two IVF-PQ DuckDB differentials the registry does
+not cover (the raw top-k neighbors and the recall audit's staged column
+set). Each registered query's oracle differential is
+tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
@@ -21,18 +22,10 @@ from datapipeline_spike_spark.operators.text_stats import (
     rouge_ngram_eval,
     token_distribution_drift,
 )
+from datapipeline_spike_spark.plans import REGISTRY
 from datapipeline_spike_spark.plans.registry import load
 
 SF = "/root/testdata/sf0.001"
-
-_SQL_TOKS = (
-    "list_filter(regexp_split_to_array(lower({c}), '[^a-z0-9'']+'),"
-    " t -> t != '')"
-)
-_SQL_U01_DOC = (
-    "(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-    " / 4294967296.0)"
-)
 
 
 def _con():
@@ -47,48 +40,6 @@ def _con():
 
 
 # --- reliability_calibration_bins ---------------------------------------------
-
-
-def test_calibration_bins_match_duckdb(spark):
-    """Scores from the portable md5 [0,1) draw, labels from a length
-    rule — the full bin table vs a DuckDB replay."""
-    from datapipeline_spike_spark.operators.sampling import hash_u01
-
-    docs = load(spark, SF, "documents").select(
-        hash_u01("doc_id").alias("score"),
-        (F.length("text") >= 200).alias("label"),
-    )
-    got = {
-        r["bin"]: r.asDict()
-        for r in reliability_calibration_bins(docs).collect()
-    }
-    want = _con().execute(
-        f"""
-        WITH v AS (
-          SELECT {_SQL_U01_DOC} AS s, length(text) >= 200 AS l
-          FROM documents
-        ),
-        b AS (
-          SELECT least(9, CAST(floor(s * 10) AS INT)) AS bin,
-                 count(*) AS n, sum(s) AS sum_s,
-                 CAST(sum(CASE WHEN l THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
-          FROM v GROUP BY 1
-        ),
-        t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM b)
-        SELECT bin, CAST(n AS BIGINT) AS n,
-               round(sum_s / n, 6) AS mean_score,
-               round(n_pass * 1.0 / n, 6) AS pass_rate,
-               round(abs(n_pass * 1.0 / n - sum_s / n), 6) AS abs_gap,
-               round(n * 1.0 / total, 6) AS weight
-        FROM b, t
-        """
-    ).df()
-    assert len(got) == len(want)
-    for _, w in want.iterrows():
-        g = got[w["bin"]]
-        assert g["n"] == int(w["n"]), w["bin"]
-        for c in ("mean_score", "pass_rate", "abs_gap", "weight"):
-            assert g[c] == pytest.approx(w[c], abs=2e-6), (w["bin"], c)
 
 
 def test_calibration_planted_extremes(spark):
@@ -115,65 +66,6 @@ def test_calibration_planted_extremes(spark):
 
 
 # --- token_distribution_drift --------------------------------------------------
-
-
-def test_token_drift_matches_duckdb(spark):
-    got = token_distribution_drift(
-        load(spark, SF, "documents"), "lang", "en", "fr"
-    ).collect()[0].asDict()
-    toks = _SQL_TOKS.format(c="text")
-    want = _con().execute(
-        f"""
-        WITH toks AS (
-          SELECT (lang = 'en') AS ia, unnest({toks}) AS tok
-          FROM documents WHERE lang IN ('en', 'fr')
-        ),
-        c AS (
-          SELECT tok,
-                 CAST(sum(CASE WHEN ia THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-                 CAST(sum(CASE WHEN ia THEN 0 ELSE 1 END) AS BIGINT) AS cb
-          FROM toks GROUP BY 1
-        ),
-        t AS (
-          SELECT CAST(coalesce(sum(ca), 0) AS BIGINT) AS na,
-                 CAST(coalesce(sum(cb), 0) AS BIGINT) AS nb,
-                 count(*) AS v,
-                 CAST(coalesce(sum(CASE WHEN ca > 0 THEN 1 ELSE 0 END), 0)
-                      AS BIGINT) AS va,
-                 CAST(coalesce(sum(CASE WHEN cb > 0 THEN 1 ELSE 0 END), 0)
-                      AS BIGINT) AS vb
-          FROM c
-        ),
-        k AS (
-          SELECT
-            sum(((ca + 1.0) / (na + v))
-                * ln(((ca + 1.0) / (na + v)) / ((cb + 1.0) / (nb + v))))
-              AS kl_ab,
-            sum(((cb + 1.0) / (nb + v))
-                * ln(((cb + 1.0) / (nb + v)) / ((ca + 1.0) / (na + v))))
-              AS kl_ba,
-            sum(((ca + 1.0) / (na + v))
-                * ln(((ca + 1.0) / (na + v))
-                     / ((((ca + 1.0) / (na + v)) + ((cb + 1.0) / (nb + v))) / 2.0)))
-              AS kl_am,
-            sum(((cb + 1.0) / (nb + v))
-                * ln(((cb + 1.0) / (nb + v))
-                     / ((((ca + 1.0) / (na + v)) + ((cb + 1.0) / (nb + v))) / 2.0)))
-              AS kl_bm
-          FROM c, t
-        )
-        SELECT na AS n_tokens_a, nb AS n_tokens_b, va AS vocab_a,
-               vb AS vocab_b, v AS vocab_union,
-               round(kl_ab, 6) AS kl_ab, round(kl_ba, 6) AS kl_ba,
-               round(0.5 * kl_am + 0.5 * kl_bm, 6) AS js_divergence
-        FROM t, k
-        """
-    ).df().iloc[0].to_dict()
-    for c in ("n_tokens_a", "n_tokens_b", "vocab_a", "vocab_b", "vocab_union"):
-        assert got[c] == int(want[c]), c
-    for c in ("kl_ab", "kl_ba", "js_divergence"):
-        assert got[c] == pytest.approx(want[c], abs=2e-6), c
-    assert got["kl_ab"] > 0 and got["js_divergence"] > 0
 
 
 def test_token_drift_planted_properties(spark):
@@ -204,94 +96,12 @@ def test_token_drift_planted_properties(spark):
     r = token_distribution_drift(empty_side, "snap", "a", "b").collect()[0]
     assert r["n_tokens_a"] == 2 and r["n_tokens_b"] == 0
     assert r["kl_ab"] is None and r["js_divergence"] is None
+    # the registered en-vs-fr drift on the corpus is a real divergence
+    r = REGISTRY["token_distribution_drift"].spark(spark, SF).collect()[0]
+    assert r["kl_ab"] > 0 and r["js_divergence"] > 0
 
 
 # --- rouge_ngram_eval -----------------------------------------------------------
-
-
-def test_rouge_matches_duckdb(spark):
-    """Planted pair construction over documents (identical / appended /
-    word-reversed references by doc_id mod 3) vs a full DuckDB replay
-    of the clipped-bigram overlap."""
-    from datapipeline_spike_spark.functions.text import tokens
-
-    d = load(spark, SF, "documents")
-    pairs = d.select(
-        F.col("doc_id").alias("pair_id"),
-        F.col("text").alias("candidate"),
-        F.when(F.col("doc_id") % 3 == 0, F.col("text"))
-        .when(
-            F.col("doc_id") % 3 == 1,
-            F.concat("text", F.lit(" extra appended trailer words")),
-        )
-        .otherwise(F.concat_ws(" ", F.reverse(tokens("text"))))
-        .alias("reference"),
-    )
-    got = {r["pair_id"]: r.asDict() for r in rouge_ngram_eval(pairs).collect()}
-    toks = _SQL_TOKS.format(c="text")
-    toks_c = _SQL_TOKS.format(c="candidate")
-    toks_r = _SQL_TOKS.format(c="reference")
-    want = _con().execute(
-        f"""
-        WITH pairs AS (
-          SELECT doc_id AS pair_id, text AS candidate,
-                 CASE WHEN doc_id % 3 = 0 THEN text
-                      WHEN doc_id % 3 = 1
-                        THEN text || ' extra appended trailer words'
-                      ELSE array_to_string(list_reverse({toks}), ' ')
-                 END AS reference
-          FROM documents
-        ),
-        cg AS (
-          SELECT pair_id, g, count(*) AS cc FROM (
-            SELECT pair_id, unnest(list_transform(range(1, len(t)),
-                   i -> array_to_string(t[i:i+1], ' '))) AS g
-            FROM (SELECT pair_id, {toks_c} AS t FROM pairs)
-            WHERE len(t) >= 2
-          ) GROUP BY 1, 2
-        ),
-        rg AS (
-          SELECT pair_id, g, count(*) AS cr FROM (
-            SELECT pair_id, unnest(list_transform(range(1, len(t)),
-                   i -> array_to_string(t[i:i+1], ' '))) AS g
-            FROM (SELECT pair_id, {toks_r} AS t FROM pairs)
-            WHERE len(t) >= 2
-          ) GROUP BY 1, 2
-        ),
-        j AS (
-          SELECT pair_id,
-                 CAST(sum(coalesce(cc, 0)) AS BIGINT) AS cand_grams,
-                 CAST(sum(coalesce(cr, 0)) AS BIGINT) AS ref_grams,
-                 CAST(sum(least(coalesce(cc, 0), coalesce(cr, 0))) AS BIGINT)
-                   AS overlap
-          FROM cg FULL JOIN rg USING (pair_id, g) GROUP BY 1
-        )
-        SELECT p.pair_id,
-               coalesce(cand_grams, 0) AS cand_grams,
-               coalesce(ref_grams, 0) AS ref_grams,
-               coalesce(overlap, 0) AS overlap,
-               round(overlap * 1.0 / cand_grams, 6) AS precision,
-               round(overlap * 1.0 / ref_grams, 6) AS recall,
-               round(CASE WHEN (overlap * 1.0 / cand_grams)
-                               + (overlap * 1.0 / ref_grams) > 0
-                          THEN 2.0 * (overlap * 1.0 / cand_grams)
-                               * (overlap * 1.0 / ref_grams)
-                               / ((overlap * 1.0 / cand_grams)
-                                  + (overlap * 1.0 / ref_grams))
-                          ELSE 0.0 END, 6) AS f1
-        FROM pairs p LEFT JOIN j ON p.pair_id = j.pair_id
-        """
-    ).df()
-    assert len(got) == len(want)
-    for _, w in want.iterrows():
-        g = got[w["pair_id"]]
-        for c in ("cand_grams", "ref_grams", "overlap"):
-            assert g[c] == int(w[c]), (w["pair_id"], c)
-        for c in ("precision", "recall", "f1"):
-            if g[c] is None:
-                assert w["cand_grams"] == 0 or w["ref_grams"] == 0
-            else:
-                assert g[c] == pytest.approx(w[c], abs=2e-6), (w["pair_id"], c)
 
 
 def test_rouge_planted_semantics(spark):
@@ -320,73 +130,6 @@ def test_rouge_planted_semantics(spark):
 # --- embedding_centroid_drift ----------------------------------------------------
 
 
-def test_centroid_drift_matches_duckdb(spark):
-    e = load(spark, SF, "embeddings").withColumn(
-        "snap", (F.col("vec_id") % 2).cast("int")
-    )
-    got = {
-        r["label"]: r.asDict()
-        for r in embedding_centroid_drift(
-            e, snapshot_col="snap", snapshot_a=0, snapshot_b=1
-        ).collect()
-    }
-    want = _con().execute(
-        """
-        WITH e AS (
-          SELECT label, (vec_id % 2 = 0) AS ia, embedding::DOUBLE[] AS ev
-          FROM embeddings
-        ),
-        d AS (
-          SELECT label, ia, s.dim AS dim, s.val AS val FROM (
-            SELECT label, ia,
-                   unnest(list_transform(range(1, len(ev) + 1),
-                          i -> {'dim': i - 1, 'val': ev[i]})) AS s
-            FROM e
-          )
-        ),
-        pd AS (
-          SELECT label, dim,
-                 round(sum(CASE WHEN ia THEN val END)
-                       / sum(CASE WHEN ia THEN 1 ELSE 0 END), 6) AS ma,
-                 round(sum(CASE WHEN NOT ia THEN val END)
-                       / sum(CASE WHEN NOT ia THEN 1 ELSE 0 END), 6) AS mb,
-                 sum(CASE WHEN ia THEN 1 ELSE 0 END) AS na,
-                 sum(CASE WHEN NOT ia THEN 1 ELSE 0 END) AS nb
-          FROM d GROUP BY 1, 2
-        ),
-        ag AS (
-          SELECT label,
-                 list(ma ORDER BY dim) AS ca, list(mb ORDER BY dim) AS cb,
-                 CAST(max(na) AS BIGINT) AS n_a,
-                 CAST(max(nb) AS BIGINT) AS n_b
-          FROM pd GROUP BY 1
-        )
-        SELECT label, n_a, n_b,
-               round(list_cosine_similarity(ca, cb), 6) AS centroid_cosine,
-               round(sqrt(list_sum(list_transform(range(1, len(ca) + 1),
-                     i -> (ca[i] - cb[i]) * (ca[i] - cb[i])))), 6)
-                 AS centroid_shift_l2
-        FROM ag
-        """
-    ).df()
-    assert len(got) == len(want)
-    for _, w in want.iterrows():
-        g = got[w["label"]]
-        assert g["n_a"] == int(w["n_a"]) and g["n_b"] == int(w["n_b"])
-        assert g["centroid_cosine"] == pytest.approx(
-            w["centroid_cosine"], abs=2e-6
-        ), w["label"]
-        assert g["centroid_shift_l2"] == pytest.approx(
-            w["centroid_shift_l2"], abs=2e-6
-        ), w["label"]
-
-
-@pytest.fixture()
-def _emb_snap(spark):
-    e = load(spark, SF, "embeddings")
-    return e.withColumn("snap", (F.col("vec_id") % 2).cast("int"))
-
-
 def test_centroid_drift_planted_properties(spark):
     """Identical snapshots -> cosine 1, shift 0; an orthogonal planted
     pair -> cosine 0; a group on one side only -> NULL geometry with
@@ -413,87 +156,6 @@ def test_centroid_drift_planted_properties(spark):
 
 
 # --- hubness_profile -------------------------------------------------------------
-
-
-def test_hubness_profile_matches_duckdb(spark):
-    """Approximate top-5 neighbor lists from the auto-plane LSH bucket
-    join, then the k-occurrence moment profile — vs a full DuckDB
-    replay (bucket assignment from the same inlined hyperplanes and
-    count-derived plane number, rank on the rounded cosine, integer
-    raw moments)."""
-    from datapipeline_spike_spark.operators.similarity import hubness_profile
-    from datapipeline_spike_spark.plans.catalog_r9 import (
-        _AUTO_MAX_PLANES,
-        _AUTO_MIN_PLANES,
-        _AUTO_TARGET_BUCKET,
-        _SQL_BUCKET16,
-    )
-
-    got = (
-        hubness_profile(load(spark, SF, "embeddings"), dim=64, k=5)
-        .collect()[0]
-        .asDict()
-    )
-    want = _con().execute(
-        f"""
-        WITH np AS (
-          SELECT least({_AUTO_MAX_PLANES}, greatest({_AUTO_MIN_PLANES},
-                 CAST(ceil(log2(count(*) / {float(_AUTO_TARGET_BUCKET)}))
-                      AS INT))) AS n
-          FROM embeddings
-        ),
-        v AS (
-          SELECT vec_id, embedding::DOUBLE[] AS ev,
-                 ({_SQL_BUCKET16}) & ((1 << n) - 1) AS bucket
-          FROM embeddings, np
-        ),
-        scored AS (
-          SELECT a.vec_id AS anchor_id, c.vec_id AS neighbor_id,
-                 round(list_cosine_similarity(a.ev, c.ev), 6) AS cos_sim
-          FROM v a JOIN v c USING (bucket)
-          WHERE a.vec_id != c.vec_id
-        ),
-        topk AS (
-          SELECT neighbor_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY anchor_id
-                      ORDER BY cos_sim DESC, neighbor_id) AS rnk
-            FROM scored
-          ) WHERE rnk <= 5
-        ),
-        occ AS (
-          SELECT CAST(coalesce(cnt, 0) AS BIGINT) AS nk
-          FROM embeddings e LEFT JOIN (
-            SELECT neighbor_id, count(*) AS cnt FROM topk GROUP BY 1
-          ) t ON e.vec_id = t.neighbor_id
-        ),
-        m AS (
-          SELECT CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(nk) AS BIGINT) AS s1,
-                 CAST(sum(nk * nk) AS BIGINT) AS s2,
-                 CAST(sum(nk * nk * nk) AS BIGINT) AS s3,
-                 CAST(max(nk) AS BIGINT) AS max_k_occ,
-                 CAST(sum(CASE WHEN nk = 0 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_orphans
-          FROM occ
-        )
-        SELECT n AS n_vectors, n_orphans, max_k_occ,
-               round(s1 * 1.0 / n, 6) AS mean_k_occ,
-               CASE WHEN (s2 * 1.0 / n - (s1 * 1.0 / n) * (s1 * 1.0 / n)) > 0
-                    THEN round(
-                      (s3 * 1.0 / n
-                       - 3.0 * (s1 * 1.0 / n) * (s2 * 1.0 / n)
-                       + 2.0 * (s1 * 1.0 / n) * (s1 * 1.0 / n) * (s1 * 1.0 / n))
-                      / ((s2 * 1.0 / n - (s1 * 1.0 / n) * (s1 * 1.0 / n))
-                         * sqrt(s2 * 1.0 / n - (s1 * 1.0 / n) * (s1 * 1.0 / n))),
-                      6)
-               END AS skew_k_occ
-        FROM m
-        """
-    ).df().iloc[0].to_dict()
-    for c in ("n_vectors", "n_orphans", "max_k_occ"):
-        assert got[c] == int(want[c]), c
-    assert got["mean_k_occ"] == pytest.approx(want["mean_k_occ"], abs=2e-6)
-    assert got["skew_k_occ"] == pytest.approx(want["skew_k_occ"], abs=2e-6)
 
 
 def test_hubness_planted_hub(spark):

@@ -1,10 +1,10 @@
-"""r12 staged operators (register r13): DuckDB differential tests +
-planted-property checks for watermark_greenlist_score,
-quality_rank_normalize, ngram_containment_pairs, sequence_packing_plan,
-doremi_domain_weights, and the image dHash near-dup path — the same
-pre-registration gauntlet every staged cohort runs (oracle parity
-proven HERE, so registration is a catalog-entry move, not new
-verification surface)."""
+"""Planted-property, edge-case and contract tests for the operators staged
+in r12 (watermark_greenlist_score, quality_rank_normalize,
+ngram_containment_pairs, sequence_packing_plan, doremi_domain_weights
+and the image dHash near-dup path), plus the dHash pair differential
+over the whole corpus (the registry runs the doc_id % 5 = 3 slice). Each
+registered query's oracle differential is
+tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
@@ -16,12 +16,7 @@ from datapipeline_spike_spark.plans.registry import load
 
 SF = "/root/testdata/sf0.001"
 
-_SQL_TOKS = (
-    "list_filter(regexp_split_to_array(lower({c}), '[^a-z0-9'']+'),"
-    " t -> t != '')"
-)
 _SQL_U01 = "(('0x' || substr(md5({k}), 1, 8))::BIGINT / 4294967296.0)"
-_SQL_U01_DOC = _SQL_U01.format(k="CAST(doc_id AS VARCHAR)")
 
 
 def _con():
@@ -33,56 +28,6 @@ def _con():
 
 
 # --- watermark_greenlist_score --------------------------------------------------
-
-
-def test_watermark_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.text_stats import (
-        watermark_greenlist_score,
-    )
-
-    got = {
-        r["doc_id"]: r.asDict()
-        for r in watermark_greenlist_score(
-            load(spark, SF, "documents")
-        ).collect()
-    }
-    toks = _SQL_TOKS.format(c="text")
-    want = _con().execute(
-        f"""
-        WITH t AS (SELECT doc_id, {toks} AS t FROM documents),
-        g AS (
-          SELECT doc_id, len(t) AS n_tokens,
-                 CASE WHEN len(t) >= 2 THEN
-                   list_sum(list_transform(range(1, len(t)), i ->
-                     CASE WHEN substr(md5(t[i] || '#' || t[i+1]), 8, 1)
-                          IN ('0','2','4','6','8','a','c','e')
-                          THEN 1 ELSE 0 END))
-                 ELSE 0 END AS n_green
-          FROM t
-        )
-        SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-               CAST(greatest(n_tokens - 1, 0) AS BIGINT) AS n_scored,
-               CAST(n_green AS BIGINT) AS n_green,
-               CASE WHEN n_tokens >= 2
-                    THEN round(n_green * 1.0 / (n_tokens - 1), 6) END
-                 AS green_rate,
-               CASE WHEN n_tokens >= 2
-                    THEN round((n_green - 0.5 * (n_tokens - 1))
-                               / sqrt((n_tokens - 1) * 0.25), 6) END
-                 AS z_score
-        FROM g
-        """
-    ).df()
-    assert len(got) == len(want)
-    for _, w in want.iterrows():
-        g = got[w["doc_id"]]
-        for c in ("n_tokens", "n_scored", "n_green"):
-            assert g[c] == int(w[c]), (w["doc_id"], c)
-        for c in ("green_rate", "z_score"):
-            if g[c] is None:
-                assert w["n_tokens"] < 2
-            else:
-                assert g[c] == pytest.approx(w[c], abs=2e-6), (w["doc_id"], c)
 
 
 def test_watermark_planted_semantics(spark):
@@ -119,48 +64,6 @@ def test_watermark_planted_semantics(spark):
 
 
 # --- quality_rank_normalize -----------------------------------------------------
-
-
-def test_rank_normalize_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.quality import (
-        quality_rank_normalize,
-    )
-    from datapipeline_spike_spark.operators.sampling import hash_u01
-
-    d = load(spark, SF, "documents").select(
-        "doc_id", "source", hash_u01("doc_id").alias("score")
-    )
-    got = {
-        r["doc_id"]: r.asDict()
-        for r in quality_rank_normalize(d, "score", "source").collect()
-    }
-    want = _con().execute(
-        f"""
-        WITH v AS (
-          SELECT doc_id, source, {_SQL_U01_DOC} AS score,
-                 round({_SQL_U01_DOC}, 4) AS b
-          FROM documents
-        ),
-        h AS (SELECT source, b, count(*) AS n FROM v GROUP BY 1, 2),
-        sw AS (
-          SELECT source, b, n,
-                 sum(n) OVER (PARTITION BY source ORDER BY b) - n AS below,
-                 sum(n) OVER (PARTITION BY source) AS total
-          FROM h
-        )
-        SELECT v.doc_id, v.source, v.score,
-               CAST(total AS BIGINT) AS n_group,
-               round((below + 0.5 * n) / total, 6) AS rank_pct
-        FROM v JOIN sw ON v.source = sw.source AND v.b = sw.b
-        """
-    ).df()
-    assert len(got) == len(want)
-    for _, w in want.iterrows():
-        g = got[w["doc_id"]]
-        assert g["source"] == w["source"]
-        assert g["n_group"] == int(w["n_group"])
-        assert g["score"] == pytest.approx(w["score"], abs=1e-12)
-        assert g["rank_pct"] == pytest.approx(w["rank_pct"], abs=2e-6)
 
 
 def test_rank_normalize_planted_properties(spark):
@@ -202,76 +105,6 @@ _SQL_PAGES_QUOTE = """
       FROM documents d LEFT JOIN documents q ON q.doc_id = d.doc_id - 1
     )
 """
-
-
-def test_containment_matches_duckdb(spark):
-    """Planted quoting corpus: every doc_id % 7 == 3 page embeds its
-    predecessor's full text — high containment, low Jaccard — vs a
-    full DuckDB replay of the inverted-index pair generation including
-    the scale-derived df cap (greatest(16, ceil(0.02 * n_docs)))."""
-    from datapipeline_spike_spark.operators.dedup import (
-        ngram_containment_pairs,
-    )
-
-    d = load(spark, SF, "documents")
-    q = d.select((F.col("doc_id") + 1).alias("doc_id"), F.col("text").alias("_q"))
-    pages = d.join(q, "doc_id", "left").select(
-        "doc_id",
-        F.when(
-            (F.col("doc_id") % 7 == 3) & F.col("_q").isNotNull(),
-            F.concat("text", F.lit(" "), "_q"),
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    got = {
-        (r["doc_id_a"], r["doc_id_b"]): r.asDict()
-        for r in ngram_containment_pairs(pages).collect()
-    }
-    toks = _SQL_TOKS.format(c="text")
-    want = _con().execute(
-        f"""
-        WITH {_SQL_PAGES_QUOTE},
-        t AS (
-          SELECT doc_id,
-                 CASE WHEN len(toks) >= 3 THEN list_distinct(list_transform(
-                   range(1, len(toks) - 1),
-                   i -> array_to_string(toks[i:i+2], ' ')))
-                 ELSE [] END AS sh
-          FROM (SELECT doc_id, {toks} AS toks FROM pages)
-        ),
-        ex AS (SELECT doc_id, md5(unnest(sh)) AS h FROM t),
-        freq AS (SELECT h, count(*) AS df FROM ex GROUP BY 1),
-        cap AS (SELECT greatest(16, least(
-                    CAST(ceil(0.02 * count(*)) AS BIGINT), 65536))
-                  AS c FROM pages),
-        kept AS (SELECT doc_id, ex.h FROM ex JOIN freq USING (h), cap
-                 WHERE df <= cap.c),
-        sizes AS (SELECT doc_id, count(*) AS sz FROM kept GROUP BY 1),
-        common AS (
-          SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
-                 count(*) AS n_common
-          FROM kept a JOIN kept b ON a.h = b.h AND a.doc_id < b.doc_id
-          GROUP BY 1, 2 HAVING count(*) >= 3
-        )
-        SELECT doc_id_a, doc_id_b, CAST(n_common AS BIGINT) AS n_common,
-               CAST(sa.sz AS BIGINT) AS size_a, CAST(sb.sz AS BIGINT) AS size_b,
-               round(n_common * 1.0 / sa.sz, 6) AS containment_a,
-               round(n_common * 1.0 / sb.sz, 6) AS containment_b,
-               round(greatest(n_common * 1.0 / sa.sz,
-                              n_common * 1.0 / sb.sz), 6) AS max_containment
-        FROM common
-        JOIN sizes sa ON sa.doc_id = doc_id_a
-        JOIN sizes sb ON sb.doc_id = doc_id_b
-        WHERE greatest(n_common * 1.0 / sa.sz, n_common * 1.0 / sb.sz) >= 0.5
-        """
-    ).df()
-    assert len(got) == len(want)
-    assert len(got) > 0  # the quoting plant produced real pairs
-    for _, w in want.iterrows():
-        g = got[(w["doc_id_a"], w["doc_id_b"])]
-        for c in ("n_common", "size_a", "size_b"):
-            assert g[c] == int(w[c]), (w["doc_id_a"], w["doc_id_b"], c)
-        for c in ("containment_a", "containment_b", "max_containment"):
-            assert g[c] == pytest.approx(w[c], abs=2e-6)
 
 
 def test_containment_planted_semantics(spark):
@@ -322,51 +155,6 @@ def test_containment_planted_semantics(spark):
 # --- sequence_packing_plan ------------------------------------------------------
 
 
-def test_packing_matches_duckdb(spark):
-    """The two-phase bucketed cumsum equals the naive global running
-    sum exactly — the differential IS the scale-shape proof."""
-    from datapipeline_spike_spark.functions.text import tokens
-    from datapipeline_spike_spark.operators.sampling import (
-        sequence_packing_plan,
-    )
-
-    d = load(spark, SF, "documents").select(
-        "doc_id", F.size(tokens("text")).alias("tk")
-    )
-    got = {
-        r["doc_id"]: r.asDict()
-        for r in sequence_packing_plan(d, "tk").collect()
-    }
-    toks = _SQL_TOKS.format(c="text")
-    want = _con().execute(
-        f"""
-        WITH d AS (
-          SELECT doc_id, len({toks}) AS tk, {_SQL_U01_DOC} AS u
-          FROM documents
-        ),
-        o AS (
-          SELECT doc_id, tk,
-                 sum(tk) OVER (ORDER BY u, doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tk
-                   AS off
-          FROM d
-        )
-        SELECT doc_id, CAST(tk AS BIGINT) AS n_tokens,
-               CAST(off AS BIGINT) AS pack_offset,
-               CAST(off // 2048 AS BIGINT) AS first_seq,
-               CAST(CASE WHEN tk > 0
-                         THEN (off + tk - 1) // 2048 - off // 2048 + 1
-                         ELSE 0 END AS BIGINT) AS n_seqs_spanned
-        FROM o
-        """
-    ).df()
-    assert len(got) == len(want)
-    for _, w in want.iterrows():
-        g = got[w["doc_id"]]
-        for c in ("n_tokens", "pack_offset", "first_seq", "n_seqs_spanned"):
-            assert g[c] == int(w[c]), (w["doc_id"], c)
-
-
 def test_packing_planted_properties(spark):
     """Offsets tile the stream exactly (sorted offsets = cumsum of
     sizes, no gaps/overlaps); a doc straddling a seq_len boundary spans
@@ -396,64 +184,6 @@ def test_packing_planted_properties(spark):
 
 
 # --- doremi_domain_weights ------------------------------------------------------
-
-
-def _sql_doremi(eta: float = 0.1, iters: int = 8) -> str:
-    chain = f"""
-    WITH per AS (
-      SELECT source AS d, CAST(count(*) AS BIGINT) AS n,
-             round(avg(CAST(length(text) AS DOUBLE)), 6) AS loss
-      FROM documents GROUP BY 1
-    ),
-    base AS (
-      SELECT list(d ORDER BY d) AS ds, list(n ORDER BY d) AS ns,
-             list(loss ORDER BY d) AS ls
-      FROM per
-    ),
-    s0 AS (
-      SELECT ds, ns, ls, list_max(ls) AS lm,
-             list_transform(ls, x -> round(1.0 / len(ls), 6)) AS a
-      FROM base
-    )"""
-    for t in range(iters):
-        chain += f""",
-    s{t}u AS (
-      SELECT *, list_transform(range(1, len(a) + 1),
-                 i -> a[i] * exp({eta} * (ls[i] - lm))) AS u
-      FROM s{t}
-    ),
-    s{t}s AS (SELECT *, list_sum(u) AS s FROM s{t}u),
-    s{t + 1} AS (
-      SELECT ds, ns, ls, lm, list_transform(u, x -> round(x / s, 6)) AS a
-      FROM s{t}s
-    )"""
-    return chain + f"""
-    SELECT unnest(ds) AS source, unnest(ns) AS n_docs,
-           unnest(ls) AS mean_loss, unnest(a) AS weight
-    FROM s{iters}
-    """
-
-
-def test_doremi_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.sampling import (
-        doremi_domain_weights,
-    )
-
-    d = load(spark, SF, "documents").select(
-        "source", F.length("text").alias("loss")
-    )
-    got = {
-        r["source"]: r.asDict()
-        for r in doremi_domain_weights(d, "source", "loss").collect()
-    }
-    want = _con().execute(_sql_doremi()).df()
-    assert len(got) == len(want)
-    for _, w in want.iterrows():
-        g = got[w["source"]]
-        assert g["n_docs"] == int(w["n_docs"])
-        assert g["mean_loss"] == pytest.approx(w["mean_loss"], abs=2e-6)
-        assert g["weight"] == pytest.approx(w["weight"], abs=2e-6)
-    assert sum(r["weight"] for r in got.values()) == pytest.approx(1.0, abs=1e-4)
 
 
 def test_doremi_planted_dynamics(spark):

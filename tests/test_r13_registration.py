@@ -1,59 +1,16 @@
-"""r14 registration gate: the six r12-staged operators are now REGISTRY
-entries (plans/catalog_r13). This keeps running the SAME differential
-comparison the pre-handoff gate uses (tools/check_oracle.compare) —
-against the REGISTRY entries, so the local evidence survives the move
-(the r9/r11/r12 precedent) — plus rotation/head invariants for the r14
-rotation and the registered-form sanity floors (the dhash slice must
-produce real pairs; doremi weights must be finite and normalized)."""
+"""Contract tests for the queries registered in plans/catalog_r13:
+registered-form sanity floors (the dhash slice must produce real pairs;
+doremi weights must be finite and normalized; the containment plant must
+produce quote pairs). Each registered query's oracle differential is
+tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
 import math
 
-import duckdb
 import pytest
-from check_oracle import compare
 
-from datapipeline_spike_spark.plans import (  # noqa: F401  (imports catalog_r13)
-    REGISTRY,
-    rotation_preflight,
-)
-from datapipeline_spike_spark.plans.catalog_r13 import R13_REGISTERED
-from datapipeline_spike_spark.plans.registry import TABLES
-
-
-@pytest.fixture(scope="module")
-def oracle_con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
-
-def test_r13_moves_are_all_registered():
-    assert len(R13_REGISTERED) == 6
-    missing = [n for n in R13_REGISTERED if n not in REGISTRY]
-    assert not missing, missing
-
-
-def test_r13_moves_remain_placed_by_the_rotation():
-    """The r14 'head leads with the six' pin retired with the r15
-    rotation (the r12-gate precedent); what must stay true forever:
-    all six remain registered, placed, and the rotation is sound."""
-    placed = set(REGISTRY)
-    assert set(R13_REGISTERED) <= placed
-    assert rotation_preflight() == []
-
-
-@pytest.mark.parametrize("name", sorted(R13_REGISTERED))
-def test_registered_query_matches_oracle(spark, sf_dir, oracle_con, name):
-    q = REGISTRY[name]
-    sdf = q.spark(spark, sf_dir).toPandas()
-    assert q.oracle is not None  # all six ship full-value oracles
-    odf = oracle_con.execute(q.oracle).df()
-    problems = compare(name, sdf, odf)
-    assert not problems, problems
+from datapipeline_spike_spark.plans import REGISTRY
 
 
 def test_dhash_registered_slice_is_not_vacuous(spark, sf_dir):

@@ -1,106 +1,25 @@
-"""r14 staged operators, WAVE 2 (register r16 — the r15 head budget is
-fully committed, plans/__init__.py r15 notes): DuckDB differential
-tests + planted-property checks for pagerank_host_authority,
-code_detect_profile, license_detect_profile, matryoshka_recall_at_k,
-audio_vad_segments, and curriculum_phase_plan — the same
-pre-registration gauntlet every staged cohort runs (oracle parity
-proven HERE, so registration is a catalog-entry move)."""
+"""Planted-property, literal-graph and plan-shape tests for the operators
+staged in r14 waves 2-7 (pagerank_host_authority, the code and license
+detectors, matryoshka_recall_at_k, audio_vad_segments,
+curriculum_phase_plan, video_scene_cuts, crawl_frontier_priority,
+anchor_text_stats, span_corruption_plan, label propagation,
+vocab_overlap_matrix, minhash_band_tuning, triangle_clustering,
+hybrid_rrf_retrieval, chat_turn_stats, dpo_pair_plan). Each registered
+query's oracle differential is
+tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from datapipeline_spike_spark.plans import REGISTRY
 from datapipeline_spike_spark.plans.registry import load
 
 SF = "/root/testdata/sf0.001"
 
-_SQL_TOKS = (
-    "list_filter(regexp_split_to_array(lower({c}), '[^a-z0-9'']+'),"
-    " t -> t != '')"
-)
-
-
-def _con():
-    con = duckdb.connect()
-    for t in ("documents", "embeddings"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    return con
-
 
 # --- pagerank_host_authority --------------------------------------------------
-
-_SQL_PR_GRAPH = """
-    e AS (
-      SELECT DISTINCT doc_id % 64 AS src,
-             ((doc_id % 64) * (doc_id % 64) + j * 13 + 1) % 64 AS dst
-      FROM documents, (SELECT unnest(range(0, 3)) AS j)
-      WHERE doc_id % 64
-            != ((doc_id % 64) * (doc_id % 64) + j * 13 + 1) % 64
-    ),
-    v AS (SELECT src AS host FROM e UNION SELECT dst FROM e),
-    od AS (SELECT src AS host, count(*) AS outd FROM e GROUP BY 1),
-    ig AS (SELECT dst AS host, count(*) AS ind FROM e GROUP BY 1),
-    b AS (SELECT v.host, coalesce(od.outd, 0) AS outd,
-                 coalesce(ig.ind, 0) AS ind
-          FROM v LEFT JOIN od USING (host) LEFT JOIN ig USING (host)),
-    nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM b)
-"""
-
-
-def _sql_pr_iter(k: int) -> str:
-    """r0 -> r{k} WITH-chain layers replaying operators.graph.pagerank:
-    per iteration one dangling 1-row aggregate, one contribution
-    aggregate over in-edges, one damped update."""
-    parts = ["r0 AS (SELECT host, outd, 1.0 / nn.n AS rank FROM b, nn)"]
-    for i in range(1, k + 1):
-        p = i - 1
-        parts.append(
-            f"d{i} AS (SELECT coalesce(sum(rank), 0) AS dang FROM r{p} "
-            f"WHERE outd = 0)"
-        )
-        parts.append(
-            f"c{i} AS (SELECT e.dst AS host, sum(r.rank / r.outd) AS m "
-            f"FROM e JOIN r{p} r ON e.src = r.host GROUP BY 1)"
-        )
-        parts.append(
-            f"r{i} AS (SELECT b.host, b.outd, "
-            f"(1 - 0.85) / nn.n + 0.85 * coalesce(c{i}.m, 0) "
-            f"+ 0.85 * d{i}.dang / nn.n AS rank "
-            f"FROM b LEFT JOIN c{i} USING (host), nn, d{i})"
-        )
-    return ",\n".join(parts)
-
-
-SQL_PAGERANK = f"""
-    WITH {_SQL_PR_GRAPH},
-    {_sql_pr_iter(3)}
-    SELECT b.host, round(r3.rank, 6) AS pagerank,
-           CAST(b.outd AS BIGINT) AS out_degree,
-           CAST(b.ind AS BIGINT) AS in_degree
-    FROM b JOIN r3 USING (host)
-"""
-
-
-def test_pagerank_host_authority_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.graph import (
-        host_link_graph,
-        pagerank,
-    )
-
-    got = {
-        r["host"]: r.asDict()
-        for r in pagerank(host_link_graph(load(spark, SF, "documents")))
-        .collect()
-    }
-    want = _con().execute(SQL_PAGERANK).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[w["host"]]
-        assert g["pagerank"] == pytest.approx(w["pagerank"], abs=1.5e-6)
-        assert g["out_degree"] == int(w["out_degree"])
-        assert g["in_degree"] == int(w["in_degree"])
 
 
 def test_pagerank_literal_graph_vs_reference(spark):
@@ -150,19 +69,6 @@ SNIPPET_C = (
     "printf(\"%d\", x); return (x == 3); }"
 )
 
-_SQL_CODE_PLANT = f"""
-    planted AS (
-      SELECT doc_id, source,
-             CASE WHEN doc_id % 7 = 2 THEN text || ' ' ||
-                  CASE doc_id % 3
-                    WHEN 0 THEN '{SNIPPET_PY}'
-                    WHEN 1 THEN '{SNIPPET_JS}'
-                    ELSE '{SNIPPET_C}' END
-                  ELSE text END AS text
-      FROM documents
-    )
-"""
-
 
 def _code_planted(spark):
     d = load(spark, SF, "documents")
@@ -182,62 +88,6 @@ def _code_planted(spark):
         .otherwise(F.col("text"))
         .alias("text"),
     )
-
-
-SQL_CODE_DETECT = f"""
-    WITH {_SQL_CODE_PLANT},
-    per_doc AS (
-      SELECT source,
-             length(text) AS nc,
-             length(text) - length(translate(text, '{{}};=<>#()', '')) AS sym,
-             len(regexp_extract_all(lower(text),
-                 '\\b(def|import|class|lambda|elif)\\b')) AS kpy,
-             len(regexp_extract_all(lower(text),
-                 '\\b(function|var|const|let)\\b')) AS kjs,
-             len(regexp_extract_all(lower(text),
-                 '(#include|\\bprintf\\b|\\bvoid\\b|\\bint main\\b)')) AS kc
-      FROM planted
-    ),
-    fam AS (
-      SELECT source, nc, sym,
-             CASE WHEN kpy >= kjs AND kpy >= kc AND kpy >= 2 THEN 'python'
-                  WHEN kjs >= kc AND kjs >= 2 THEN 'js'
-                  WHEN kc >= 2 THEN 'c'
-                  ELSE 'none' END AS family,
-             kpy + kjs + kc AS kw
-      FROM per_doc WHERE nc > 0
-    )
-    SELECT source, family,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(CASE WHEN family != 'none' AND sym * 50 > nc
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_code,
-           round(avg(sym * 1.0 / nc), 6) AS mean_symbol_ratio,
-           CAST(sum(kw) AS BIGINT) AS total_kw_hits
-    FROM fam GROUP BY 1, 2
-"""
-
-
-def test_code_detect_profile_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.detectors import (
-        code_detect_profile,
-    )
-
-    got = {
-        (r["source"], r["family"]): r.asDict()
-        for r in code_detect_profile(_code_planted(spark)).collect()
-    }
-    want = _con().execute(SQL_CODE_DETECT).df()
-    assert len(got) == len(want)
-    fams = {f for _, f in got}
-    assert {"python", "js", "c", "none"} <= fams
-    for _, w in want.iterrows():
-        g = got[(w["source"], w["family"])]
-        assert g["n_docs"] == int(w["n_docs"])
-        assert g["n_code"] == int(w["n_code"])
-        assert g["mean_symbol_ratio"] == pytest.approx(
-            w["mean_symbol_ratio"], abs=1.5e-6
-        )
-        assert g["total_kw_hits"] == int(w["total_kw_hits"])
 
 
 def test_code_detect_planted_families(spark):
@@ -266,55 +116,6 @@ def test_code_detect_planted_families(spark):
 
 
 # --- license_detect_profile -----------------------------------------------------
-
-_SQL_LIC_PLANT = """
-    planted AS (
-      SELECT doc_id, source,
-             CASE WHEN doc_id % 11 IN (1, 4, 8)
-                  THEN 'spdx-license-identifier: ' ||
-                       CASE doc_id % 5
-                         WHEN 0 THEN 'mit'
-                         WHEN 1 THEN 'apache-2.0'
-                         WHEN 2 THEN 'gpl-3.0-only'
-                         WHEN 3 THEN 'bsd-3-clause'
-                         ELSE 'cc-by-4.0' END || ' | ' || text
-                  ELSE text END AS text
-      FROM documents
-    )
-"""
-
-SQL_LICENSE_DETECT = f"""
-    WITH {_SQL_LIC_PLANT},
-    det AS (
-      SELECT source,
-             CASE
-               WHEN regexp_matches(lower(text),
-                    'gpl-3\\.0|gnu general public license') THEN 'gpl-3.0'
-               WHEN regexp_matches(lower(text),
-                    'apache-2\\.0|apache license') THEN 'apache-2.0'
-               WHEN regexp_matches(lower(text),
-                    'bsd-3-clause|bsd license') THEN 'bsd-3-clause'
-               WHEN regexp_matches(lower(text),
-                    'cc-by-4\\.0|creative commons') THEN 'cc-by-4.0'
-               WHEN regexp_matches(lower(text), '\\bmit\\b') THEN 'mit'
-               ELSE 'none' END AS license
-      FROM planted
-    ),
-    lab AS (
-      SELECT source, license,
-             license IN ('apache-2.0', 'bsd-3-clause', 'cc-by-4.0', 'mit')
-               AS perm
-      FROM det
-    ),
-    per_src AS (SELECT source, count(*) AS sd FROM lab GROUP BY 1)
-    SELECT l.source, l.license,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(CASE WHEN perm THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_permissive,
-           round(count(*) * 1.0 / any_value(sd), 6) AS source_share
-    FROM lab l JOIN per_src USING (source)
-    GROUP BY 1, 2
-"""
 
 
 def _lic_planted(spark):
@@ -346,27 +147,6 @@ def _lic_planted(spark):
     )
 
 
-def test_license_detect_profile_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.detectors import (
-        license_detect_profile,
-    )
-
-    got = {
-        (r["source"], r["license"]): r.asDict()
-        for r in license_detect_profile(_lic_planted(spark)).collect()
-    }
-    want = _con().execute(SQL_LICENSE_DETECT).df()
-    assert len(got) == len(want)
-    assert len({lic for _, lic in got}) == 6  # 5 licenses + none
-    for _, w in want.iterrows():
-        g = got[(w["source"], w["license"])]
-        assert g["n_docs"] == int(w["n_docs"])
-        assert g["n_permissive"] == int(w["n_permissive"])
-        assert g["source_share"] == pytest.approx(
-            w["source_share"], abs=1.5e-6
-        )
-
-
 def test_license_detect_priority_and_boundaries(spark):
     """Dual-mention texts classify to the FIRST (copyleft-first) match;
     'submit'/'limit' never fire the \\bmit\\b pattern."""
@@ -389,67 +169,6 @@ def test_license_detect_priority_and_boundaries(spark):
 
 # --- matryoshka_recall_at_k -----------------------------------------------------
 
-SQL_MATRYOSHKA = """
-    WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-               FROM embeddings WHERE vec_id < 5),
-    c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-          FROM embeddings),
-    bf AS (
-      SELECT query_id, neighbor_id
-      FROM (SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY round(list_cosine_similarity(qv, cv), 6) DESC,
-                              neighbor_id) AS rnk
-            FROM c, q WHERE neighbor_id != query_id)
-      WHERE rnk <= 5
-    ),
-    ms AS (SELECT CAST(unnest([8, 16]) AS INTEGER) AS m),
-    tr AS (
-      SELECT m, query_id, neighbor_id
-      FROM (SELECT ms.m, query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY ms.m, query_id
-                     ORDER BY round(list_cosine_similarity(
-                         list_slice(qv, 1, ms.m),
-                         list_slice(cv, 1, ms.m)), 6) DESC,
-                              neighbor_id) AS rnk
-            FROM c, q, ms WHERE neighbor_id != query_id)
-      WHERE rnk <= 5
-    )
-    SELECT ms.m AS m_dims, bf.query_id,
-           CAST(count(*) AS BIGINT) AS n_exact,
-           CAST(sum(CASE WHEN tr.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_hits,
-           round(sum(CASE WHEN tr.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                 * 1.0 / count(*), 6) AS recall_at_k
-    FROM bf CROSS JOIN ms
-    LEFT JOIN tr ON tr.m = ms.m AND tr.query_id = bf.query_id
-                AND tr.neighbor_id = bf.neighbor_id
-    GROUP BY 1, 2
-"""
-
-
-def test_matryoshka_recall_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.similarity import (
-        matryoshka_recall,
-    )
-
-    emb = load(spark, SF, "embeddings")
-    got = {
-        (r["m_dims"], r["query_id"]): r.asDict()
-        for r in matryoshka_recall(
-            emb, emb.filter(F.col("vec_id") < 5), k=5, dims=(8, 16)
-        ).collect()
-    }
-    want = _con().execute(SQL_MATRYOSHKA).df()
-    assert len(got) == len(want) == 10
-    for _, w in want.iterrows():
-        g = got[(w["m_dims"], w["query_id"])]
-        assert g["n_exact"] == int(w["n_exact"])
-        assert g["n_hits"] == int(w["n_hits"])
-        assert g["recall_at_k"] == pytest.approx(
-            w["recall_at_k"], abs=1.5e-6
-        )
-
 
 def test_matryoshka_full_width_is_perfect(spark):
     """Truncating to the full embedding width must reproduce the exact
@@ -467,53 +186,6 @@ def test_matryoshka_full_width_is_perfect(spark):
 
 
 # --- audio_vad_segments ---------------------------------------------------------
-
-SQL_VAD = """
-    WITH xs AS (
-      SELECT doc_id, i, i // 8 AS b,
-             CASE WHEN (doc_id * 13 + (i // 8) * 7) % 3 != 0
-                  THEN ((doc_id * 31 + i * 17) % 4001) - 2000
-                  ELSE ((doc_id * 31 + i * 17) % 64) - 32 END AS x
-      FROM (SELECT doc_id, unnest(range(0, 64 + (doc_id % 8) * 8)) AS i
-            FROM documents)
-    ),
-    fe AS (SELECT doc_id, b, sum(x * x) AS energy FROM xs GROUP BY 1, 2),
-    act AS (
-      SELECT doc_id, b, energy,
-             b - row_number() OVER (PARTITION BY doc_id ORDER BY b) AS grp
-      FROM fe WHERE energy > 16384
-    )
-    SELECT doc_id AS media_id,
-           CAST(min(b) AS BIGINT) AS seg_start_frame,
-           CAST(count(*) AS BIGINT) AS n_frames,
-           CAST(sum(energy) AS BIGINT) AS total_energy,
-           round(sum(energy) * 1.0 / count(*), 6) AS mean_energy
-    FROM act GROUP BY doc_id, grp
-"""
-
-
-def test_audio_vad_segments_match_duckdb(spark):
-    """The full tier — synthesized gated WAV, REAL RIFF decode, frame
-    energies, gaps-and-islands segmentation — vs a DuckDB replay from
-    the regenerated waveform (never the container)."""
-    from datapipeline_spike_spark.sources.multimodal import (
-        audio_vad_segments,
-        vad_media_from_documents,
-    )
-
-    got = {
-        (r["media_id"], r["seg_start_frame"]): r.asDict()
-        for r in audio_vad_segments(
-            vad_media_from_documents(load(spark, SF, "documents"))
-        ).collect()
-    }
-    want = _con().execute(SQL_VAD).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[(w["media_id"], w["seg_start_frame"])]
-        assert g["n_frames"] == int(w["n_frames"])
-        assert g["total_energy"] == int(w["total_energy"])
-        assert g["mean_energy"] == pytest.approx(w["mean_energy"], abs=1.5e-6)
 
 
 def test_audio_vad_planted_properties(spark):
@@ -570,51 +242,6 @@ def test_audio_vad_planted_properties(spark):
 
 
 # --- curriculum_phase_plan ------------------------------------------------------
-
-SQL_CURRICULUM = f"""
-    WITH t AS (SELECT source, doc_id,
-                      {_SQL_TOKS.format(c='text')} AS toks FROM documents),
-    s AS (SELECT source, doc_id, len(toks) AS nt,
-                 list_sum(list_transform(toks, x -> length(x))) AS sumlen
-          FROM t WHERE len(toks) > 0),
-    d AS (SELECT source, doc_id, nt,
-                 round(sumlen * 1.0 / nt, 6) AS diff FROM s),
-    p AS (SELECT *, ntile(4) OVER (PARTITION BY source
-                  ORDER BY diff ASC, doc_id ASC) AS phase FROM d),
-    plan AS (
-      SELECT source, phase,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(nt) AS BIGINT) AS token_budget,
-             round(avg(diff), 6) AS mean_difficulty
-      FROM p GROUP BY 1, 2
-    )
-    SELECT source, CAST(phase AS BIGINT) AS phase, n_docs, token_budget,
-           mean_difficulty,
-           CAST(row_number() OVER (ORDER BY phase, source) AS BIGINT)
-             AS schedule_pos
-    FROM plan
-"""
-
-
-def test_curriculum_phase_plan_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.curation import (
-        curriculum_phase_plan,
-    )
-
-    got = {
-        (r["source"], r["phase"]): r.asDict()
-        for r in curriculum_phase_plan(load(spark, SF, "documents")).collect()
-    }
-    want = _con().execute(SQL_CURRICULUM).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[(w["source"], w["phase"])]
-        assert g["n_docs"] == int(w["n_docs"])
-        assert g["token_budget"] == int(w["token_budget"])
-        assert g["mean_difficulty"] == pytest.approx(
-            w["mean_difficulty"], abs=1.5e-6
-        )
-        assert g["schedule_pos"] == int(w["schedule_pos"])
 
 
 def test_curriculum_planted_phases(spark):
@@ -777,69 +404,6 @@ def test_curriculum_plan_windows(spark):
 # same gauntlet: full DuckDB differential + planted properties.
 
 
-SQL_SCENE_CUTS = """
-    WITH fb AS (
-      SELECT doc_id, f, b,
-             ((doc_id * 131 + (f // 3) * 37) * 11 + b * 29) % 256 AS v
-      FROM (SELECT doc_id, unnest(range(0, 6 + (doc_id % 2) * 3)) AS f
-            FROM documents),
-           (SELECT unnest(range(0, 2)) AS b)
-    ),
-    d AS (
-      SELECT a.doc_id, a.f, sum(64 * abs(a.v - p.v)) AS diff
-      FROM fb a JOIN fb p
-        ON p.doc_id = a.doc_id AND p.f = a.f - 1 AND p.b = a.b
-      GROUP BY 1, 2
-    ),
-    fr AS (
-      SELECT fb.doc_id, fb.f, d.diff
-      FROM (SELECT DISTINCT doc_id, f FROM fb) fb
-      LEFT JOIN d ON d.doc_id = fb.doc_id AND d.f = fb.f
-    ),
-    m AS (
-      SELECT doc_id, f, diff,
-             (f = 0 OR diff > 0) AS is_cut,
-             sum(CASE WHEN f = 0 OR diff > 0 THEN 1 ELSE 0 END)
-               OVER (PARTITION BY doc_id ORDER BY f) AS shot
-      FROM fr
-    )
-    SELECT doc_id AS media_id,
-           CAST(shot - 1 AS BIGINT) AS shot_idx,
-           CAST(min(f) AS BIGINT) AS start_frame,
-           CAST(count(*) AS BIGINT) AS n_frames,
-           CAST(max(CASE WHEN is_cut THEN diff END) AS BIGINT)
-             AS cut_energy
-    FROM m GROUP BY doc_id, shot
-"""
-
-
-def test_video_scene_cuts_match_duckdb(spark):
-    """Scene-gated MJPEG synth -> REAL sample-table walk + baseline
-    JPEG decode -> per-frame diffs -> running-cut shots, vs a DuckDB
-    replay from the generative (seed, scene, block) pixel formula."""
-    from datapipeline_spike_spark.sources.multimodal import (
-        scene_media_from_documents,
-        video_scene_cuts,
-    )
-
-    got = {
-        (r["media_id"], r["shot_idx"]): r.asDict()
-        for r in video_scene_cuts(
-            scene_media_from_documents(load(spark, SF, "documents"))
-        ).collect()
-    }
-    want = _con().execute(SQL_SCENE_CUTS).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[(w["media_id"], w["shot_idx"])]
-        assert g["start_frame"] == int(w["start_frame"])
-        assert g["n_frames"] == int(w["n_frames"])
-        if w["cut_energy"] != w["cut_energy"]:  # NaN = shot 0
-            assert g["cut_energy"] is None
-        else:
-            assert g["cut_energy"] == int(w["cut_energy"])
-
-
 def test_video_scene_cuts_planted(spark):
     """3-frame scenes produce exactly n_frames/3 shots of 3 (when every
     boundary actually changes pixels — replayed in pure Python); a
@@ -893,49 +457,6 @@ def test_video_scene_cuts_planted(spark):
 
 # --- crawl_frontier_priority ----------------------------------------------------
 
-SQL_FRONTIER = f"""
-    WITH {_SQL_PR_GRAPH},
-    {_sql_pr_iter(3)},
-    pr AS (SELECT b.host, round(r3.rank, 6) AS pagerank
-           FROM b JOIN r3 USING (host)),
-    pages AS (SELECT doc_id % 64 AS host, doc_id % 40 AS path,
-                     doc_id AS id, CAST(1 + doc_id % 4 AS DOUBLE) AS depth
-              FROM documents),
-    fs AS (SELECT host, path, min(id) AS first FROM pages GROUP BY 1, 2),
-    fl AS (SELECT p.host, p.depth,
-                  CASE WHEN p.id != fs.first THEN 1 ELSE 0 END AS dup
-           FROM pages p JOIN fs USING (host, path)),
-    sig AS (SELECT host, CAST(count(*) AS BIGINT) AS n_pages,
-                   round(sum(dup) * 1.0 / count(*), 6) AS dup_rate,
-                   round(avg(depth), 6) AS mean_depth
-            FROM fl GROUP BY 1)
-    SELECT pr.host, pr.pagerank, sig.n_pages, sig.dup_rate,
-           sig.mean_depth,
-           round(pr.pagerank * (1 - sig.dup_rate) / sig.mean_depth, 6)
-             AS priority
-    FROM pr JOIN sig USING (host)
-"""
-
-
-def test_crawl_frontier_priority_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.graph import (
-        crawl_frontier_priority,
-    )
-
-    got = {
-        r["host"]: r.asDict()
-        for r in crawl_frontier_priority(
-            load(spark, SF, "documents")
-        ).collect()
-    }
-    want = _con().execute(SQL_FRONTIER).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[w["host"]]
-        assert g["n_pages"] == int(w["n_pages"])
-        for c in ("pagerank", "dup_rate", "mean_depth", "priority"):
-            assert g[c] == pytest.approx(w[c], abs=1.5e-6), c
-
 
 def test_crawl_frontier_internal_consistency(spark):
     """priority recomputes from the row's own published columns; dup
@@ -961,38 +482,6 @@ def test_crawl_frontier_internal_consistency(spark):
 
 
 # --- anchor_text_stats ----------------------------------------------------------
-
-SQL_ANCHORS = f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKS.format(c='text')} AS toks
-               FROM documents),
-    b AS (SELECT doc_id, toks, len(toks) AS nt FROM t WHERE len(toks) > 0),
-    l AS (
-      SELECT ((doc_id % 64) * (doc_id % 64) + j * 13 + 1) % 64 AS host,
-             toks[CAST((doc_id + j) % nt AS INT) + 1] AS anchor
-      FROM b, (SELECT unnest(range(0, 3)) AS j)
-    ),
-    c AS (SELECT host, anchor, CAST(count(*) AS BIGINT) AS n_links
-          FROM l GROUP BY 1, 2)
-    SELECT host, anchor, n_links, CAST(rank AS BIGINT) AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY host
-              ORDER BY n_links DESC, anchor) AS rank FROM c)
-    WHERE rank <= 3
-"""
-
-
-def test_anchor_text_stats_match_duckdb(spark):
-    from datapipeline_spike_spark.operators.graph import anchor_text_stats
-
-    got = {
-        (r["host"], r["rank"]): r.asDict()
-        for r in anchor_text_stats(load(spark, SF, "documents")).collect()
-    }
-    want = _con().execute(SQL_ANCHORS).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[(w["host"], w["rank"])]
-        assert g["anchor"] == w["anchor"]
-        assert g["n_links"] == int(w["n_links"])
 
 
 def test_anchor_text_planted(spark):
@@ -1020,45 +509,6 @@ def test_anchor_text_planted(spark):
 
 
 # --- span_corruption_plan -------------------------------------------------------
-
-SQL_SPAN_PLAN = f"""
-    WITH t AS (SELECT doc_id,
-                      CAST(len({_SQL_TOKS.format(c='text')}) AS BIGINT)
-                        AS n_tokens
-               FROM documents),
-    b AS (SELECT doc_id, n_tokens FROM t WHERE n_tokens >= 2),
-    p1 AS (SELECT doc_id, n_tokens,
-                  CAST(greatest(1, least(
-                      floor(n_tokens * 0.15 + 0.5), n_tokens - 1))
-                    AS BIGINT) AS noise_tokens
-           FROM b),
-    p2 AS (SELECT *, CAST(greatest(1,
-                  floor(noise_tokens / 3.0 + 0.5)) AS BIGINT) AS n_spans
-           FROM p1)
-    SELECT doc_id, n_tokens, noise_tokens, n_spans,
-           CAST(n_tokens - noise_tokens + n_spans + 1 AS BIGINT)
-             AS input_len,
-           CAST(noise_tokens + n_spans + 1 AS BIGINT) AS target_len
-    FROM p2
-"""
-
-
-def test_span_corruption_plan_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.packing import (
-        span_corruption_plan,
-    )
-
-    got = {
-        r["doc_id"]: r.asDict()
-        for r in span_corruption_plan(load(spark, SF, "documents")).collect()
-    }
-    want = _con().execute(SQL_SPAN_PLAN).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[w["doc_id"]]
-        for c in ("n_tokens", "noise_tokens", "n_spans", "input_len",
-                  "target_len"):
-            assert g[c] == int(w[c]), c
 
 
 def test_span_corruption_hand_cases(spark):
@@ -1138,50 +588,6 @@ def test_wave3_plan_shapes(spark):
 # minhash_band_tuning — same gauntlet.
 
 
-def _sql_lpa(k: int) -> str:
-    parts = [
-        """u AS (SELECT src AS a, dst AS b FROM e
-                 UNION SELECT dst, src FROM e),
-           l0 AS (SELECT DISTINCT a AS host, a AS label FROM u)"""
-    ]
-    for i in range(1, k + 1):
-        p = i - 1
-        parts.append(
-            f"""n{i} AS (SELECT u.a, l.label, count(*) AS c
-                 FROM u JOIN l{p} l ON u.b = l.host GROUP BY 1, 2),
-               l{i} AS (SELECT a AS host, label FROM
-                 (SELECT a, label, row_number() OVER (PARTITION BY a
-                    ORDER BY c DESC, label ASC) AS rn FROM n{i})
-                 WHERE rn = 1)"""
-        )
-    return ",\n".join(parts)
-
-
-SQL_LPA = f"""
-    WITH {_SQL_PR_GRAPH},
-    {_sql_lpa(3)}
-    SELECT host, label AS community FROM l3
-"""
-
-
-def test_label_propagation_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.graph import (
-        host_link_graph,
-        label_propagation_communities,
-    )
-
-    got = {
-        r["host"]: r["community"]
-        for r in label_propagation_communities(
-            host_link_graph(load(spark, SF, "documents"))
-        ).collect()
-    }
-    want = _con().execute(SQL_LPA).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        assert got[w["host"]] == w["community"], w["host"]
-
-
 def test_label_propagation_planted_communities(spark):
     """Two disjoint triangles each collapse to their min vertex id; the
     synchronous rounds replay a pure-Python reference on a path
@@ -1222,6 +628,9 @@ def test_label_propagation_planted_communities(spark):
         for r in label_propagation_communities(pdf).collect()
     }
     assert got2 == labels
+    # the registered form labels the host graph (a non-empty result)
+    reg = REGISTRY["label_propagation_communities"].spark(spark, SF)
+    assert reg.count() > 0
 
 
 def test_label_propagation_string_vertex_ids(spark):
@@ -1251,49 +660,6 @@ def test_label_propagation_string_vertex_ids(spark):
 
 # --- vocab_overlap_matrix -------------------------------------------------------
 
-SQL_VOCAB_OVERLAP = f"""
-    WITH c AS (
-      SELECT source, t, count(*) AS c
-      FROM (SELECT source, unnest({_SQL_TOKS.format(c='text')}) AS t
-            FROM documents)
-      GROUP BY 1, 2
-    ),
-    v AS (SELECT source, t FROM
-            (SELECT *, row_number() OVER (PARTITION BY source
-               ORDER BY c DESC, t ASC) AS r FROM c)
-          WHERE r <= 256),
-    sz AS (SELECT source, count(*) AS v FROM v GROUP BY 1),
-    i AS (SELECT a.source AS sa, b.source AS sb, count(*) AS n
-          FROM v a JOIN v b ON a.t = b.t AND a.source < b.source
-          GROUP BY 1, 2)
-    SELECT sa.source AS source_a, sb.source AS source_b,
-           CAST(sa.v AS BIGINT) AS v_a, CAST(sb.v AS BIGINT) AS v_b,
-           CAST(coalesce(i.n, 0) AS BIGINT) AS n_common,
-           round(coalesce(i.n, 0) * 1.0
-                 / (sa.v + sb.v - coalesce(i.n, 0)), 6) AS jaccard
-    FROM sz sa CROSS JOIN sz sb
-    LEFT JOIN i ON i.sa = sa.source AND i.sb = sb.source
-    WHERE sa.source < sb.source
-"""
-
-
-def test_vocab_overlap_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.text_stats import (
-        vocab_overlap_matrix,
-    )
-
-    got = {
-        (r["source_a"], r["source_b"]): r.asDict()
-        for r in vocab_overlap_matrix(load(spark, SF, "documents")).collect()
-    }
-    want = _con().execute(SQL_VOCAB_OVERLAP).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[(w["source_a"], w["source_b"])]
-        assert g["v_a"] == int(w["v_a"]) and g["v_b"] == int(w["v_b"])
-        assert g["n_common"] == int(w["n_common"])
-        assert g["jaccard"] == pytest.approx(w["jaccard"], abs=1.5e-6)
-
 
 def test_vocab_overlap_planted(spark):
     """Hand corpus: sources sharing half their vocab score 1/3
@@ -1320,40 +686,6 @@ def test_vocab_overlap_planted(spark):
 
 
 # --- minhash_band_tuning --------------------------------------------------------
-
-SQL_BAND_TUNING = """
-    SELECT CAST(128 AS BIGINT) AS n_hashes,
-           CAST(b.bands AS BIGINT) AS bands,
-           CAST(128 // b.bands AS BIGINT) AS rows_per_band,
-           round(CAST(i * 0.05 AS DOUBLE), 6) AS s,
-           round(1 - power(1 - power(i * 0.05, 128 // b.bands), b.bands), 6)
-             AS p_candidate,
-           round(power(1.0 / b.bands, 1.0 / (128 // b.bands)), 6)
-             AS approx_threshold
-    FROM (SELECT unnest(range(1, 129)) AS bands) b,
-         (SELECT unnest(range(1, 20)) AS i)
-    WHERE 128 % b.bands = 0
-"""
-
-
-def test_minhash_band_tuning_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.sketches import (
-        minhash_band_tuning,
-    )
-
-    got = {
-        (r["bands"], r["s"]): r.asDict()
-        for r in minhash_band_tuning(spark, n_hashes=128).collect()
-    }
-    want = _con().execute(SQL_BAND_TUNING).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[(w["bands"], w["s"])]
-        assert g["rows_per_band"] == int(w["rows_per_band"])
-        assert g["p_candidate"] == pytest.approx(w["p_candidate"], abs=1.5e-6)
-        assert g["approx_threshold"] == pytest.approx(
-            w["approx_threshold"], abs=1.5e-6
-        )
 
 
 def test_minhash_band_tuning_analytic_properties(spark):
@@ -1418,59 +750,6 @@ def test_wave4_plan_shapes(spark):
 # ============================ WAVE 5 =============================
 # triangle_clustering — same gauntlet.
 
-SQL_TRIANGLES = f"""
-    WITH {_SQL_PR_GRAPH},
-    u AS (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e),
-    deg AS (SELECT a AS host, count(*) AS degree FROM u GROUP BY 1),
-    lt AS (SELECT a, b FROM u WHERE a < b),
-    tri AS (
-      SELECT ab.a, ab.b, bc.b AS c
-      FROM lt ab JOIN lt bc ON bc.a = ab.b
-      JOIN lt ac ON ac.a = ab.a AND ac.b = bc.b
-    ),
-    cr AS (
-      SELECT host, count(*) AS triangles FROM (
-        SELECT a AS host FROM tri
-        UNION ALL SELECT b FROM tri
-        UNION ALL SELECT c FROM tri
-      ) GROUP BY 1
-    )
-    SELECT deg.host, CAST(deg.degree AS BIGINT) AS degree,
-           CAST(coalesce(cr.triangles, 0) AS BIGINT) AS triangles,
-           CASE WHEN deg.degree >= 2 THEN
-             round(2.0 * coalesce(cr.triangles, 0)
-                   / (deg.degree * (deg.degree - 1)), 6)
-           END AS clustering
-    FROM deg LEFT JOIN cr USING (host)
-"""
-
-
-def test_triangle_clustering_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.graph import (
-        host_link_graph,
-        triangle_clustering,
-    )
-
-    got = {
-        r["host"]: r.asDict()
-        for r in triangle_clustering(
-            host_link_graph(load(spark, SF, "documents"))
-        ).collect()
-    }
-    want = _con().execute(SQL_TRIANGLES).df()
-    assert len(got) == len(want) > 0
-    assert any(v["triangles"] > 0 for v in got.values())
-    for _, w in want.iterrows():
-        g = got[w["host"]]
-        assert g["degree"] == int(w["degree"])
-        assert g["triangles"] == int(w["triangles"])
-        if w["clustering"] != w["clustering"]:
-            assert g["clustering"] is None
-        else:
-            assert g["clustering"] == pytest.approx(
-                w["clustering"], abs=1.5e-6
-            )
-
 
 def test_triangle_clustering_planted(spark):
     """A 4-clique gives every vertex 3 triangles and clustering 1.0; a
@@ -1513,65 +792,6 @@ def test_triangle_plan_shape(spark):
 
 # ============================ WAVE 6 =============================
 # rrf_fuse / hybrid_rrf_retrieval — same gauntlet.
-
-SQL_HYBRID_RRF = """
-    WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-               FROM embeddings WHERE vec_id < 5),
-    c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-          FROM embeddings),
-    full_r AS (
-      SELECT query_id, neighbor_id, rnk AS rank
-      FROM (SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY round(list_cosine_similarity(qv, cv), 6) DESC,
-                              neighbor_id) AS rnk
-            FROM c, q WHERE neighbor_id != query_id)
-      WHERE rnk <= 10
-    ),
-    tr AS (
-      SELECT query_id, neighbor_id, rnk AS rank
-      FROM (SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY round(list_cosine_similarity(
-                         list_slice(qv, 1, 8), list_slice(cv, 1, 8)), 6)
-                       DESC, neighbor_id) AS rnk
-            FROM c, q WHERE neighbor_id != query_id)
-      WHERE rnk <= 10
-    ),
-    u AS (SELECT * FROM full_r UNION ALL SELECT * FROM tr),
-    fused AS (
-      SELECT query_id, neighbor_id,
-             CAST(count(*) AS BIGINT) AS n_systems,
-             round(sum(1.0 / (60 + rank)), 6) AS rrf_score
-      FROM u GROUP BY 1, 2
-    )
-    SELECT query_id, neighbor_id, n_systems, rrf_score,
-           CAST(fr AS BIGINT) AS fused_rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-              ORDER BY rrf_score DESC, neighbor_id) AS fr FROM fused)
-    WHERE fr <= 5
-"""
-
-
-def test_hybrid_rrf_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.similarity import (
-        hybrid_rrf_retrieval,
-    )
-
-    emb = load(spark, SF, "embeddings")
-    got = {
-        (r["query_id"], r["fused_rank"]): r.asDict()
-        for r in hybrid_rrf_retrieval(
-            emb, emb.filter(F.col("vec_id") < 5)
-        ).collect()
-    }
-    want = _con().execute(SQL_HYBRID_RRF).df()
-    assert len(got) == len(want) == 25
-    for _, w in want.iterrows():
-        g = got[(w["query_id"], w["fused_rank"])]
-        assert g["neighbor_id"] == w["neighbor_id"]
-        assert g["n_systems"] == int(w["n_systems"])
-        assert g["rrf_score"] == pytest.approx(w["rrf_score"], abs=1.5e-6)
 
 
 def test_rrf_fusion_properties(spark):
@@ -1627,21 +847,6 @@ def test_rrf_plan_shape(spark):
 # ============================ WAVE 7 =============================
 # chat_turn_stats / dpo_pair_plan (operators/sft.py) — same gauntlet.
 
-_SQL_CHAT_PLANT = """
-    chats AS (
-      SELECT doc_id,
-             array_to_string(list_transform(range(0, 2 + doc_id % 4),
-               i -> CASE WHEN (i + CASE WHEN doc_id % 5 = 0 THEN 1
-                                   ELSE 0 END) % 2 = 0
-                         THEN 'user: ' ELSE 'assistant: ' END
-                    || substr(text, 1 + i * 7, 40)), chr(10))
-             || CASE WHEN doc_id % 7 = 3
-                     THEN chr(10) || '### footer ad'
-                     ELSE '' END AS text
-      FROM documents
-    )
-"""
-
 
 def _chat_planted(spark):
     d = load(spark, SF, "documents")
@@ -1671,96 +876,6 @@ def _chat_planted(spark):
             ).otherwise(F.lit("")),
         ).alias("text"),
     )
-
-
-SQL_CHAT_STATS = f"""
-    WITH {_SQL_CHAT_PLANT},
-    lines AS (
-      SELECT doc_id, u.pos AS pos, u.line AS line
-      FROM (SELECT doc_id, unnest(list_transform(
-              list_filter(list_transform(
-                regexp_split_to_array(text, chr(10)), l -> trim(l)),
-                l -> l != ''),
-              (l, i) -> {{'pos': i - 1, 'line': l}})) AS u
-            FROM chats)
-    ),
-    cls AS (
-      SELECT doc_id, pos,
-             CASE WHEN lower(line) LIKE 'user: %' THEN 'user'
-                  WHEN lower(line) LIKE 'assistant: %' THEN 'assistant'
-                  ELSE 'noise' END AS role,
-             len(list_filter(regexp_split_to_array(lower(
-                 CASE WHEN lower(line) LIKE 'user: %' THEN substr(line, 7)
-                      WHEN lower(line) LIKE 'assistant: %'
-                        THEN substr(line, 12)
-                      ELSE line END),
-                 '[^a-z0-9'']+'), t -> t != '')) AS ntok
-      FROM lines
-    ),
-    seq AS (
-      SELECT doc_id, pos, role, ntok,
-             lag(role) OVER (PARTITION BY doc_id ORDER BY pos) AS prev,
-             row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS tn
-      FROM cls WHERE role != 'noise'
-    ),
-    agg AS (
-      SELECT doc_id,
-             CAST(count(*) AS BIGINT) AS n_turns,
-             CAST(sum(CASE WHEN role = 'user' THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_user,
-             CAST(sum(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_assistant,
-             bool_and(CASE WHEN tn = 1 THEN role = 'user' END)
-               AS starts_with_user,
-             bool_and(CASE WHEN prev IS NOT NULL THEN role != prev
-                           ELSE true END) AS strict_alternation,
-             max_by(role, pos) AS last_role,
-             CAST(sum(ntok) AS BIGINT) AS turn_tokens,
-             CAST(sum(CASE WHEN role = 'assistant' THEN ntok ELSE 0 END)
-               AS BIGINT) AS assistant_tokens
-      FROM seq GROUP BY 1
-    ),
-    noise AS (
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_noise_lines
-      FROM cls WHERE role = 'noise' GROUP BY 1
-    )
-    SELECT a.doc_id, n_turns, n_user, n_assistant,
-           coalesce(noise.n_noise_lines, 0) AS n_noise_lines,
-           starts_with_user, strict_alternation,
-           last_role = 'assistant' AS ends_with_assistant,
-           turn_tokens, assistant_tokens,
-           CASE WHEN turn_tokens > 0
-                THEN round(assistant_tokens * 1.0 / turn_tokens, 6)
-           END AS assistant_token_share,
-           starts_with_user AND strict_alternation
-             AND last_role = 'assistant' AND n_turns >= 2
-             AND turn_tokens >= 1 AS is_valid
-    FROM agg a LEFT JOIN noise USING (doc_id)
-"""
-
-
-def test_chat_turn_stats_match_duckdb(spark):
-    from datapipeline_spike_spark.operators.sft import chat_turn_stats
-
-    got = {
-        r["doc_id"]: r.asDict()
-        for r in chat_turn_stats(_chat_planted(spark)).collect()
-    }
-    want = _con().execute(SQL_CHAT_STATS).df()
-    assert len(got) == len(want) > 0
-    valid = sum(1 for _, w in want.iterrows() if w["is_valid"])
-    assert 0 < valid < len(want)  # the plant mixes valid and invalid
-    for _, w in want.iterrows():
-        g = got[w["doc_id"]]
-        for c in ("n_turns", "n_user", "n_assistant", "n_noise_lines",
-                  "turn_tokens", "assistant_tokens"):
-            assert g[c] == int(w[c]), (c, w["doc_id"])
-        for c in ("starts_with_user", "strict_alternation",
-                  "ends_with_assistant", "is_valid"):
-            assert g[c] == bool(w[c]), (c, w["doc_id"])
-        assert g["assistant_token_share"] == pytest.approx(
-            w["assistant_token_share"], abs=1.5e-6
-        )
 
 
 def test_chat_turn_stats_planted(spark):
@@ -1816,49 +931,6 @@ def test_chat_turn_stats_zero_token_transcript(spark):
     assert g2["turn_tokens"] == 2 and g2["assistant_tokens"] == 0
     assert g2["assistant_token_share"] == 0.0
     assert g2["is_valid"]
-
-
-SQL_DPO = """
-    WITH cand AS (
-      SELECT doc_id % 50 AS prompt_id, doc_id AS cand_id,
-             round(((doc_id * 37) % 1000) / 1000.0, 6) AS s
-      FROM documents
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY prompt_id
-                 ORDER BY s DESC, cand_id ASC) AS top,
-             row_number() OVER (PARTITION BY prompt_id
-                 ORDER BY s ASC, cand_id DESC) AS bot
-      FROM cand
-    )
-    SELECT t.prompt_id, t.cand_id AS chosen_id, b.cand_id AS rejected_id,
-           t.s AS chosen_score, b.s AS rejected_score,
-           round(t.s - b.s, 6) AS margin
-    FROM (SELECT * FROM ranked WHERE top = 1) t
-    JOIN (SELECT * FROM ranked WHERE bot = 1) b
-      USING (prompt_id)
-    WHERE t.cand_id != b.cand_id AND round(t.s - b.s, 6) >= 0.1
-"""
-
-
-def test_dpo_pair_plan_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.sft import dpo_pair_plan
-
-    cand = load(spark, SF, "documents").select(
-        (F.col("doc_id") % 50).alias("prompt_id"),
-        F.col("doc_id").alias("cand_id"),
-        (((F.col("doc_id") * 37) % 1000) / F.lit(1000.0)).alias("score"),
-    )
-    got = {
-        r["prompt_id"]: r.asDict() for r in dpo_pair_plan(cand).collect()
-    }
-    want = _con().execute(SQL_DPO).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[w["prompt_id"]]
-        assert g["chosen_id"] == w["chosen_id"]
-        assert g["rejected_id"] == w["rejected_id"]
-        assert g["margin"] == pytest.approx(w["margin"], abs=1.5e-6)
 
 
 def test_dpo_pair_plan_planted(spark):

@@ -1,57 +1,15 @@
-"""r15 registration gate: the eight r14-staged operators are now
-REGISTRY entries (plans/catalog_r15). This keeps running the SAME
-differential comparison the pre-handoff gate uses
-(tools/check_oracle.compare) — against the REGISTRY entries, so the
-local evidence survives the move (the r9/r11/r12/r13 precedent) —
-plus registered-form sanity floors (the audio slice must produce real
-same-family pairs; BT strengths must be normalized and rank-consistent
-with the planted truth; the substr quote plant must surface long
-runs)."""
+"""Contract tests for the queries registered in plans/catalog_r15:
+registered-form sanity floors (the audio slice must produce real same-
+family pairs; BT strengths must be normalized and rank-consistent with
+the planted truth; the substr quote plant must surface long runs). Each
+registered query's oracle differential is
+tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
-from check_oracle import compare
 
-from datapipeline_spike_spark.plans import (  # noqa: F401  (imports catalog_r15)
-    REGISTRY,
-    rotation_preflight,
-)
-from datapipeline_spike_spark.plans.catalog_r15 import R15_REGISTERED
-from datapipeline_spike_spark.plans.registry import TABLES
-
-
-@pytest.fixture(scope="module")
-def oracle_con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
-
-def test_r15_moves_are_all_registered():
-    assert len(R15_REGISTERED) == 8
-    missing = [n for n in R15_REGISTERED if n not in REGISTRY]
-    assert not missing, missing
-
-
-def test_r15_moves_remain_placed_by_the_rotation():
-    """All eight remain registered, so the computed order places them,
-    and the order is sound."""
-    assert set(R15_REGISTERED) <= set(REGISTRY)
-    assert rotation_preflight() == []
-
-
-@pytest.mark.parametrize("name", sorted(R15_REGISTERED))
-def test_registered_query_matches_oracle(spark, sf_dir, oracle_con, name):
-    q = REGISTRY[name]
-    sdf = q.spark(spark, sf_dir).toPandas()
-    assert q.oracle is not None  # all eight ship full-value oracles
-    odf = oracle_con.execute(q.oracle).df()
-    problems = compare(name, sdf, odf)
-    assert not problems, problems
+from datapipeline_spike_spark.plans import REGISTRY
 
 
 def test_audio_registered_slice_is_not_vacuous(spark, sf_dir):

@@ -1,57 +1,15 @@
-"""r16 registration gate: the six r14-staged WAVE-2 operators are now
-REGISTRY entries (plans/catalog_r16). This keeps running the SAME
-differential comparison the pre-handoff gate uses
-(tools/check_oracle.compare) — against the REGISTRY entries, so the
-local evidence survives the move (the r9/r11/r12/r13/r15 precedent) —
-plus registered-form sanity floors (the pagerank ranks must sum to 1
-over the host graph; the detector plants must surface every
-family/license; the VAD corpus must produce real multi-segment clips;
-the curriculum schedule must be phase-major)."""
+"""Contract tests for the queries registered in plans/catalog_r16:
+registered-form sanity floors (the pagerank ranks must sum to 1 over the
+host graph; the detector plants must surface every family/license; the
+VAD corpus must produce real multi-segment clips; the curriculum
+schedule must be phase-major). Each registered query's oracle
+differential is tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
-from check_oracle import compare
 
-from datapipeline_spike_spark.plans import (  # noqa: F401  (imports catalog_r16)
-    REGISTRY,
-    rotation_preflight,
-)
-from datapipeline_spike_spark.plans.catalog_r16 import R16_REGISTERED
-from datapipeline_spike_spark.plans.registry import TABLES
-
-
-@pytest.fixture(scope="module")
-def oracle_con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
-
-def test_r16_moves_are_all_registered():
-    assert len(R16_REGISTERED) == 6
-    missing = [n for n in R16_REGISTERED if n not in REGISTRY]
-    assert not missing, missing
-
-
-def test_r16_moves_remain_placed_by_the_rotation():
-    """All six remain registered, so the computed order places them,
-    and the order is sound."""
-    assert set(R16_REGISTERED) <= set(REGISTRY)
-    assert rotation_preflight() == []
-
-
-@pytest.mark.parametrize("name", sorted(R16_REGISTERED))
-def test_registered_query_matches_oracle(spark, sf_dir, oracle_con, name):
-    q = REGISTRY[name]
-    sdf = q.spark(spark, sf_dir).toPandas()
-    assert q.oracle is not None  # all six ship full-value oracles
-    odf = oracle_con.execute(q.oracle).df()
-    problems = compare(name, sdf, odf)
-    assert not problems, problems
+from datapipeline_spike_spark.plans import REGISTRY
 
 
 def test_pagerank_registered_mass_is_conserved(spark, sf_dir):

@@ -1,72 +1,16 @@
-"""r17 registration gate: the eleven r14-staged WAVE 3-7 operators are
-now REGISTRY entries (plans/catalog_r17). This keeps running the SAME
-differential comparison the pre-handoff gate uses
-(tools/check_oracle.compare) — against the REGISTRY entries, so the
-local evidence survives the move (the r9/r11/r12/r13/r15/r16
-precedent) — plus the LPA tie-break regression pins (VERDICT r16 item
-6: planted path-graph + disjoint-triangle + string-vertex replays must
-ride the registration gate before the hash freezes), and
-registered-form sanity floors for every new entry."""
+"""Contract tests for the queries registered in plans/catalog_r17: the LPA
+tie-break regression pins (planted path-graph, disjoint-triangle and
+string-vertex replays) and registered-form sanity floors for every
+entry. Each registered query's oracle differential is
+tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
 import math
 
-import duckdb
 import pytest
-from check_oracle import compare
 
-from datapipeline_spike_spark.plans import (  # noqa: F401  (imports catalog_r17)
-    REGISTRY,
-    rotation_preflight,
-)
-from datapipeline_spike_spark.plans.catalog_r17 import R17_REGISTERED
-from datapipeline_spike_spark.plans.registry import TABLES
-
-
-@pytest.fixture(scope="module")
-def oracle_con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
-
-# the persist() conversions (exact_substr_runs kept frame, dhash hash
-# frame — which audio_fingerprint_neardup reuses) must leave every
-# value identical, so they re-verify beside the eleven
-_PERSIST_CONVERTED = (
-    "exact_substr_runs",
-    "dhash_neardup_pairs",
-    "audio_fingerprint_neardup",
-)
-
-
-def test_r17_moves_are_all_registered():
-    assert len(R17_REGISTERED) == 11
-    missing = [n for n in R17_REGISTERED if n not in REGISTRY]
-    assert not missing, missing
-
-
-def test_r17_moves_remain_placed_by_the_rotation():
-    """All eleven and the three persist-converted queries remain
-    registered, so the computed order places them, and the order is
-    sound."""
-    assert set(R17_REGISTERED) | set(_PERSIST_CONVERTED) <= set(REGISTRY)
-    assert rotation_preflight() == []
-
-
-@pytest.mark.parametrize(
-    "name", sorted(set(R17_REGISTERED) | set(_PERSIST_CONVERTED))
-)
-def test_registered_query_matches_oracle(spark, sf_dir, oracle_con, name):
-    q = REGISTRY[name]
-    sdf = q.spark(spark, sf_dir).toPandas()
-    assert q.oracle is not None  # all fourteen ship full-value oracles
-    odf = oracle_con.execute(q.oracle).df()
-    problems = compare(name, sdf, odf)
-    assert not problems, problems
+from datapipeline_spike_spark.plans import REGISTRY
 
 
 # --- LPA tie-break regression pins (VERDICT r16 item 6) --------------------------

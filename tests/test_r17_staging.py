@@ -1,17 +1,13 @@
-"""r17 staged operators, WAVES 8 and 9 (wave 8 registers r18 — the
-r18 head budget is the fully-documented 50-name queue, so it registers
-by sliding queue tails per the budget rule; wave 9 registers r19):
-DuckDB differential tests + planted-property checks + plan pins for
-hits_hub_authority (Kleinberg 1999 — the hub/authority split PageRank
-conflates), knn_graph_edges (the corpus-wide kNN-graph table
-SemDeDup/NN-Descent curation stages consume), min_k_prob_profile (Shi
-2023 Min-K% Prob membership signal under the corpus unigram LM),
-kcore_membership (Seidman 1983 peeling — the core-vs-periphery
-split), distinct_ngram_diversity (Li 2016 distinct-n — the synthetic-
-data mode-collapse detector), and best_of_n_selection (the
-rejection-sampling prep table) — the same pre-registration gauntlet
-every staged cohort runs (oracle parity proven HERE, so registration
-is a catalog-entry move).
+"""Planted-property, edge-case and plan-shape tests for the operators
+staged in r17 waves 8 and 9: hits_hub_authority (Kleinberg 1999 — the
+hub/authority split PageRank conflates), knn_graph_edges (the
+corpus-wide kNN-graph table), min_k_prob_profile (Shi 2023 Min-K% Prob
+membership signal under the corpus unigram LM), kcore_membership
+(Seidman 1983 peeling — the core-vs-periphery split),
+distinct_ngram_diversity (Li 2016 distinct-n — the synthetic-data
+mode-collapse detector) and best_of_n_selection (the rejection-sampling
+prep table). Each registered query's oracle differential is
+tests/test_entry.py::test_query_matches_oracle.
 
 Registration notes (measured on these staged plans at sf0.001):
 - hits_hub_authority: BNLJ x(2K+1) — the 1-row vertex-count cross +
@@ -27,7 +23,6 @@ Registration notes (measured on these staged plans at sf0.001):
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -35,53 +30,8 @@ from datapipeline_spike_spark.plans.registry import load
 
 SF = "/root/testdata/sf0.001"
 
-_SQL_TOKS = (
-    "list_filter(regexp_split_to_array(lower({c}), '[^a-z0-9'']+'),"
-    " t -> t != '')"
-)
-
-
-def _con():
-    con = duckdb.connect()
-    for t in ("documents", "embeddings"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    return con
-
 
 # --- hits_hub_authority ---------------------------------------------------------
-
-# registered r18: the oracle SQL is single-sourced in
-# plans/catalog_r18 (the registration lifted it verbatim from this
-# module; the import direction flipped so staging and registration
-# can never drift)
-from datapipeline_spike_spark.plans.catalog_r18 import (  # noqa: E402
-    SQL_HITS,
-    SQL_KNN_GRAPH,
-    SQL_MIN_K,
-)
-from datapipeline_spike_spark.plans.catalog_r16 import _SQL_PR_GRAPH  # noqa: E402,F401
-
-
-def test_hits_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.graph import (
-        hits_hub_authority,
-        host_link_graph,
-    )
-
-    got = {
-        r["host"]: r.asDict()
-        for r in hits_hub_authority(
-            host_link_graph(load(spark, SF, "documents"))
-        ).collect()
-    }
-    want = _con().execute(SQL_HITS).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[w["host"]]
-        assert g["out_degree"] == int(w["out_degree"])
-        assert g["in_degree"] == int(w["in_degree"])
-        assert g["hub"] == pytest.approx(w["hub"], abs=1.5e-6)
-        assert g["authority"] == pytest.approx(w["authority"], abs=1.5e-6)
 
 
 def test_hits_literal_graph_vs_reference(spark):
@@ -130,25 +80,6 @@ def test_hits_literal_graph_vs_reference(spark):
 
 # --- knn_graph_edges -------------------------------------------------------------
 
-def test_knn_graph_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.similarity import (
-        knn_graph_edges,
-    )
-
-    got = {
-        (r["src_id"], r["rank"]): r.asDict()
-        for r in knn_graph_edges(
-            load(spark, SF, "embeddings"), dim=64, k=5
-        ).collect()
-    }
-    want = _con().execute(SQL_KNN_GRAPH).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[(w["src_id"], w["rank"])]
-        assert g["dst_id"] == w["dst_id"]
-        assert g["cos_sim"] == pytest.approx(w["cos_sim"], abs=1.5e-6)
-        assert g["is_mutual"] == bool(w["is_mutual"])
-
 
 def test_knn_graph_planted_clusters(spark):
     """Scaled copies of a vector share every hyperplane sign (same
@@ -184,26 +115,6 @@ def test_knn_graph_planted_clusters(spark):
 
 
 # --- min_k_prob_profile -----------------------------------------------------------
-
-def test_min_k_prob_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.text_stats import (
-        min_k_prob_profile,
-    )
-
-    got = {
-        r["doc_id"]: r.asDict()
-        for r in min_k_prob_profile(load(spark, SF, "documents")).collect()
-    }
-    want = _con().execute(SQL_MIN_K).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[w["doc_id"]]
-        assert g["n_tokens"] == int(w["n_tokens"])
-        assert g["k_tokens"] == int(w["k_tokens"])
-        assert g["avg_logprob"] == pytest.approx(w["avg_logprob"], abs=1.5e-6)
-        assert g["min_k_avg_logprob"] == pytest.approx(
-            w["min_k_avg_logprob"], abs=1.5e-6
-        )
 
 
 def test_min_k_prob_hand_corpus(spark):
@@ -339,41 +250,6 @@ def test_wave8_plan_shapes(spark):
 #   aggregates -> clean audit (no allowlist entries).
 
 
-# registered r19: the wave-9 oracle SQL is single-sourced in
-# plans/catalog_r19 (the registration lifted it verbatim from this
-# module; the import direction flipped so staging and registration
-# can never drift — the catalog_r18 precedent)
-from datapipeline_spike_spark.plans.catalog_r19 import (  # noqa: E402
-    SQL_BEST_OF_N,
-    SQL_DIVERSITY,
-    SQL_KCORE,
-)
-
-
-def test_kcore_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.graph import (
-        host_link_graph,
-        kcore_membership,
-    )
-
-    got = {
-        r["host"]: r.asDict()
-        for r in kcore_membership(
-            host_link_graph(load(spark, SF, "documents")), k=4
-        ).collect()
-    }
-    want = _con().execute(SQL_KCORE).df()
-    assert len(got) == len(want) > 0
-    # the peel must actually split the graph (core and periphery both
-    # non-empty) for the differential to be informative
-    in_core = sum(1 for _, w in want.iterrows() if w["in_kcore"])
-    assert 0 < in_core < len(want)
-    for _, w in want.iterrows():
-        g = got[w["host"]]
-        assert g["degree"] == int(w["degree"])
-        assert g["in_kcore"] == bool(w["in_kcore"]), w["host"]
-
-
 def test_kcore_planted_peel(spark):
     """A 4-clique with a path tail: the k=2 peel removes the leaf,
     then the exposed path vertex, and keeps exactly the clique (plus
@@ -405,28 +281,6 @@ def test_kcore_planted_peel(spark):
     # with budget the same path empties completely (a path has no 2-core)
     full = kcore_membership(pdf, k=2).collect()
     assert full and not any(r["in_kcore"] for r in full)
-
-
-def test_distinct_ngram_diversity_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.text_stats import (
-        distinct_ngram_diversity,
-    )
-
-    got = {
-        r["source"]: r.asDict()
-        for r in distinct_ngram_diversity(
-            load(spark, SF, "documents")
-        ).collect()
-    }
-    want = _con().execute(SQL_DIVERSITY).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[w["source"]]
-        for c in ("n_docs", "total_unigrams", "distinct_unigrams",
-                  "total_bigrams", "distinct_bigrams"):
-            assert g[c] == int(w[c]), (c, w["source"])
-        assert g["distinct_1"] == pytest.approx(w["distinct_1"], abs=1.5e-6)
-        assert g["distinct_2"] == pytest.approx(w["distinct_2"], abs=1.5e-6)
 
 
 def test_distinct_ngram_diversity_planted(spark):
@@ -474,28 +328,6 @@ def test_distinct_ngram_diversity_empty_source_is_null(spark):
     assert got["mono"]["total_bigrams"] == 0
     assert got["mono"]["distinct_2"] is None
     assert got["full"]["distinct_2"] == 1.0
-
-
-def test_best_of_n_matches_duckdb(spark):
-    from datapipeline_spike_spark.operators.sft import best_of_n_selection
-
-    cand = load(spark, SF, "documents").select(
-        (F.col("doc_id") % 50).alias("prompt_id"),
-        F.col("doc_id").alias("cand_id"),
-        (((F.col("doc_id") * 37) % 1000) / F.lit(1000.0)).alias("score"),
-    )
-    got = {
-        r["prompt_id"]: r.asDict()
-        for r in best_of_n_selection(cand).collect()
-    }
-    want = _con().execute(SQL_BEST_OF_N).df()
-    assert len(got) == len(want) > 0
-    for _, w in want.iterrows():
-        g = got[w["prompt_id"]]
-        assert g["n_candidates"] == int(w["n_candidates"])
-        assert g["best_id"] == w["best_id"]
-        for c in ("best_score", "mean_score", "std_score", "selection_gap"):
-            assert g[c] == pytest.approx(w[c], abs=1.5e-6), c
 
 
 def test_best_of_n_planted(spark):

@@ -1,54 +1,12 @@
-"""r19 registration gate: the three r17-staged WAVE 9 operators are
-now REGISTRY entries (plans/catalog_r19). This keeps running the SAME
-differential comparison the pre-handoff gate uses
-(tools/check_oracle.compare) — against the REGISTRY entries, so the
-local evidence survives the move (the r9..r18 precedent) — plus
-registered-form sanity floors for every new entry."""
+"""Contract tests for the queries registered in plans/catalog_r19:
+registered-form sanity floors for every entry. Each registered query's
+oracle differential is tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
-from check_oracle import compare
 
-from datapipeline_spike_spark.plans import (  # noqa: F401  (imports catalog_r19)
-    REGISTRY,
-    rotation_preflight,
-)
-from datapipeline_spike_spark.plans.catalog_r19 import R19_REGISTERED
-from datapipeline_spike_spark.plans.registry import TABLES
-
-
-@pytest.fixture(scope="module")
-def oracle_con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
-
-def test_r19_moves_are_all_registered():
-    assert len(R19_REGISTERED) == 3
-    missing = [n for n in R19_REGISTERED if n not in REGISTRY]
-    assert not missing, missing
-
-
-def test_r19_moves_remain_placed_by_the_rotation():
-    """All three remain registered, so the computed order places them,
-    and the order is sound."""
-    assert set(R19_REGISTERED) <= set(REGISTRY)
-    assert rotation_preflight() == []
-
-
-@pytest.mark.parametrize("name", sorted(R19_REGISTERED))
-def test_registered_query_matches_oracle(spark, sf_dir, oracle_con, name):
-    q = REGISTRY[name]
-    sdf = q.spark(spark, sf_dir).toPandas()
-    assert q.oracle is not None  # all three ship full-value oracles
-    odf = oracle_con.execute(q.oracle).df()
-    problems = compare(name, sdf, odf)
-    assert not problems, problems
+from datapipeline_spike_spark.plans import REGISTRY
 
 
 # --- registered-form sanity floors ------------------------------------------------

@@ -632,9 +632,17 @@ def test_ingest_dedup_releases_batch_pins(spark):
     import random
     import shutil
 
-    from datapipeline_spike_spark.cache import _cached_plans, _persistent_rdd_ids
+    from datapipeline_spike_spark.cache import (
+        _cached_plans,
+        _persistent_rdd_ids,
+        unpersist_all,
+    )
     from datapipeline_spike_spark.streaming.pipeline import ingest_with_dedup
 
+    # earlier tests' unreferenced pins may be released by Spark's
+    # ContextCleaner mid-test; start drained so the comparison below
+    # sees only this stream's pins
+    unpersist_all(spark, blocking=True)
     conf = "spark.datapipeline.materialize"
     prev = spark.conf.get(conf, None)
     spark.conf.set(conf, "persist")
