@@ -74,6 +74,13 @@ def quality_routed_write(
 MANIFEST_NAME = "_MANIFEST.json"
 
 
+def _write_manifest(dirpath: str, manifest: dict) -> None:
+    mtmp = os.path.join(dirpath, MANIFEST_NAME + ".tmp")
+    with open(mtmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(mtmp, os.path.join(dirpath, MANIFEST_NAME))
+
+
 def _leaf_manifest(dirpath: str) -> dict | None:
     p = os.path.join(dirpath, MANIFEST_NAME)
     if not os.path.exists(p):
@@ -103,7 +110,21 @@ def _retained_files(m: dict) -> set[str]:
     return set(m.get("previous_files", ()))
 
 
-def _live_files(dirpath: str, filenames: list[str]) -> list[str]:
+def _leaf_snapshot(dirpath: str) -> tuple[dict | None, list[str]]:
+    """A leaf's manifest and then its file listing, read in that order.
+
+    A reader takes every unnamed non-generation file for an append, so
+    the listing must not be older than the manifest: a listing taken
+    first can hold files of the generation that a compaction landing in
+    between drops from its retained window and deletes, and the newer
+    manifest no longer names them. Read manifest-first, every file the
+    manifest does not name is a real append (``compact_zone`` deletes
+    the dropped generation before it swaps the manifest)."""
+    manifest = _leaf_manifest(dirpath)
+    return manifest, os.listdir(dirpath)
+
+
+def _live_files(manifest: dict | None, filenames: list[str]) -> list[str]:
     """The data files a reader of this leaf should see: without a
     manifest, every NON-generation parquet file; with one, the
     manifest's generation PLUS any files appended since the manifest
@@ -115,15 +136,14 @@ def _live_files(dirpath: str, filenames: list[str]) -> list[str]:
     crashed between renaming its generation into place and writing the
     manifest — and must never be treated as live, or the duplicates it
     carries would be read (and baked in by the next compaction)."""
-    m = _leaf_manifest(dirpath)
     all_pq = sorted(f for f in filenames if f.endswith(".parquet"))
-    if m is None:
+    if manifest is None:
         return [f for f in all_pq if not _is_generation_file(f)]
-    cur, prev = set(m["files"]), _retained_files(m)
+    cur, prev = set(manifest["files"]), _retained_files(manifest)
     appended = [
         f for f in all_pq if f not in cur and f not in prev and not _is_generation_file(f)
     ]
-    return m["files"] + appended
+    return manifest["files"] + appended
 
 
 def read_zone(spark: SparkSession, lake_root: str, zone: str) -> DataFrame:
@@ -157,7 +177,7 @@ def read_zone(spark: SparkSession, lake_root: str, zone: str) -> DataFrame:
     # had landed — an inflated, torn view that a later consistent
     # read then "shrinks" from. The explicit list is snapshot-
     # consistent per leaf by construction (manifest and file list
-    # resolved together in _live_files). The py4j cost of shipping
+    # resolved together in _leaf_snapshot). The py4j cost of shipping
     # the path list is bounded by the same driver-side listing this
     # function already performs; a lakehouse-format metadata layer
     # remains the documented upgrade path at extreme file counts.
@@ -173,13 +193,14 @@ def zone_live_files(lake_root: str, zone: str) -> tuple[list[str], bool]:
     zone_root = os.path.join(lake_root, zone)
     paths: list[str] = []
     any_manifest = False
-    for dirpath, dirnames, filenames in os.walk(zone_root):
+    for dirpath, dirnames, _ in os.walk(zone_root):
         # never descend into in-progress staging: compaction temp dirs
         # (._compacting_*) or Spark's own _temporary commit area
         dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
-        if MANIFEST_NAME in filenames:
+        manifest, filenames = _leaf_snapshot(dirpath)
+        if manifest is not None:
             any_manifest = True
-        live = _live_files(dirpath, filenames)
+        live = _live_files(manifest, filenames)
         paths.extend(os.path.join(dirpath, f) for f in live)
     return paths, any_manifest
 
@@ -192,10 +213,11 @@ def _zone_walk(lake_root: str, zone: str) -> tuple[list[str], bool]:
     zone_root = os.path.join(lake_root, zone)
     paths: list[str] = []
     need_listing = False
-    for dirpath, dirnames, filenames in os.walk(zone_root):
+    for dirpath, dirnames, _ in os.walk(zone_root):
         dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
-        live = _live_files(dirpath, filenames)
-        if MANIFEST_NAME in filenames or len(live) != sum(
+        manifest, filenames = _leaf_snapshot(dirpath)
+        live = _live_files(manifest, filenames)
+        if manifest is not None or len(live) != sum(
             f.endswith(".parquet") for f in filenames
         ):
             need_listing = True
@@ -223,16 +245,19 @@ def compact_zone(
     1. the compacted generation is written beside the old files under
        unique ``g{N}-`` names (no path a reader could be holding is ever
        removed or renamed at this step);
-    2. ``_MANIFEST.json`` is replaced atomically (tmp + ``os.replace``)
-       to name the new generation as the leaf's live file set;
-    3. generations older than the newest ``retain_generations``
-       superseded ones are garbage-collected — a reader that resolved
-       any of the retained manifests still finds every file it planned,
-       so in-flight readers get ``retain_generations`` full compaction
-       intervals to finish instead of a rename-window race (one interval
-       proved too tight for slow readers under host contention; the
-       knob is the same retention lever a lakehouse format exposes for
-       vacuum).
+    2. the generation that falls out of the newest ``retain_generations``
+       superseded ones is garbage-collected. The current manifest lists
+       it as retained, so no reader of that manifest plans it; a reader
+       that resolved any of the retained manifests still finds every
+       file it planned, so in-flight readers get ``retain_generations``
+       full compaction intervals to finish instead of a rename-window
+       race (one interval proved too tight for slow readers under host
+       contention; the knob is the same retention lever a lakehouse
+       format exposes for vacuum). Collecting BEFORE the swap keeps
+       every file a newer manifest leaves unnamed off the disk, so a
+       reader never takes a doomed file for an append;
+    3. ``_MANIFEST.json`` is replaced atomically (tmp + ``os.replace``)
+       to name the new generation as the leaf's live file set.
 
     Readers going through :func:`read_zone` therefore never observe a
     missing file or a half-swapped leaf (test-proven by a polling reader
@@ -259,7 +284,7 @@ def compact_zone(
     for dirpath, dirnames, filenames in os.walk(zone_root):
         dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
         manifest = _leaf_manifest(dirpath)
-        live = _live_files(dirpath, filenames)
+        live = _live_files(manifest, filenames)
         if len(live) < min_files_to_compact:
             continue
         total = sum(os.path.getsize(os.path.join(dirpath, f)) for f in live)
@@ -280,8 +305,7 @@ def compact_zone(
                 os.rename(os.path.join(tmp, f), os.path.join(dirpath, name))
                 new_files.append(name)
         shutil.rmtree(tmp)
-        # 2. atomic manifest swap: the new generation becomes live; the
-        # just-superseded live set joins the retained window (newest
+        # the just-superseded live set joins the retained window (newest
         # first), bounded at retain_generations
         old_retained = (
             manifest.get("retained", [manifest.get("previous_files", [])])
@@ -289,27 +313,22 @@ def compact_zone(
             else []
         )
         retained = ([live] + old_retained)[:retain_generations]
-        new_manifest = {
-            "generation": gen,
-            "files": new_files,
-            "retained": retained,
-        }
-        mtmp = os.path.join(dirpath, MANIFEST_NAME + ".tmp")
-        with open(mtmp, "w") as f:
-            json.dump(new_manifest, f)
-        os.replace(mtmp, os.path.join(dirpath, MANIFEST_NAME))
-        # 3. GC generations older than the one just superseded — iterate
-        # the WALK-TIME snapshot, never a fresh listdir: a micro-batch
-        # file appended while this leaf was compacting is absent from
-        # the snapshot and therefore untouchable (it stays live for the
-        # next manifest), whereas a re-listing would see it, miss it in
-        # `keep`, and delete fresh data
+        # 2. GC what falls out of the window — iterate the WALK-TIME
+        # snapshot, never a fresh listdir: a micro-batch file appended
+        # while this leaf was compacting is absent from the snapshot and
+        # therefore untouchable (it stays live for the next manifest),
+        # whereas a re-listing would see it, miss it in `keep`, and
+        # delete fresh data
         keep = set(new_files) | {f for gen_files in retained for f in gen_files}
         for f in filenames:
             if f.endswith(".parquet") and f not in keep:
                 path_f = os.path.join(dirpath, f)
                 if os.path.exists(path_f):
                     os.remove(path_f)
+        # 3. atomic manifest swap: the new generation becomes live
+        _write_manifest(
+            dirpath, {"generation": gen, "files": new_files, "retained": retained}
+        )
         report[rel] = {"files_before": len(live), "files_after": len(new_files)}
     return report
 

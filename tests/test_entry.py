@@ -4,13 +4,9 @@ key sets are consistent."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
-from check_oracle import compare
 
 import __spark_entry__ as entrymod
-from datapipeline_spike_spark.cache import scoped_cache
-from datapipeline_spike_spark.plans.registry import TABLES
 
 
 def test_entry_smoke(spark):
@@ -19,30 +15,11 @@ def test_entry_smoke(spark):
     assert len(df.schema.fields) >= 2
 
 
-@pytest.fixture(scope="module")
-def oracle_con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
-
-
 @pytest.mark.parametrize("name", list(entrymod.queries()))
-def test_query_matches_oracle(spark, sf_dir, oracle_con, name):
-    """The driver's check for one registered query, as
-    tools/check_oracle.py runs it: row count, column names and
-    order-insensitive exact values against the DuckDB oracle. The query
-    is consumed inside ``scoped_cache`` so its pins are released before
-    the next one. A rows-only query (no oracle) must run to completion."""
-    with scoped_cache(spark):
-        sdf = entrymod.queries()[name](spark, sf_dir).toPandas()
-    oracle = entrymod.oracle_sql().get(name)
-    if oracle is None:
-        assert len(sdf.columns) > 0, name
-        return
-    problems = compare(name, sdf, oracle_con.execute(oracle).df())
-    assert not problems, problems
+def test_query_matches_oracle(oracle_check, name):
+    """Every registered query matches its DuckDB oracle (or, rows-only,
+    runs to completion); the check is the ``oracle_check`` fixture."""
+    oracle_check(name)
 
 
 def test_oracle_keys_subset():

@@ -326,3 +326,25 @@ def test_temperature_mixture_tau_properties(spark):
     # 0.5 * 0.5 * 10000 / 1000 = 2.5 -> a cap of 2 binds
     capped = shares(0.0, cap=2.0)
     assert capped["small"]["epochs"] == 2.0
+
+
+# --- oracle differentials --------------------------------------------------------
+# Each operator below is registered as the named query, whose oracle and
+# sf0.001 Spark build are the ones this check compares, so the check is that
+# query's differential (the shared ``oracle_check`` fixture).
+
+
+def test_dedup_span_removal_matches_duckdb(oracle_check):
+    oracle_check("dedup_span_removal")
+
+
+def test_kneser_ney_matches_duckdb(oracle_check):
+    oracle_check("kneser_ney_bigram_score")
+
+
+def test_ngram_novelty_matches_duckdb(oracle_check):
+    oracle_check("ngram_novelty_profile")
+
+
+def test_zipf_profile_matches_duckdb(oracle_check):
+    oracle_check("zipf_profile")

@@ -1,7 +1,9 @@
 """Contract tests for the queries registered in plans/catalog_r11: the
 verdict-matrix arity guard, the zero-token mixture-group contract and
-the OCHK continuation-cycle guard. Each registered query's oracle
-differential is tests/test_entry.py::test_query_matches_oracle."""
+the OCHK continuation-cycle guard. The cohort tests pin the queries
+catalog_r11 registers and run each one's oracle differential (the shared
+``oracle_check`` fixture, also behind
+tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
@@ -9,6 +11,36 @@ import struct
 
 import pytest
 from pyspark.sql import functions as F
+
+from datapipeline_spike_spark.plans import REGISTRY, catalog_r11
+
+
+# the queries catalog_r11 registers, in registration order
+R11_MOVES = (
+    "zipf_profile",
+    "ngram_novelty_profile",
+    "kneser_ney_bigram_score",
+    "verdict_agreement_matrix",
+    "dedup_span_removal",
+    "temperature_mixture_plan",
+)
+
+
+def test_r11_moves_are_all_registered():
+    """Exactly these six queries are registered from catalog_r11."""
+    assert len(R11_MOVES) == 6
+    got = [
+        name
+        for name, q in REGISTRY.items()
+        if getattr(q.spark, "__module__", None) == catalog_r11.__name__
+    ]
+    assert sorted(got) == sorted(R11_MOVES)
+
+
+@pytest.mark.parametrize("name", sorted(R11_MOVES))
+def test_registered_query_matches_oracle(oracle_check, name):
+    assert REGISTRY[name].oracle is not None  # all ship full-value oracles
+    oracle_check(name)
 
 
 # --- ADVICE r10 contract fixes ------------------------------------------------

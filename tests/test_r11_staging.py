@@ -436,3 +436,29 @@ def test_ivfpq_recall_audit_matches_duckdb(spark):
     # the audit must show the index actually finds neighbors on the
     # synthetic corpus (not a vacuous all-zero recall)
     assert sum(r["n_hits"] for r in got.values()) > 0
+
+
+# --- oracle differentials --------------------------------------------------------
+# Each operator below is registered as the named query, whose oracle and
+# sf0.001 Spark build are the ones this check compares, so the check is that
+# query's differential (the shared ``oracle_check`` fixture).
+
+
+def test_calibration_bins_match_duckdb(oracle_check):
+    oracle_check("reliability_calibration_bins")
+
+
+def test_centroid_drift_matches_duckdb(oracle_check):
+    oracle_check("embedding_centroid_drift")
+
+
+def test_hubness_profile_matches_duckdb(oracle_check):
+    oracle_check("hubness_profile")
+
+
+def test_rouge_matches_duckdb(oracle_check):
+    oracle_check("rouge_ngram_eval")
+
+
+def test_token_drift_matches_duckdb(oracle_check):
+    oracle_check("token_distribution_drift")

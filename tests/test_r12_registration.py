@@ -1,11 +1,43 @@
 """Contract tests for the queries registered in plans/catalog_r12: the
 calibration-range contract and the recall-audit sanity floor for the
-registered IVF-PQ form. Each registered query's oracle differential is
-tests/test_entry.py::test_query_matches_oracle."""
+registered IVF-PQ form. The cohort tests pin the queries catalog_r12
+registers and run each one's oracle differential (the shared
+``oracle_check`` fixture, also behind
+tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
-from datapipeline_spike_spark.plans import REGISTRY
+import pytest
+
+from datapipeline_spike_spark.plans import REGISTRY, catalog_r12
+
+
+# the queries catalog_r12 registers, in registration order
+R12_MOVES = (
+    "reliability_calibration_bins",
+    "token_distribution_drift",
+    "rouge_ngram_eval",
+    "embedding_centroid_drift",
+    "hubness_profile",
+    "ivfpq_recall_at_k",
+)
+
+
+def test_r12_moves_are_all_registered():
+    """Exactly these six queries are registered from catalog_r12."""
+    assert len(R12_MOVES) == 6
+    got = [
+        name
+        for name, q in REGISTRY.items()
+        if getattr(q.spark, "__module__", None) == catalog_r12.__name__
+    ]
+    assert sorted(got) == sorted(R12_MOVES)
+
+
+@pytest.mark.parametrize("name", sorted(R12_MOVES))
+def test_registered_query_matches_oracle(oracle_check, name):
+    assert REGISTRY[name].oracle is not None  # all ship full-value oracles
+    oracle_check(name)
 
 
 def test_calibration_excludes_out_of_range_scores(spark):

@@ -462,3 +462,29 @@ def test_dhash_planted_families(spark):
         same_jitter = (r["id_a"] // 16) % 4 == (r["id_b"] // 16) % 4
         if same_jitter:
             assert r["hamming"] == 0, r  # byte-identical plants
+
+
+# --- oracle differentials --------------------------------------------------------
+# Each operator below is registered as the named query, whose oracle and
+# sf0.001 Spark build are the ones this check compares, so the check is that
+# query's differential (the shared ``oracle_check`` fixture).
+
+
+def test_containment_matches_duckdb(oracle_check):
+    oracle_check("ngram_containment_pairs")
+
+
+def test_doremi_matches_duckdb(oracle_check):
+    oracle_check("doremi_domain_weights")
+
+
+def test_packing_matches_duckdb(oracle_check):
+    oracle_check("sequence_packing_plan")
+
+
+def test_rank_normalize_matches_duckdb(oracle_check):
+    oracle_check("quality_rank_normalize")
+
+
+def test_watermark_matches_duckdb(oracle_check):
+    oracle_check("watermark_greenlist_score")

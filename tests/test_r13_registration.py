@@ -1,8 +1,10 @@
 """Contract tests for the queries registered in plans/catalog_r13:
 registered-form sanity floors (the dhash slice must produce real pairs;
 doremi weights must be finite and normalized; the containment plant must
-produce quote pairs). Each registered query's oracle differential is
-tests/test_entry.py::test_query_matches_oracle."""
+produce quote pairs). The cohort tests pin the queries catalog_r13
+registers and run each one's oracle differential (the shared
+``oracle_check`` fixture, also behind
+tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
@@ -10,7 +12,42 @@ import math
 
 import pytest
 
-from datapipeline_spike_spark.plans import REGISTRY
+from datapipeline_spike_spark.plans import REGISTRY, catalog_r13, rotation_preflight
+
+
+# the queries catalog_r13 registers, in registration order
+R13_MOVES = (
+    "watermark_greenlist_score",
+    "quality_rank_normalize",
+    "ngram_containment_pairs",
+    "dhash_neardup_pairs",
+    "sequence_packing_plan",
+    "doremi_domain_weights",
+)
+
+
+def test_r13_moves_are_all_registered():
+    """Exactly these six queries are registered from catalog_r13."""
+    assert len(R13_MOVES) == 6
+    got = [
+        name
+        for name, q in REGISTRY.items()
+        if getattr(q.spark, "__module__", None) == catalog_r13.__name__
+    ]
+    assert sorted(got) == sorted(R13_MOVES)
+
+
+def test_r13_moves_remain_placed_by_the_rotation():
+    """All six remain registered, so the computed order places
+    them, and the order is sound."""
+    assert set(R13_MOVES) <= set(REGISTRY)
+    assert rotation_preflight() == []
+
+
+@pytest.mark.parametrize("name", sorted(R13_MOVES))
+def test_registered_query_matches_oracle(oracle_check, name):
+    assert REGISTRY[name].oracle is not None  # all ship full-value oracles
+    oracle_check(name)
 
 
 def test_dhash_registered_slice_is_not_vacuous(spark, sf_dir):

@@ -509,3 +509,37 @@ def test_audio_fingerprint_fuzz_never_crashes(spark):
     assert by_id[0]["fp_w0"] is not None  # the pristine clip decodes
     for r in rows:  # NULL-ness is always PAIRED (w0 null <=> w1 null)
         assert (r["fp_w0"] is None) == (r["fp_w1"] is None)
+
+
+# --- oracle differentials --------------------------------------------------------
+# Each operator below is registered as the named query, whose oracle and
+# sf0.001 Spark build are the ones this check compares, so the check is that
+# query's differential (the shared ``oracle_check`` fixture).
+
+
+def test_boilerplate_removal_matches_duckdb(oracle_check):
+    oracle_check("boilerplate_line_removal")
+
+
+def test_bradley_terry_matches_duckdb(oracle_check):
+    oracle_check("bradley_terry_strengths")
+
+
+def test_cdc_chunk_dedup_matches_duckdb(oracle_check):
+    oracle_check("cdc_chunk_dedup")
+
+
+def test_char_entropy_matches_duckdb(oracle_check):
+    oracle_check("char_entropy_profile")
+
+
+def test_exact_substr_runs_match_duckdb(oracle_check):
+    oracle_check("exact_substr_runs")
+
+
+def test_oov_rate_matches_duckdb(oracle_check):
+    oracle_check("oov_rate_profile")
+
+
+def test_url_canonical_dedup_matches_duckdb(oracle_check):
+    oracle_check("url_canonical_dedup")

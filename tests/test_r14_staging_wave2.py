@@ -980,3 +980,77 @@ def test_wave7_plan_shapes(spark):
                  "SortMergeJoin"):
         assert node not in dpo, node
     assert all(g >= 3 for g in _window_groups(dpo))
+
+
+# --- oracle differentials --------------------------------------------------------
+# Each operator below is registered as the named query, whose oracle and
+# sf0.001 Spark build are the ones this check compares, so the check is that
+# query's differential (the shared ``oracle_check`` fixture).
+
+
+def test_anchor_text_stats_match_duckdb(oracle_check):
+    oracle_check("anchor_text_stats")
+
+
+def test_audio_vad_segments_match_duckdb(oracle_check):
+    oracle_check("audio_vad_segments")
+
+
+def test_chat_turn_stats_match_duckdb(oracle_check):
+    oracle_check("chat_turn_stats")
+
+
+def test_code_detect_profile_matches_duckdb(oracle_check):
+    oracle_check("code_detect_profile")
+
+
+def test_crawl_frontier_priority_matches_duckdb(oracle_check):
+    oracle_check("crawl_frontier_priority")
+
+
+def test_curriculum_phase_plan_matches_duckdb(oracle_check):
+    oracle_check("curriculum_phase_plan")
+
+
+def test_dpo_pair_plan_matches_duckdb(oracle_check):
+    oracle_check("dpo_pair_plan")
+
+
+def test_hybrid_rrf_matches_duckdb(oracle_check):
+    oracle_check("hybrid_rrf_retrieval")
+
+
+def test_label_propagation_matches_duckdb(oracle_check):
+    oracle_check("label_propagation_communities")
+
+
+def test_license_detect_profile_matches_duckdb(oracle_check):
+    oracle_check("license_detect_profile")
+
+
+def test_matryoshka_recall_matches_duckdb(oracle_check):
+    oracle_check("matryoshka_recall_at_k")
+
+
+def test_minhash_band_tuning_matches_duckdb(oracle_check):
+    oracle_check("minhash_band_tuning")
+
+
+def test_pagerank_host_authority_matches_duckdb(oracle_check):
+    oracle_check("pagerank_host_authority")
+
+
+def test_span_corruption_plan_matches_duckdb(oracle_check):
+    oracle_check("span_corruption_plan")
+
+
+def test_triangle_clustering_matches_duckdb(oracle_check):
+    oracle_check("triangle_clustering")
+
+
+def test_video_scene_cuts_match_duckdb(oracle_check):
+    oracle_check("video_scene_cuts")
+
+
+def test_vocab_overlap_matches_duckdb(oracle_check):
+    oracle_check("vocab_overlap_matrix")

@@ -1,15 +1,53 @@
 """Contract tests for the queries registered in plans/catalog_r15:
 registered-form sanity floors (the audio slice must produce real same-
 family pairs; BT strengths must be normalized and rank-consistent with
-the planted truth; the substr quote plant must surface long runs). Each
-registered query's oracle differential is
-tests/test_entry.py::test_query_matches_oracle."""
+the planted truth; the substr quote plant must surface long runs). The
+cohort tests pin the queries catalog_r15 registers and run each one's
+oracle differential (the shared ``oracle_check`` fixture, also behind
+tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
 import pytest
 
-from datapipeline_spike_spark.plans import REGISTRY
+from datapipeline_spike_spark.plans import REGISTRY, catalog_r15, rotation_preflight
+
+
+# the queries catalog_r15 registers, in registration order
+R15_MOVES = (
+    "exact_substr_runs",
+    "cdc_chunk_dedup",
+    "boilerplate_line_removal",
+    "url_canonical_dedup",
+    "audio_fingerprint_neardup",
+    "bradley_terry_strengths",
+    "oov_rate_profile",
+    "char_entropy_profile",
+)
+
+
+def test_r15_moves_are_all_registered():
+    """Exactly these eight queries are registered from catalog_r15."""
+    assert len(R15_MOVES) == 8
+    got = [
+        name
+        for name, q in REGISTRY.items()
+        if getattr(q.spark, "__module__", None) == catalog_r15.__name__
+    ]
+    assert sorted(got) == sorted(R15_MOVES)
+
+
+def test_r15_moves_remain_placed_by_the_rotation():
+    """All eight remain registered, so the computed order places
+    them, and the order is sound."""
+    assert set(R15_MOVES) <= set(REGISTRY)
+    assert rotation_preflight() == []
+
+
+@pytest.mark.parametrize("name", sorted(R15_MOVES))
+def test_registered_query_matches_oracle(oracle_check, name):
+    assert REGISTRY[name].oracle is not None  # all ship full-value oracles
+    oracle_check(name)
 
 
 def test_audio_registered_slice_is_not_vacuous(spark, sf_dir):

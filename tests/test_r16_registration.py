@@ -2,14 +2,51 @@
 registered-form sanity floors (the pagerank ranks must sum to 1 over the
 host graph; the detector plants must surface every family/license; the
 VAD corpus must produce real multi-segment clips; the curriculum
-schedule must be phase-major). Each registered query's oracle
-differential is tests/test_entry.py::test_query_matches_oracle."""
+schedule must be phase-major). The cohort tests pin the queries
+catalog_r16 registers and run each one's oracle differential (the shared
+``oracle_check`` fixture, also behind
+tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
 import pytest
 
-from datapipeline_spike_spark.plans import REGISTRY
+from datapipeline_spike_spark.plans import REGISTRY, catalog_r16, rotation_preflight
+
+
+# the queries catalog_r16 registers, in registration order
+R16_MOVES = (
+    "pagerank_host_authority",
+    "code_detect_profile",
+    "license_detect_profile",
+    "matryoshka_recall_at_k",
+    "audio_vad_segments",
+    "curriculum_phase_plan",
+)
+
+
+def test_r16_moves_are_all_registered():
+    """Exactly these six queries are registered from catalog_r16."""
+    assert len(R16_MOVES) == 6
+    got = [
+        name
+        for name, q in REGISTRY.items()
+        if getattr(q.spark, "__module__", None) == catalog_r16.__name__
+    ]
+    assert sorted(got) == sorted(R16_MOVES)
+
+
+def test_r16_moves_remain_placed_by_the_rotation():
+    """All six remain registered, so the computed order places
+    them, and the order is sound."""
+    assert set(R16_MOVES) <= set(REGISTRY)
+    assert rotation_preflight() == []
+
+
+@pytest.mark.parametrize("name", sorted(R16_MOVES))
+def test_registered_query_matches_oracle(oracle_check, name):
+    assert REGISTRY[name].oracle is not None  # all ship full-value oracles
+    oracle_check(name)
 
 
 def test_pagerank_registered_mass_is_conserved(spark, sf_dir):

@@ -1,8 +1,9 @@
-"""Contract tests for the queries registered in plans/catalog_r17: the LPA
-tie-break regression pins (planted path-graph, disjoint-triangle and
+"""Contract tests for the queries registered in plans/catalog_r17: the
+LPA tie-break regression pins (planted path-graph, disjoint-triangle and
 string-vertex replays) and registered-form sanity floors for every
-entry. Each registered query's oracle differential is
-tests/test_entry.py::test_query_matches_oracle."""
+entry. The cohort tests pin the queries catalog_r17 registers and run
+each one's oracle differential (the shared ``oracle_check`` fixture,
+also behind tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
@@ -10,7 +11,63 @@ import math
 
 import pytest
 
-from datapipeline_spike_spark.plans import REGISTRY
+from datapipeline_spike_spark.plans import (
+    REGISTRY,
+    catalog_r17,
+    rotation_preflight,
+)
+
+
+# the queries catalog_r17 registers, in registration order
+R17_MOVES = (
+    "video_scene_cuts",
+    "crawl_frontier_priority",
+    "anchor_text_stats",
+    "span_corruption_plan",
+    "label_propagation_communities",
+    "vocab_overlap_matrix",
+    "minhash_band_tuning",
+    "triangle_clustering",
+    "hybrid_rrf_retrieval",
+    "chat_turn_stats",
+    "dpo_pair_plan",
+)
+
+# the persist() conversions (exact_substr_runs kept frame, dhash hash
+# frame — which audio_fingerprint_neardup reuses) must leave every
+# value identical, so they re-verify beside the eleven
+_PERSIST_CONVERTED = (
+    "exact_substr_runs",
+    "dhash_neardup_pairs",
+    "audio_fingerprint_neardup",
+)
+
+
+def test_r17_moves_are_all_registered():
+    """Exactly these eleven queries are registered from catalog_r17."""
+    assert len(R17_MOVES) == 11
+    got = [
+        name
+        for name, q in REGISTRY.items()
+        if getattr(q.spark, "__module__", None) == catalog_r17.__name__
+    ]
+    assert sorted(got) == sorted(R17_MOVES)
+
+
+def test_r17_moves_remain_placed_by_the_rotation():
+    """All eleven and the three persist-converted queries remain
+    registered, so the computed order places them, and the order is
+    sound."""
+    assert set(R17_MOVES) | set(_PERSIST_CONVERTED) <= set(REGISTRY)
+    assert rotation_preflight() == []
+
+
+@pytest.mark.parametrize(
+    "name", sorted(set(R17_MOVES) | set(_PERSIST_CONVERTED))
+)
+def test_registered_query_matches_oracle(oracle_check, name):
+    assert REGISTRY[name].oracle is not None  # all ship full-value oracles
+    oracle_check(name)
 
 
 # --- LPA tie-break regression pins (VERDICT r16 item 6) --------------------------

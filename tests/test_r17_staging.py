@@ -449,3 +449,33 @@ def test_wave9_plan_shapes(spark):
                  "Window", "CartesianProduct", "BroadcastNestedLoopJoin",
                  "SortMergeJoin", "BroadcastHashJoin"):
         assert node not in bo, node
+
+
+# --- oracle differentials --------------------------------------------------------
+# Each operator below is registered as the named query, whose oracle and
+# sf0.001 Spark build are the ones this check compares, so the check is that
+# query's differential (the shared ``oracle_check`` fixture).
+
+
+def test_best_of_n_matches_duckdb(oracle_check):
+    oracle_check("best_of_n_selection")
+
+
+def test_distinct_ngram_diversity_matches_duckdb(oracle_check):
+    oracle_check("distinct_ngram_diversity")
+
+
+def test_hits_matches_duckdb(oracle_check):
+    oracle_check("hits_hub_authority")
+
+
+def test_kcore_matches_duckdb(oracle_check):
+    oracle_check("kcore_membership")
+
+
+def test_knn_graph_matches_duckdb(oracle_check):
+    oracle_check("knn_graph_edges")
+
+
+def test_min_k_prob_matches_duckdb(oracle_check):
+    oracle_check("min_k_prob_profile")

@@ -1,12 +1,46 @@
 """Contract tests for the queries registered in plans/catalog_r18:
-registered-form sanity floors for every entry. Each registered query's
-oracle differential is tests/test_entry.py::test_query_matches_oracle."""
+registered-form sanity floors for every entry. The cohort tests pin the
+queries catalog_r18 registers and run each one's oracle differential
+(the shared ``oracle_check`` fixture, also behind
+tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
 import pytest
 
-from datapipeline_spike_spark.plans import REGISTRY
+from datapipeline_spike_spark.plans import REGISTRY, catalog_r18, rotation_preflight
+
+
+# the queries catalog_r18 registers, in registration order
+R18_MOVES = (
+    "hits_hub_authority",
+    "knn_graph_edges",
+    "min_k_prob_profile",
+)
+
+
+def test_r18_moves_are_all_registered():
+    """Exactly these three queries are registered from catalog_r18."""
+    assert len(R18_MOVES) == 3
+    got = [
+        name
+        for name, q in REGISTRY.items()
+        if getattr(q.spark, "__module__", None) == catalog_r18.__name__
+    ]
+    assert sorted(got) == sorted(R18_MOVES)
+
+
+def test_r18_moves_remain_placed_by_the_rotation():
+    """All three remain registered, so the computed order places
+    them, and the order is sound."""
+    assert set(R18_MOVES) <= set(REGISTRY)
+    assert rotation_preflight() == []
+
+
+@pytest.mark.parametrize("name", sorted(R18_MOVES))
+def test_registered_query_matches_oracle(oracle_check, name):
+    assert REGISTRY[name].oracle is not None  # all ship full-value oracles
+    oracle_check(name)
 
 
 # --- registered-form sanity floors ------------------------------------------------

@@ -1,48 +1,44 @@
-"""Differential verification of the r9-registered (ex-staged) catalog.
-
-Round 8 staged these 12 queries; round 9 registered them via
-``plans/catalog_r9.register_r9``. This test keeps running the SAME
-comparison the pre-handoff gate uses (tools/check_oracle.compare: row
-count + schema + order-insensitive exact values with near-miss
-detection) against DuckDB at sf0.001 — now against the REGISTRY
-entries, so the local differential evidence survives the move and any
-regression in the shared operators re-fails here before the driver
-sees it.
-"""
+"""The queries registered in plans/catalog_r9 (staged in round 8,
+registered in round 9): the cohort is pinned, and each query runs the
+oracle differential the pre-handoff gate uses (the shared
+``oracle_check`` fixture, also behind
+tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
-from check_oracle import compare
 
-from datapipeline_spike_spark.plans import REGISTRY  # noqa: F401  (imports catalog_r9)
-from datapipeline_spike_spark.plans.catalog_r9 import R9_REGISTERED
-from datapipeline_spike_spark.plans.registry import TABLES
+from datapipeline_spike_spark.plans import REGISTRY, catalog_r9
 
 
-@pytest.fixture(scope="module")
-def oracle_con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    yield con
-    con.close()
+# the queries catalog_r9 registers, in registration order
+R9_MOVES = (
+    "shuffle_shard_plan",
+    "weighted_doc_sample",
+    "skipgram_pmi",
+    "budget_selected_docs",
+    "dedup_survivor_policy",
+    "html_extract_profile",
+    "bigram_fluency",
+    "perplexity_bucket_profile",
+    "encoding_quality_profile",
+    "hard_negative_pairs",
+    "hamming_recall_at_k",
+    "random_projection_profile",
+)
 
 
 def test_r9_moves_are_all_registered():
-    assert len(R9_REGISTERED) == 12
-    missing = [n for n in R9_REGISTERED if n not in REGISTRY]
-    assert not missing, missing
+    """Exactly these twelve queries are registered from catalog_r9."""
+    assert len(R9_MOVES) == 12
+    got = [
+        name
+        for name, q in REGISTRY.items()
+        if getattr(q.spark, "__module__", None) == catalog_r9.__name__
+    ]
+    assert sorted(got) == sorted(R9_MOVES)
 
 
-@pytest.mark.parametrize("name", sorted(R9_REGISTERED))
-def test_registered_query_matches_oracle(spark, sf_dir, oracle_con, name):
-    q = REGISTRY[name]
-    sdf = q.spark(spark, sf_dir).toPandas()
-    if q.oracle is None:
-        assert len(sdf) >= 0  # rows-only contract, driver-style
-        return
-    odf = oracle_con.execute(q.oracle).df()
-    problems = compare(name, sdf, odf)
-    assert not problems, problems
+@pytest.mark.parametrize("name", sorted(R9_MOVES))
+def test_registered_query_matches_oracle(oracle_check, name):
+    oracle_check(name)

@@ -556,6 +556,79 @@ def test_compact_swap_never_404s_concurrent_reader(spark, tmp_path):
     assert n_reads[0] > 5
 
 
+@pytest.mark.parametrize("interleaving", ["compaction_before_manifest_read",
+                                          "read_at_manifest_swap"])
+def test_compaction_interleaved_with_leaf_resolution(spark, tmp_path, monkeypatch,
+                                                     interleaving):
+    """The two interleavings the polling reader above only hits by
+    chance, forced. A compaction that lands while a reader resolves a
+    leaf, and a reader that resolves a leaf the moment a compaction swaps
+    its manifest, both see exactly the committed rows: no file of the
+    generation that compaction drops (the never-compacted seed files,
+    here) is taken for an append, planned after deletion, or counted
+    twice."""
+    from datapipeline_spike_spark.sources import parquet_lake
+    from datapipeline_spike_spark.sources.parquet_lake import compact_zone, write_zone
+
+    root = str(tmp_path)
+    n_written = [0]
+
+    def append():
+        write_zone(
+            spark.createDataFrame(
+                [(f"M{j % 2}", 1700000000 + j, float(j)) for j in range(4)],
+                "machine string, epoch long, value double",
+            ).select("machine", F.timestamp_seconds("epoch").alias("ts"), "value")
+            .coalesce(1),
+            root,
+            "processed",
+        )
+        n_written[0] += 4
+
+    def compact():
+        compact_zone(spark, root, "processed", target_file_bytes=64 * 1024 * 1024)
+
+    # every compaction below has four live files per leaf to fold
+    for _ in range(4):
+        append()
+    compact()  # the seed files become the retained generation
+    for _ in range(3):
+        append()
+    compact()
+    for _ in range(3):
+        append()
+    # the next compaction drops the seed files from its retained window
+    seen = []
+    if interleaving == "compaction_before_manifest_read":
+        real = parquet_lake._leaf_manifest
+
+        def leaf_manifest(dirpath):
+            # the first leaf a manifest governs, not the zone root
+            if not seen and os.path.exists(
+                os.path.join(dirpath, parquet_lake.MANIFEST_NAME)
+            ):
+                seen.append(None)
+                monkeypatch.setattr(parquet_lake, "_leaf_manifest", real)
+                compact()
+            return real(dirpath)
+
+        monkeypatch.setattr(parquet_lake, "_leaf_manifest", leaf_manifest)
+        assert read_zone(spark, root, "processed").count() == n_written[0]
+        assert seen
+    else:
+        real = parquet_lake._write_manifest
+
+        def write_manifest(dirpath, manifest):
+            real(dirpath, manifest)
+            if not seen:
+                seen.append(read_zone(spark, root, "processed").count())
+
+        monkeypatch.setattr(parquet_lake, "_write_manifest", write_manifest)
+        compact()
+        assert seen == [n_written[0]]
+    assert read_zone(spark, root, "processed").count() == n_written[0]
+
+
 def test_clustered_write_enables_data_skipping(spark, tmp_path):
     """write_clustered: range-partition + sort gives each file a narrow
     near-disjoint [min,max] footer envelope on the cluster key, so a
