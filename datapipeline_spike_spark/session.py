@@ -23,6 +23,15 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Three eighths of physical memory, at most 48g: in local mode the
+    driver JVM is the whole cluster, and its off-heap memory, the Python
+    workers and DuckDB need the rest. A heap larger than the machine
+    lets a long session grow until the kernel kills it."""
+    phys_mib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    return f"{min(48 * 1024, phys_mib * 3 // 8)}m"
+
+
 def get_session(
     app_name: str = "datapipeline_spike_spark",
     cpus: int | None = None,
@@ -46,7 +55,10 @@ def get_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # guide §3.1: let the planner pick shuffled-hash over sort-merge

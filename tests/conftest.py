@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
@@ -11,24 +10,29 @@ import pytest
 ROOT = Path(__file__).resolve().parents[1]
 sys.path[:0] = [str(ROOT), str(ROOT / "tools")]
 
-import duckdb
-from check_oracle import compare
+from check_oracle import differential, oracle_connection
+from pyspark.sql import SparkSession
 
-from datapipeline_spike_spark.cache import scoped_cache
-from datapipeline_spike_spark.plans.registry import TABLES
+from datapipeline_spike_spark.cache import unpersist_all
 from datapipeline_spike_spark.session import get_session
-
-# The session's default driver heap (48g) lets one long test session's
-# JVM grow past the physical memory of a smaller machine, where the
-# kernel kills it and every later test fails. A bounded heap makes it
-# collect instead; an explicit SPARK_GRAFT_DRIVER_MEM still wins.
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 
 @pytest.fixture(scope="session")
 def spark():
     s = get_session("tests", cpus=8, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _drain_pins_after_module():
+    """Release every frame a test module left pinned before the next
+    module starts, so pins neither pile up in the test JVM nor reach
+    the pin-accounting tests of a later module. A module that never
+    started the session leaves nothing to drain."""
+    yield
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        unpersist_all(spark, blocking=True)
 
 
 @pytest.fixture(scope="session")
@@ -46,25 +50,13 @@ def oracle_check(spark, sf_dir):
 
     Each name is run and compared once per session; every test that
     names the same query asserts that one outcome."""
-    import __spark_entry__ as entrymod
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_connection(sf_dir)
     outcomes: dict[str, list | Exception] = {}
-
-    def differential(name: str) -> list:
-        with scoped_cache(spark):
-            sdf = entrymod.queries()[name](spark, sf_dir).toPandas()
-        oracle = entrymod.oracle_sql().get(name)
-        if oracle is None:
-            return [] if len(sdf.columns) > 0 else [f"{name}: no columns"]
-        return compare(name, sdf, con.execute(oracle).df())
 
     def check(name: str) -> None:
         if name not in outcomes:
             try:
-                outcomes[name] = differential(name)
+                outcomes[name] = differential(spark, con, name, sf_dir)
             except Exception as exc:  # noqa: BLE001 — replayed to every caller
                 outcomes[name] = exc
         got = outcomes[name]

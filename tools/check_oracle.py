@@ -19,6 +19,7 @@ import pandas as pd
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from datapipeline_spike_spark.cache import scoped_cache  # noqa: E402
 from datapipeline_spike_spark.plans.registry import TABLES  # noqa: E402
 from datapipeline_spike_spark.session import get_session  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
@@ -73,47 +74,47 @@ def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> list[
     return problems
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table of sf_dir."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def differential(spark, con, name: str, sf_dir: str) -> list[str]:
+    """The driver's check of one registered query: its problems against
+    the DuckDB oracle on ``con``, or, for a rows-only query, that it runs
+    to a frame with columns. The query is consumed inside
+    ``scoped_cache``, so its pins (persist/checkpoint barriers and their
+    shuffle-file fds) are released before the next one."""
+    with scoped_cache(spark):
+        sdf = entrymod.queries()[name](spark, sf_dir).toPandas()
+    oracle = entrymod.oracle_sql().get(name)
+    if oracle is None:
+        return [] if len(sdf.columns) > 0 else ["no columns"]
+    return compare(name, sdf, con.execute(oracle).df())
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_session("oracle-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    from datapipeline_spike_spark.cache import scoped_cache
-
+    con = oracle_connection(sf_dir)
+    oracles = entrymod.oracle_sql()
     n_fail = 0
-    for name, fn in qs.items():
+    for name in entrymod.queries():
         if only and name not in only:
             continue
         try:
-            # bound each query's deliberate persist()/checkpoint pins —
-            # 200+ queries in ONE session otherwise accumulate cached
-            # frames and their shuffle-file fds (the r18 staging
-            # fd-exhaustion class)
-            with scoped_cache(spark):
-                sdf = fn(spark, sf_dir).toPandas()
+            problems = differential(spark, con, name, sf_dir)
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {e}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            status = "ok" if len(sdf) >= 0 else "??"
-            print(f"ROWS-ONLY {name}: {len(sdf)} rows {status}")
-            continue
-        try:
-            odf = con.execute(oracles[name]).df()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: oracle error: {e}")
-            n_fail += 1
-            continue
-        problems = compare(name, sdf, odf)
+            problems = [f"{type(e).__name__}: {e}"]
         if problems:
             n_fail += 1
-            print(f"FAIL  {name}: " + "; ".join(problems))
+            print(f"FAIL  {name}: " + "; ".join(problems), flush=True)
         else:
-            print(f"PASS  {name} ({len(sdf)} rows, {len(sdf.columns)} cols)")
+            print(f"{'PASS ' if name in oracles else 'ROWS-ONLY'} {name}", flush=True)
     print(f"\n{n_fail} failures")
     return 1 if n_fail else 0
 

@@ -32,13 +32,9 @@ import sys
 from pathlib import Path
 import time
 
-import duckdb
-import numpy as np
-import pandas as pd
-
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from datapipeline_spike_spark.plans.registry import TABLES  # noqa: E402
+from check_oracle import compare, oracle_connection  # noqa: E402
 from datapipeline_spike_spark.session import get_session  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -105,57 +101,6 @@ def type_audit(spark_dtypes: list[tuple[str, str]], arrow_schema) -> list[str]:
     return risks
 
 
-# -- value comparison (order-insensitive, mirrors the driver) ----------------
-
-def _canon_frame(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = pd.to_datetime(df[c]).dt.tz_localize(None)
-        elif df[c].dtype == object:
-            # uniform null spelling before stringify (Spark None vs
-            # DuckDB NaN in boolean-with-null columns — see check_oracle)
-            col = df[c]
-            df[c] = col.where(~col.isna(), other="NULL").astype(str)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
-
-
-def compare_values(spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> list[str]:
-    problems: list[str] = []
-    if len(spark_df) != len(oracle_df):
-        problems.append(f"row count: spark={len(spark_df)} oracle={len(oracle_df)}")
-    s_cols, o_cols = sorted(spark_df.columns), sorted(oracle_df.columns)
-    if s_cols != o_cols:
-        problems.append(f"columns: spark={s_cols} oracle={o_cols}")
-        return problems
-    if problems:
-        return problems
-    s, o = _canon_frame(spark_df), _canon_frame(oracle_df)
-    for c in s.columns:
-        sv, ov = s[c], o[c]
-        if pd.api.types.is_float_dtype(sv) or pd.api.types.is_float_dtype(ov):
-            a = pd.to_numeric(sv, errors="coerce").to_numpy(dtype=float)
-            b = pd.to_numeric(ov, errors="coerce").to_numpy(dtype=float)
-            both_nan = np.isnan(a) & np.isnan(b)
-            exact = (a == b) | both_nan
-            if not exact.all():
-                close = np.isclose(a, b, rtol=0, atol=1e-6, equal_nan=True)
-                n_bad = int((~exact).sum())
-                if close.all():
-                    problems.append(f"col {c}: {n_bad} NEAR-MISS cells (<1e-6; hash would FAIL)")
-                else:
-                    worst = np.nanmax(np.abs(np.where(both_nan, 0, a - b)))
-                    problems.append(f"col {c}: {n_bad} cells differ, worst |delta|={worst:g}")
-        else:
-            neq = (sv != ov) & ~(sv.isna() & ov.isna())
-            if neq.any():
-                i = int(neq.idxmax())
-                problems.append(
-                    f"col {c}: {int(neq.sum())} cells differ, e.g. {sv[i]!r} vs {ov[i]!r}"
-                )
-    return problems
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
@@ -173,9 +118,7 @@ def main() -> int:
         args.queries = [q for q in args.queries if "/" not in q]
 
     spark = get_session("preflight")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
+    con = oracle_connection(args.sf_dir)
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     only = set(args.queries)
@@ -205,7 +148,7 @@ def main() -> int:
             continue
         risks = type_audit(spark_dtypes, otbl.schema)
         odf = otbl.to_pandas()
-        problems = compare_values(sdf, odf)
+        problems = compare(name, sdf, odf)
         if problems:
             n_fail += 1
             print(f"FAIL      {name}: " + "; ".join(problems))
