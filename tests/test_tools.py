@@ -1,6 +1,6 @@
 """Tests for the tools themselves: every tool imports, the
 tools/preflight.py type audit flags exactly the divergences the
-driver's hash is sensitive to, and tools/scale_probe.py writes an
+result hash is sensitive to, and tools/scale_probe.py writes an
 amplified directory the oracle agrees with."""
 
 from __future__ import annotations

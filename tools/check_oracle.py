@@ -83,7 +83,7 @@ def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
 
 
 def differential(spark, con, name: str, sf_dir: str) -> list[str]:
-    """The driver's check of one registered query: its problems against
+    """The differential check of one registered query: its problems against
     the DuckDB oracle on ``con``, or, for a rows-only query, that it runs
     to a frame with columns. The query is consumed inside
     ``scoped_cache``, so its pins (persist/checkpoint barriers and their

@@ -1,6 +1,6 @@
 """Amplified-scale testdata, and the one shuffled-hash-join envelope probe.
 
-``write N OUT_DIR`` writes the ten driver tables of sf0.1 N times over
+``write N OUT_DIR`` writes the ten testdata tables of sf0.1 N times over
 into OUT_DIR, one parquet file per table with the source's physical
 types (naive ``timestamp[us]`` dates and ``ts``, ``FLOAT[]``
 embeddings), so every tool that takes a testdata directory runs on it
