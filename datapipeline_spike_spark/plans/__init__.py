@@ -12,16 +12,11 @@ from datapipeline_spike_spark.plans import catalog_relational  # noqa: F401
 from datapipeline_spike_spark.plans import catalog_events  # noqa: F401
 from datapipeline_spike_spark.plans import catalog_extensions  # noqa: F401
 from datapipeline_spike_spark.plans import catalog_ml  # noqa: F401
-from datapipeline_spike_spark.plans import catalog_r9  # noqa: F401  (r8 staged -> registered)
-from datapipeline_spike_spark.plans import catalog_curation  # noqa: F401  (r9 curation funnel)
-from datapipeline_spike_spark.plans import catalog_r11  # noqa: F401  (r10 staged -> registered)
-from datapipeline_spike_spark.plans import catalog_r12  # noqa: F401  (r11 staged -> registered)
-from datapipeline_spike_spark.plans import catalog_r13  # noqa: F401  (r12 staged -> registered r14)
-from datapipeline_spike_spark.plans import catalog_r15  # noqa: F401  (r14 staged -> registered r15)
-from datapipeline_spike_spark.plans import catalog_r16  # noqa: F401  (r14 wave-2 staged -> registered r16)
-from datapipeline_spike_spark.plans import catalog_r17  # noqa: F401  (r14 waves 3-7 staged -> registered r17)
-from datapipeline_spike_spark.plans import catalog_r18  # noqa: F401  (r17 wave-8 staged -> registered r18)
-from datapipeline_spike_spark.plans import catalog_r19  # noqa: F401  (r17 wave-9 staged -> registered r19)
+from datapipeline_spike_spark.plans import catalog_curation  # noqa: F401
+from datapipeline_spike_spark.plans import catalog_dedup  # noqa: F401
+from datapipeline_spike_spark.plans import catalog_graph  # noqa: F401
+from datapipeline_spike_spark.plans import catalog_text  # noqa: F401
+from datapipeline_spike_spark.plans import catalog_training  # noqa: F401
 
 # The driver's per-round correctness harness hash-matches the FIRST
 # DRIVER_SAMPLE registry entries against DuckDB. The order is computed

@@ -21,27 +21,15 @@ from pyspark.sql import functions as F
 from datapipeline_spike_spark.plans.catalog_extensions import (
     _sql_dedup_assign_ctes,
 )
-from datapipeline_spike_spark.plans.registry import load, register
+from datapipeline_spike_spark.plans.registry import (
+    SQL_TOKS,
+    SQL_U01,
+    load,
+    register,
+    sql_quality6,
+)
 
 # --- shared SQL fragments -----------------------------------------------------
-
-_SQL_TOKS_OF = (
-    "list_filter(regexp_split_to_array(lower({t}), '[^a-z0-9'']+'),"
-    " t -> t != '')"
-)
-_SQL_SW_EN = "['the','and','of','to','in','is','that','it','for','on']"
-
-
-def _sql_quality6(toks: str, text: str) -> str:
-    """functions.text.quality_score_from_tokens replay, rounded 6dp —
-    the same expression text as the quality_classifier_score oracle."""
-    return (
-        f"round(0.4 * least(len({toks}) / 200.0, 1.0)"
-        f" + 0.3 * least((len(list_filter({toks}, x -> list_contains("
-        f"{_SQL_SW_EN}, x))) * 1.0 / len({toks})) / 0.10, 1.0)"
-        f" + 0.3 * (1.0 - (length({text}) - length(regexp_replace({text},"
-        f" '[\\.,;:!\\?]', '', 'g'))) * 1.0 / length({text})), 6)"
-    )
 
 
 def _sql_redact(text: str) -> str:
@@ -52,10 +40,6 @@ def _sql_redact(text: str) -> str:
     for _, pat, repl in PII_PATTERNS:
         red = f"regexp_replace({red}, '{pat}', '{repl}', 'g')"
     return red
-
-
-def _sql_u01(key: str) -> str:
-    return f"(('0x' || substr(md5({key}), 1, 8))::BIGINT / 4294967296.0)"
 
 
 # the synthetic paged corpus, identical text on both engines
@@ -143,7 +127,7 @@ _MIN_QUALITY = 0.45
 _TOKEN_BUDGET = 8000.0
 _N_SHARDS = 4
 
-_T = _SQL_TOKS_OF.format(t="text")
+_T = SQL_TOKS.format(c="text")
 
 _SQL_CURATION = f"""
     WITH RECURSIVE {_SQL_PARA_CTES},
@@ -153,7 +137,7 @@ _SQL_CURATION = f"""
     scored AS (
       SELECT doc_id, text, quality, len(toks) AS n_tokens
       FROM (SELECT doc_id, text, toks,
-                   {_sql_quality6("toks", "text")} AS quality
+                   {sql_quality6("toks", "text")} AS quality
             FROM (SELECT doc_id, text, {_T} AS toks FROM cne))
       WHERE quality >= {_MIN_QUALITY}
     ),
@@ -193,11 +177,11 @@ _SQL_CURATION = f"""
       SELECT r.* FROM red r, thr
       WHERE round(r.quality, 4) > thr.b0
          OR (round(r.quality, 4) = thr.b0
-             AND {_sql_u01("CAST(r.doc_id AS VARCHAR)")} < thr.rate)
+             AND {SQL_U01.format(k="CAST(r.doc_id AS VARCHAR)")} < thr.rate)
     ),
     sharded AS (
       SELECT doc_id, text,
-             CAST(floor({_sql_u01("CAST(doc_id AS VARCHAR) || '#0'")}
+             CAST(floor({SQL_U01.format(k="CAST(doc_id AS VARCHAR) || '#0'")}
                         * {_N_SHARDS}) AS INT) AS shard
       FROM sel
     ),
@@ -363,13 +347,8 @@ def q_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- C4 line/page cleaning -----------------------------------------------------
 
-_SQL_C4_TOKS = (
-    "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9'']+'),"
-    " t -> t != '')"
-)
-
 _SQL_C4_PAGES = f"""
-    t AS (SELECT doc_id, {_SQL_C4_TOKS} AS toks FROM documents),
+    t AS (SELECT doc_id, {_T} AS toks FROM documents),
     lines0 AS (
       SELECT doc_id,
         list_transform(range(0, CAST(ceil(len(toks) / 8.0) AS INT)),

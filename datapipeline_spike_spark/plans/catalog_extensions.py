@@ -26,13 +26,13 @@ from datapipeline_spike_spark.operators.dedup import (
     lsh_candidate_pairs,
 )
 from datapipeline_spike_spark.operators.similarity import brute_force_topk
-from datapipeline_spike_spark.plans.registry import load, register
+from datapipeline_spike_spark.plans.registry import SQL_TOKS, load, register
 from datapipeline_spike_spark.scale import fan_out
 
 R = 6
 
 # DuckDB token expression mirroring functions.text.tokens()
-_SQL_TOKS = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9'']+'), t -> t != '')"
+_SQL_TOKS = SQL_TOKS.format(c="text")
 # DuckDB 3-shingle expression mirroring functions.text.shingles(k=3)
 _SQL_SHINGLES = (
     "CASE WHEN len(toks) >= 3 THEN list_distinct(list_transform("
@@ -2817,7 +2817,6 @@ def _prefix_bucket_pairs(
     return small_pairs.unionByName(hot_pairs).distinct()
 
 
-
 @register(
     "prefix_filter_jaccard_join",
     oracle=f"""
@@ -3602,6 +3601,138 @@ def q_video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         fan_out(load(spark, sf_dir, "documents"))
     )
     return decode_video_frame_features(media)
+
+
+# --- audio VAD segments ------------------------------------------------------
+
+# gated WAVs: the silence gate (doc_id*13 + block*7) % 3 == 0 scales the
+# waveform into the sub-threshold band, so every clip has real
+# speech/silence islands
+
+
+@register(
+    "audio_vad_segments",
+    oracle="""
+    WITH xs AS (
+      SELECT doc_id, i, i // 8 AS b,
+             CASE WHEN (doc_id * 13 + (i // 8) * 7) % 3 != 0
+                  THEN ((doc_id * 31 + i * 17) % 4001) - 2000
+                  ELSE ((doc_id * 31 + i * 17) % 64) - 32 END AS x
+      FROM (SELECT doc_id, unnest(range(0, 64 + (doc_id % 8) * 8)) AS i
+            FROM documents)
+    ),
+    fe AS (SELECT doc_id, b, sum(x * x) AS energy FROM xs GROUP BY 1, 2),
+    act AS (
+      SELECT doc_id, b, energy,
+             b - row_number() OVER (PARTITION BY doc_id ORDER BY b) AS grp
+      FROM fe WHERE energy > 16384
+    )
+    SELECT doc_id AS media_id,
+           CAST(min(b) AS BIGINT) AS seg_start_frame,
+           CAST(count(*) AS BIGINT) AS n_frames,
+           CAST(sum(energy) AS BIGINT) AS total_energy,
+           round(sum(energy) * 1.0 / count(*), 6) AS mean_energy
+    FROM act GROUP BY doc_id, grp
+    """,
+    doc="""sources/multimodal.audio_vad_segments over
+    vad_media_from_documents (staged r14 wave 2, registered r16):
+    energy-threshold voice-activity detection — synthesized gated WAV,
+    REAL RIFF decode (chunk walk -> int16 PCM -> exact integer 8-sample
+    frame energies), then gaps-and-islands segmentation (activity runs
+    via the row_number offset trick) and per-segment rollup. This is
+    the pre-transcription segmentation pass an audio corpus pipeline
+    runs before ASR — process speech islands, skip silence. The oracle
+    replays the FULL decode from the generative waveform formula
+    (never the container); truncated/corrupt payloads contribute no
+    rows (planted test). Scale shape: the decode is the single Arrow
+    stage (mapInPandas, PANDAS_OK — audio_pcm_features precedent); the
+    islands window is PARTITIONED by clip; no joins anywhere.""",
+    tags=("multimodal", "audio", "vad", "pandas", "staged-r14-wave2"),
+)
+def q_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from datapipeline_spike_spark.sources.multimodal import (
+        audio_vad_segments,
+        vad_media_from_documents,
+    )
+
+    return audio_vad_segments(
+        vad_media_from_documents(load(spark, sf_dir, "documents"))
+    )
+
+
+# --- video scene cuts --------------------------------------------------------
+
+# scene-gated MJPEG clips synthesized from documents: scene pattern
+# (doc_id*131 + scene*37), 3-frame scenes, 6 + (doc_id % 2) * 3 frames
+# per clip
+
+
+@register(
+    "video_scene_cuts",
+    oracle="""
+    WITH fb AS (
+      SELECT doc_id, f, b,
+             ((doc_id * 131 + (f // 3) * 37) * 11 + b * 29) % 256 AS v
+      FROM (SELECT doc_id, unnest(range(0, 6 + (doc_id % 2) * 3)) AS f
+            FROM documents),
+           (SELECT unnest(range(0, 2)) AS b)
+    ),
+    d AS (
+      SELECT a.doc_id, a.f, sum(64 * abs(a.v - p.v)) AS diff
+      FROM fb a JOIN fb p
+        ON p.doc_id = a.doc_id AND p.f = a.f - 1 AND p.b = a.b
+      GROUP BY 1, 2
+    ),
+    fr AS (
+      SELECT fb.doc_id, fb.f, d.diff
+      FROM (SELECT DISTINCT doc_id, f FROM fb) fb
+      LEFT JOIN d ON d.doc_id = fb.doc_id AND d.f = fb.f
+    ),
+    m AS (
+      SELECT doc_id, f, diff,
+             (f = 0 OR diff > 0) AS is_cut,
+             sum(CASE WHEN f = 0 OR diff > 0 THEN 1 ELSE 0 END)
+               OVER (PARTITION BY doc_id ORDER BY f) AS shot
+      FROM fr
+    )
+    SELECT doc_id AS media_id,
+           CAST(shot - 1 AS BIGINT) AS shot_idx,
+           CAST(min(f) AS BIGINT) AS start_frame,
+           CAST(count(*) AS BIGINT) AS n_frames,
+           CAST(max(CASE WHEN is_cut THEN diff END) AS BIGINT)
+             AS cut_energy
+    FROM m GROUP BY doc_id, shot
+    """,
+    doc="""sources/multimodal.video_scene_cuts over
+    scene_media_from_documents (staged r14 wave 3, registered r17):
+    shot segmentation — the pass a video corpus runs before per-shot
+    frame sampling (one keyframe per shot, not per fixed stride). A
+    REAL MP4 sample-table walk + baseline JPEG decode (shared
+    _mp4_from_jpeg_frames assembler with the motion-energy synth)
+    yields per-frame pixel-diff rows; a cut opens at frame 0 and at
+    every frame whose |diff| exceeds the threshold; the shot id is the
+    running cut count; shots roll up by (clip, shot). The oracle
+    replays the FULL decode from the generative (seed, scene, block)
+    pixel formula (never the container); truncated payloads contribute
+    no rows. Scale shape: ONE Arrow decode stage (mapInPandas,
+    PANDAS_OK — video_frame_features precedent), the running-cut
+    window PARTITIONED by clip, no joins anywhere.""",
+    tags=("multimodal", "video", "scene-cut", "pandas", "staged-r14-wave3"),
+)
+def q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from datapipeline_spike_spark.sources.multimodal import (
+        scene_media_from_documents,
+        video_scene_cuts,
+    )
+
+    # fan_out before the Python decode stage: the testdata single-split
+    # scan otherwise serializes the whole JPEG decode on ONE task (the
+    # r1 lesson; video_frame_features precedent). Measured at r17
+    # registration: 21.8 s -> ~2 s extras floor at sf0.1. Row-order
+    # only — the driver hash is order-insensitive.
+    return video_scene_cuts(
+        scene_media_from_documents(fan_out(load(spark, sf_dir, "documents")))
+    )
 
 
 @register(

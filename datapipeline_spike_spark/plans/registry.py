@@ -55,6 +55,35 @@ def register(
     return deco
 
 
+# --- DuckDB oracle fragments shared across catalogs ---------------------------
+
+# the engine's tokenizer (functions/text.tokens) over column {c}:
+# lowercase, split on non-[a-z0-9'], drop empties
+SQL_TOKS = (
+    "list_filter(regexp_split_to_array(lower({c}), '[^a-z0-9'']+'),"
+    " t -> t != '')"
+)
+
+# the engine's deterministic md5 [0,1) draw of key {k}
+# (operators/sampling.hash_u01), and its per-document form
+SQL_U01 = "(('0x' || substr(md5({k}), 1, 8))::BIGINT / 4294967296.0)"
+SQL_U01_DOC = SQL_U01.format(k="CAST(doc_id AS VARCHAR)")
+
+_SQL_SW_EN = "['the','and','of','to','in','is','that','it','for','on']"
+
+
+def sql_quality6(toks: str, text: str) -> str:
+    """functions.text.quality_score_from_tokens replay, rounded 6dp —
+    the same expression text as the quality_classifier_score oracle."""
+    return (
+        f"round(0.4 * least(len({toks}) / 200.0, 1.0)"
+        f" + 0.3 * least((len(list_filter({toks}, x -> list_contains("
+        f"{_SQL_SW_EN}, x))) * 1.0 / len({toks})) / 0.10, 1.0)"
+        f" + 0.3 * (1.0 - (length({text}) - length(regexp_replace({text},"
+        f" '[\\.,;:!\\?]', '', 'g'))) * 1.0 / length({text})), 6)"
+    )
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read one driver testdata table (TESTDATA.md), normalizing
     event-time types at the load boundary.

@@ -41,7 +41,16 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(scope="session")
-def oracle_check(spark, sf_dir):
+def oracle_con(sf_dir):
+    """One DuckDB connection for the session, with a view per testdata
+    table of sf_dir: the oracle side of every differential."""
+    con = oracle_connection(sf_dir)
+    yield con
+    con.close()
+
+
+@pytest.fixture(scope="session")
+def oracle_check(spark, sf_dir, oracle_con):
     """The driver's check for one registered query, as
     tools/check_oracle.py runs it: row count, column names and
     order-insensitive exact values against the DuckDB oracle. The query
@@ -50,13 +59,12 @@ def oracle_check(spark, sf_dir):
 
     Each name is run and compared once per session; every test that
     names the same query asserts that one outcome."""
-    con = oracle_connection(sf_dir)
     outcomes: dict[str, list | Exception] = {}
 
     def check(name: str) -> None:
         if name not in outcomes:
             try:
-                outcomes[name] = differential(spark, con, name, sf_dir)
+                outcomes[name] = differential(spark, oracle_con, name, sf_dir)
             except Exception as exc:  # noqa: BLE001 — replayed to every caller
                 outcomes[name] = exc
         got = outcomes[name]
@@ -64,5 +72,4 @@ def oracle_check(spark, sf_dir):
             raise got
         assert not got, got
 
-    yield check
-    con.close()
+    return check

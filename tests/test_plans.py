@@ -15,8 +15,27 @@ from datapipeline_spike_spark.plans import REGISTRY
 SF = "/root/testdata/sf0.001"
 
 
+# one home for the nontrivial plan-text parsers: a second copy would
+# drift when a Spark upgrade changes node rendering
+def _plan_of(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def _plan(spark, name):
-    return REGISTRY[name].spark(spark, SF)._jdf.queryExecution().executedPlan().toString()
+    return _plan_of(REGISTRY[name].spark(spark, SF))
+
+
+def _window_groups(plan: str):
+    """Bracket-group counts for every Window node (3+ = partitioned,
+    2 = the unpartitioned scale-killer)."""
+    import re as _re
+
+    out = []
+    for line in plan.splitlines():
+        s = line.lstrip(" +-:|*(0123456789)")
+        if s.startswith("Window "):
+            out.append(len(_re.findall(r"\[[^\]]*\]", s)))
+    return out
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark):
