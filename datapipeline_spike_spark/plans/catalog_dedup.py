@@ -245,7 +245,7 @@ def _sql_dhash_words(docs: str = "documents WHERE doc_id % 5 = 3") -> str:
     nearest-neighbor sample grid positions. The oracle replays the
     FULL decode: PNG build -> inflate -> unfilter -> sample grid is
     proven equal to this regeneration by
-    tests/test_dedup.py::test_dhash_decode_matches_python_replay."""
+    tests/test_r12_staging.py::test_dhash_decode_matches_python_replay."""
 
     def px(k: str) -> str:
         return (
@@ -616,7 +616,7 @@ def _sql_audio_words(docs: str = "documents WHERE doc_id % 5 = 3") -> str:
     doc_id % 5 = 3 slice): frame energies
     are exact integer sums of |sample| over 64-sample frames, bit f =
     e[f+1] > e[f]. The oracle replays the FULL decode:
-    tests/test_dedup.py::test_audio_fingerprint_decode_matches_python_replay
+    tests/test_r14_staging.py::test_audio_fingerprint_decode_matches_python_replay
     proves WAV build -> RIFF walk -> int16 unpack -> frame
     energies equals this regeneration for every doc."""
     sample = (
@@ -691,7 +691,7 @@ def _sql_audio_words(docs: str = "documents WHERE doc_id % 5 = 3") -> str:
     by construction; the slice keeps the grain driver-hashable).
     Corrupt/short/non-PCM payloads yield NULL words and are excluded
     by the join's null filter (120-mutant fuzz contract in
-    tests/test_dedup.py).""",
+    tests/test_r14_staging.py).""",
     tags=("dedup", "multimodal", "audio", "pandas", "staged-r14"),
 )
 def q_audio_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:

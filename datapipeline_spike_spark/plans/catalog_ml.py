@@ -1794,7 +1794,7 @@ def _sql_ivfpq_adc(m=4, k_cb=8, iters=2, width=16, scale=1 << 20,
     centroids -> rounded-L2 argmin assignment -> residuals -> the
     SHARED fixed-point PQ Lloyd's chain (_sql_pq_ctes
     trained on the residual prelude) -> min_by encode -> probed ADC.
-    tests/test_similarity.py::test_ivfpq_matches_duckdb pins the top-k form;
+    tests/test_r11_staging.py::test_ivfpq_matches_duckdb pins the top-k form;
     the registered oracle composes the recall tail onto this chain."""
     l2 = ("list_aggregate(list_transform(range(1, len({a}) + 1), "
           "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), 'sum')")

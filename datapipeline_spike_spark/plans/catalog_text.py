@@ -1168,7 +1168,7 @@ def _code_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAP-ONLY regex/translate battery over built-in JVM expressions to
     a (source x family)-grain rollup — at 100 TB it runs at scan speed
     with only the tiny rollup shuffling (plan pin: no joins, no
-    windows, no Python — tests/test_text_stats.py). Registered
+    windows, no Python — tests/test_r14_staging_wave2.py). Registered
     over the snippet plant (doc_id % 7 == 2, family doc_id % 3).""",
     tags=("text", "code", "routing", "staged-r14-wave2"),
 )

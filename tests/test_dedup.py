@@ -13,12 +13,6 @@ from datapipeline_spike_spark.operators.dedup import (
     simhash16,
     simhash64,
 )
-from datapipeline_spike_spark.plans import REGISTRY
-from datapipeline_spike_spark.plans.catalog_dedup import (
-    _sql_audio_words,
-    _sql_dhash_words,
-)
-from datapipeline_spike_spark.plans.registry import load
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -903,689 +897,3 @@ def test_sharded_neardup_one_shard_is_the_operator(spark):
     a = {tuple(r) for r in sharded_neardup_pairs(h, 1).collect()}
     b = {tuple(r) for r in dhash_neardup_pairs(h).collect()}
     assert a == b and a
-
-
-# --- dedup_span_removal --------------------------------------------------------
-
-
-def test_dedup_span_removal_keep_first_policy(spark, sf_dir):
-    """Planted semantics: doc 1 and doc 2 share an 8-token license
-    block inside otherwise unique text; the block survives ONLY in the
-    canonical (lower-id) doc, and a fully unique doc loses nothing."""
-    from datapipeline_spike_spark.operators.dedup import dedup_span_removal
-
-    block = "this standard license block text is identical everywhere"
-    docs = spark.createDataFrame(
-        [
-            (1, f"alpha unique opening words {block} alpha closing run"),
-            (2, f"beta different starting phrase {block} beta ending part"),
-            (3, "gamma totally original content with no shared spans at all"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in dedup_span_removal(docs, k=8).collect()}
-    assert out[1]["n_removed"] == 0        # canonical keeps its copy
-    assert out[2]["n_removed"] > 0         # duplicate span scrubbed
-    assert out[3]["n_removed"] == 0        # unique doc untouched
-    assert out[2]["retained_ratio"] < 1.0 == out[1]["retained_ratio"]
-    # the registered form's planted header/footer triggers cross-doc
-    # removal in every document but the canonical one(s)
-    rows = REGISTRY["dedup_span_removal"].spark(spark, sf_dir).collect()
-    assert sum(r["n_removed"] > 0 for r in rows) >= len(rows) - 1
-
-
-# --- ngram_containment_pairs ---------------------------------------------------
-
-
-def test_containment_planted_semantics(spark):
-    """Full inclusion -> containment 1.0 for the contained side even
-    when Jaccard is tiny; disjoint docs -> no pair; the df cap removes
-    corpus-wide boilerplate shingles from the sets."""
-    from datapipeline_spike_spark.operators.dedup import (
-        ngram_containment_pairs,
-    )
-
-    quote = "alpha beta gamma delta epsilon zeta"
-    filler = " ".join(f"word{i} next{i} more{i}" for i in range(40))
-    rows = [
-        (1, quote),                       # 4 shingles, all inside doc 2
-        (2, filler + " " + quote),        # the big container
-        (3, "totally different content here now"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        (r["doc_id_a"], r["doc_id_b"]): r
-        for r in ngram_containment_pairs(df, min_common=2).collect()
-    }
-    assert (1, 2) in out
-    p = out[(1, 2)]
-    assert p["containment_a"] == 1.0          # doc 1 fully contained
-    assert p["containment_b"] < 0.1           # Jaccard-style view is tiny
-    assert not any(3 in k for k in out)
-    # df cap: a shingle shared by EVERY doc is excluded from the sets
-    boiler = [(i, "shared header line " + f"unique{i} tail{i} end{i}")
-              for i in range(10)]
-    bdf = spark.createDataFrame(boiler, "doc_id long, text string")
-    pairs = ngram_containment_pairs(bdf, min_common=1, df_cap=5, threshold=0.0)
-    # 'shared header line' (df=10 > cap) is dropped; remaining shingles
-    # are doc-unique except the header-bridge ones (df <= cap kept)
-    for r in pairs.collect():
-        assert r["max_containment"] < 1.0
-    # the SCALE-DERIVED default keeps that same df=10 shingle on a tiny
-    # corpus (cap = greatest(16, ceil(0.02*10)) = 16 >= 10): boilerplate
-    # is defined RELATIVE to corpus size, not by an absolute constant
-    auto = ngram_containment_pairs(bdf, min_common=1, threshold=0.0)
-    assert auto.count() > pairs.count()  # header-bridged pairs appear
-    # ADVICE r13: a floor above the max would silently void the
-    # df_cap_max^2 fan-out ceiling — rejected at the contract boundary
-    with pytest.raises(ValueError, match="df_cap_floor"):
-        ngram_containment_pairs(bdf, df_cap_floor=100, df_cap_max=50)
-
-
-def test_containment_registered_plant_produces_quote_pairs(spark, sf_dir):
-    """The quoting plant (doc_id % 7 == 3 embeds its predecessor) must
-    surface as high-containment pairs in the registered form."""
-    rows = REGISTRY["ngram_containment_pairs"].spark(spark, sf_dir).collect()
-    assert rows
-    quote_pairs = [
-        r
-        for r in rows
-        if r["doc_id_b"] - r["doc_id_a"] == 1 and r["doc_id_b"] % 7 == 3
-    ]
-    assert quote_pairs
-    assert all(r["max_containment"] >= 0.5 for r in quote_pairs)
-
-
-# --- dhash_neardup_pairs -------------------------------------------------------
-
-
-def test_dhash_decode_matches_python_replay(spark, sf_dir):
-    """decode_image_dhash (real PNG bytes: chunk walk + inflate +
-    unfilter + sample grid) equals the pure-Python dHash of the
-    regenerated pattern for every doc."""
-    from datapipeline_spike_spark.sources.multimodal import (
-        decode_image_dhash,
-        dhash_bits_from_pixels,
-        image_family_media_from_documents,
-    )
-
-    d = load(spark, sf_dir, "documents").limit(64)
-    got = {
-        r["media_id"]: (r["dhash_w0"], r["dhash_w1"])
-        for r in decode_image_dhash(image_family_media_from_documents(d)).collect()
-    }
-    for doc_id in got:
-        fam, jit = doc_id % 16, (doc_id // 16) % 4
-        w, h = 9 + fam % 8, 8 + fam % 5
-        px = [
-            (k * k * (2 * fam + 3) + 5 * k + (jit if k % 7 == 0 else 0)) % 256
-            for k in range(w * h)
-        ]
-        bits = dhash_bits_from_pixels(px, w, h)
-        assert got[doc_id] == (bits & 0xFFFFFFFF, bits >> 32), doc_id
-
-
-def test_dhash_corrupt_payloads_yield_null_not_crash(spark):
-    """Review r12: a PNG whose IDAT inflates SHORT (truncated final
-    row) must yield NULL hash words, never an IndexError inside the
-    sample grid; non-PNG bytes and undersized canvases too."""
-    import struct
-    import zlib
-
-    from datapipeline_spike_spark.sources.multimodal import (
-        _PNG_SIG,
-        decode_image_dhash,
-        synthetic_png_family,
-    )
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body)) + tag + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    w, h = 10, 8
-    # last scanline present but 3 pixels short after the filter byte
-    raw = b"".join(b"\x00" + bytes(w) for _ in range(h - 1)) + b"\x00" + bytes(w - 3)
-    short = (
-        _PNG_SIG
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    rows = [
-        (1, synthetic_png_family(0, 0)),  # healthy
-        (2, short),                        # truncated inflate
-        (3, b"not a png at all"),          # wrong container
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in decode_image_dhash(df).collect()}
-    assert out[1]["dhash_w0"] is not None
-    assert out[2]["dhash_w0"] is None and out[2]["dhash_w1"] is None
-    assert out[3]["dhash_w0"] is None
-
-
-def test_dhash_pairs_match_duckdb(spark, sf_dir, oracle_con):
-    """The full staged query — planted family PNGs -> real decode ->
-    banded candidate join -> exact Hamming — vs the DuckDB replay of
-    hashes (from the pattern), bands, and popcount distances."""
-    from datapipeline_spike_spark.operators.dedup import dhash_neardup_pairs
-    from datapipeline_spike_spark.sources.multimodal import (
-        decode_image_dhash,
-        image_family_media_from_documents,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    hashes = decode_image_dhash(image_family_media_from_documents(d))
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dhash_neardup_pairs(hashes).collect()
-    }
-    want = oracle_con.execute(
-        f"""
-        WITH {_sql_dhash_words("documents")},
-        bands AS (
-          -- 8x8-bit bands, replaying dedup.dhash_neardup_pairs'
-          -- r13 layout (band i: word i//4, shift 8*(i%4)) — the twin
-          -- must band EXACTLY like the implementation or it stops
-          -- replaying it (ADVICE r13)
-          SELECT doc_id, w0, w1, 0 AS band_idx, w0 & 255 AS band_val FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 1, (w0 >> 8) & 255 FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 2, (w0 >> 16) & 255 FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 3, (w0 >> 24) & 255 FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 4, w1 & 255 FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 5, (w1 >> 8) & 255 FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 6, (w1 >> 16) & 255 FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 7, (w1 >> 24) & 255 FROM hx
-        ),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-                 CAST(bit_count(xor(a.w0, b.w0))
-                      + bit_count(xor(a.w1, b.w1)) AS INT) AS hamming
-          FROM bands a JOIN bands b
-            ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-           AND a.doc_id < b.doc_id
-        )
-        SELECT id_a, id_b, hamming FROM cand WHERE hamming <= 6
-        """
-    ).df()
-    assert len(got) == len(want)
-    assert len(got) > 0
-    for _, w in want.iterrows():
-        assert got[(w["id_a"], w["id_b"])] == int(w["hamming"])
-
-
-def test_dhash_scattered_bits_recall(spark):
-    """ADVICE r13: the completeness claim, proven on the exact pair
-    class the old 4x16-bit layout missed. Flips at bits 3, 19, 35, 51
-    put exactly one flipped bit in EVERY 16-bit band (no 16-bit band
-    agrees -> the 4-band join had zero candidates) while 8-bit bands
-    1, 3, 5, 7 stay clean — the 8-band pigeonhole must recall this
-    Hamming-4 pair."""
-    from datapipeline_spike_spark.operators.dedup import dhash_neardup_pairs
-
-    w0, w1 = 0x5A5A5A5A, 0xA5A5A5A5
-    flip = (1 << 3) | (1 << 19)  # bits 3, 19 of each word = 3,19,35,51
-    rows = [
-        (1, w0, w1),
-        (2, w0 ^ flip, w1 ^ flip),
-        (3, 0x12345678, 0x0F0F0F0F),  # far from both (no accidental pair)
-    ]
-    df = spark.createDataFrame(rows, "media_id long, dhash_w0 long, dhash_w1 long")
-    # the premise: every 16-bit band of the pair differs -> the old
-    # 4x16 banding generates no candidate for (1, 2)
-    for shift in (0, 16):
-        assert (w0 >> shift) & 0xFFFF != ((w0 ^ flip) >> shift) & 0xFFFF
-        assert (w1 >> shift) & 0xFFFF != ((w1 ^ flip) >> shift) & 0xFFFF
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dhash_neardup_pairs(df).collect()
-    }
-    assert got == {(1, 2): 4}
-
-
-def test_dhash_max_hamming_contract(spark):
-    """max_hamming > 7 exceeds what the 8-band pigeonhole can recall
-    completely — rejected loudly (dedup.py:1494), never a silent
-    heuristic; <= 7 is accepted."""
-    from datapipeline_spike_spark.operators.dedup import dhash_neardup_pairs
-
-    df = spark.createDataFrame(
-        [(1, 7, 7)], "media_id long, dhash_w0 long, dhash_w1 long"
-    )
-    with pytest.raises(ValueError, match="max_hamming <= 7"):
-        dhash_neardup_pairs(df, max_hamming=8)
-    assert dhash_neardup_pairs(df, max_hamming=7).count() == 0
-
-
-def test_dhash_planted_families(spark, sf_dir):
-    """Same (family, jitter) -> identical images -> Hamming 0; pairs
-    never bridge families (distinct patterns differ way past the
-    threshold on this plant); within a family across jitters at least
-    some near-dup (0 < hamming <= 6) pairs appear."""
-    from datapipeline_spike_spark.operators.dedup import dhash_neardup_pairs
-    from datapipeline_spike_spark.sources.multimodal import (
-        decode_image_dhash,
-        image_family_media_from_documents,
-    )
-
-    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 128)
-    hashes = decode_image_dhash(image_family_media_from_documents(d))
-    pairs = dhash_neardup_pairs(hashes).collect()
-    assert pairs
-    for r in pairs:
-        assert r["id_a"] % 16 == r["id_b"] % 16, r  # never cross-family
-        same_jitter = (r["id_a"] // 16) % 4 == (r["id_b"] // 16) % 4
-        if same_jitter:
-            assert r["hamming"] == 0, r  # byte-identical plants
-
-
-def test_dhash_registered_slice_is_not_vacuous(spark, sf_dir):
-    """The doc_id % 5 = 3 corpus slice must still contain planted
-    exact-duplicate pairs (hamming 0) — an empty registered result
-    would pass the oracle compare trivially while verifying nothing."""
-    rows = REGISTRY["dhash_neardup_pairs"].spark(spark, sf_dir).collect()
-    assert rows
-    assert any(r["hamming"] == 0 for r in rows)
-    for r in rows:  # the slice + plant never bridges families
-        assert r["id_a"] % 16 == r["id_b"] % 16, r
-
-
-# --- exact_substr_runs ---------------------------------------------------------
-
-
-def test_exact_substr_planted_spans(spark):
-    """A verbatim span shared by two docs is found with exact 0-based
-    start positions and token length; an INSERTION before the copy
-    shifts the start but not the length (the property fixed-offset
-    blocking lacks); unrelated docs produce no runs; min_run_grams
-    gates short matches."""
-    from datapipeline_spike_spark.operators.dedup import exact_substr_runs
-
-    span = "the quick brown fox jumps over the lazy dog tonight"
-    rows = [
-        (1, "intro words here " + span + " trailing bits"),
-        (2, "alpha beta " + span + " gamma"),
-        (3, "completely different text with no overlap at all whatsoever"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    runs = exact_substr_runs(df, df_cap=100).collect()
-    hits = [r for r in runs if (r["doc_id_a"], r["doc_id_b"]) == (1, 2)]
-    assert len(hits) == 1
-    r = hits[0]
-    # span = 10 tokens -> 8 trigrams; doc1 offset 3, doc2 offset 2
-    assert r["run_start_a"] == 3 and r["run_start_b"] == 2
-    assert r["run_grams"] == 8 and r["run_tokens"] == 10
-    assert not any(3 in (x["doc_id_a"], x["doc_id_b"]) for x in runs)
-    # a one-gram accidental match is below the default min_run_grams
-    short = spark.createDataFrame(
-        [(1, "aa bb cc xx yy"), (2, "zz aa bb cc qq")],
-        "doc_id long, text string",
-    )
-    assert (
-        exact_substr_runs(short, df_cap=100, min_run_grams=2).count() == 0
-    )
-    assert (
-        exact_substr_runs(short, df_cap=100, min_run_grams=1).count() == 1
-    )
-    with pytest.raises(ValueError, match="df_cap_floor"):
-        exact_substr_runs(df, df_cap_floor=10, df_cap_max=5)
-
-
-def test_exact_substr_df_is_document_frequency(spark):
-    """r14 review: df was counted over positional postings, so one
-    spammy page repeating a gram 20+ times pushed it past the cap even
-    at document-frequency 2, hiding its cross-document copy. df is now
-    distinct-doc; the verbatim run must be reported."""
-    from datapipeline_spike_spark.operators.dedup import exact_substr_runs
-
-    phrase = "alpha beta gamma delta"
-    rows = [
-        (1, " ".join([phrase] * 25)),          # spammy intra-doc repeats
-        (2, "intro " + phrase + " outro end"),  # one clean copy
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    runs = exact_substr_runs(df, df_cap=5, min_run_grams=2).collect()
-    assert any(
-        (r["doc_id_a"], r["doc_id_b"]) == (1, 2) and r["run_tokens"] >= 4
-        for r in runs
-    ), runs
-
-
-def test_substr_registered_plant_produces_quote_runs(spark, sf_dir):
-    """The quoting plant (doc_id % 7 == 3 embeds its predecessor) must
-    surface as long runs between consecutive doc ids."""
-    rows = REGISTRY["exact_substr_runs"].spark(spark, sf_dir).collect()
-    assert rows
-    quote_runs = [
-        r
-        for r in rows
-        if r["doc_id_b"] - r["doc_id_a"] == 1 and r["doc_id_b"] % 7 == 3
-    ]
-    assert quote_runs
-    assert max(r["run_tokens"] for r in quote_runs) >= 10
-
-
-# --- cdc_chunk_dedup -----------------------------------------------------------
-
-
-def test_cdc_shift_resistance(spark):
-    """The CDC property itself: doc 2 = junk prefix + doc 1's text.
-    Fixed-size blocking would misalign every block after the prefix;
-    content-defined boundaries realign immediately, so (almost) all of
-    doc 1's token mass is detected as duplicated."""
-    from datapipeline_spike_spark.operators.dedup import cdc_chunk_dedup
-
-    base = " ".join(f"tok{i} item{i} value{i}" for i in range(40))
-    rows = [(1, base), (2, "prefix junk words " + base)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in cdc_chunk_dedup(df).collect()}
-    # everything from the first shared boundary onward matches: the
-    # only possibly-unshared chunks are each doc's first chunk
-    assert out[1]["dup_token_fraction"] > 0.8
-    assert out[2]["dup_token_fraction"] > 0.8
-    assert out[1]["n_dup_chunks"] >= out[1]["n_chunks"] - 1
-    # disjoint docs share nothing
-    solo = spark.createDataFrame(
-        [(1, base), (2, "wholly unrelated content stream here")],
-        "doc_id long, text string",
-    )
-    souts = {r["doc_id"]: r for r in cdc_chunk_dedup(solo).collect()}
-    assert souts[2]["dup_tokens"] == 0
-
-
-def test_cdc_rejects_non_hex_boundary_set(spark):
-    from datapipeline_spike_spark.operators.dedup import cdc_chunk_dedup
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="boundary_hex"):
-        cdc_chunk_dedup(df, boundary_hex=("A", "B"))  # uppercase
-    with pytest.raises(ValueError, match="boundary_hex"):
-        cdc_chunk_dedup(df, boundary_hex=())
-
-
-# --- url_canonical_dedup -------------------------------------------------------
-
-
-def test_url_canonicalization_planted_rules(spark):
-    from datapipeline_spike_spark.operators.html import url_canonical_dedup
-
-    rows = [
-        (1, "HTTP://WWW.Example.COM:80/a/b/?utm_source=x&z=1&a=2#frag"),
-        (2, "http://example.com/a/b?a=2&z=1"),
-        (3, "https://example.com:443/a/b?a=2&z=1"),  # https default port
-        (4, "not a url at all"),
-        (5, "http://example.com"),  # empty path -> /
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    out = {r["doc_id"]: r for r in url_canonical_dedup(df).collect()}
-    # 1 and 2 collapse: case, www, :80, trailing slash, utm, order, frag
-    assert out[1]["canonical_url"] == out[2]["canonical_url"]
-    assert out[1]["canonical_url"] == "http://example.com/a/b?a=2&z=1"
-    # 3 differs only by scheme (https != http) — but its :443 is gone
-    assert out[3]["canonical_url"] == "https://example.com/a/b?a=2&z=1"
-    assert 4 not in out  # unparseable excluded
-    assert out[5]["canonical_url"] == "http://example.com/"
-    assert out[1]["group_size"] == 2 and out[1]["is_canonical"]
-    assert not out[2]["is_canonical"]
-
-
-def test_url_tracking_params_case_insensitive_and_valueless(spark):
-    """r14 review: UTM_Source=x (mixed case) and bare fbclid (no '=')
-    must strip like their canonical forms."""
-    from datapipeline_spike_spark.operators.html import url_canonical_dedup
-
-    rows = [
-        (1, "http://site.com/p?UTM_Source=mail&a=1"),
-        (2, "http://site.com/p?a=1&fbclid"),
-        (3, "http://site.com/p?a=1"),
-        (4, "http://site.com/p?reference=7&a=1"),  # NOT a tracking param
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    out = {r["doc_id"]: r for r in url_canonical_dedup(df).collect()}
-    assert (
-        out[1]["canonical_url"] == out[2]["canonical_url"]
-        == out[3]["canonical_url"] == "http://site.com/p?a=1"
-    )
-    assert out[1]["group_size"] == 3
-    # 'reference' must survive: the rule anchors on the full param name
-    assert out[4]["canonical_url"] == "http://site.com/p?a=1&reference=7"
-
-
-def test_url_registered_grid_collapses_variants(spark, sf_dir):
-    rows = REGISTRY["url_canonical_dedup"].spark(spark, sf_dir).collect()
-    assert rows
-    assert any(r["group_size"] > 1 for r in rows)
-    reps = sum(1 for r in rows if r["is_canonical"])
-    groups = len({r["canonical_url"] for r in rows})
-    assert reps == groups  # exactly one survivor per group
-
-
-# --- audio_fingerprint_neardup -------------------------------------------------
-
-
-def test_audio_fingerprint_decode_matches_python_replay(spark, sf_dir):
-    """decode_audio_fingerprint (real WAV bytes: RIFF walk + int16
-    unpack + frame energies) equals the pure-Python fingerprint of the
-    regenerated waveform for every doc."""
-    from datapipeline_spike_spark.sources.multimodal import (
-        audio_family_media_from_documents,
-        decode_audio_fingerprint,
-        fingerprint_bits_from_samples,
-    )
-
-    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
-    got = {
-        r["media_id"]: (r["fp_w0"], r["fp_w1"])
-        for r in decode_audio_fingerprint(
-            audio_family_media_from_documents(d)
-        ).collect()
-    }
-    assert len(got) == 64
-    for doc_id in got:
-        fam, jit = doc_id % 16, (doc_id // 16) % 4
-        n = 64 * (65 + fam % 4)
-        xs = [
-            ((i * i * (2 * fam + 3) + 5 * i + (jit if i % 7 == 0 else 0))
-             % 4001) - 2000
-            for i in range(n)
-        ]
-        bits = fingerprint_bits_from_samples(xs)
-        assert got[doc_id] == (bits & 0xFFFFFFFF, bits >> 32), doc_id
-
-
-def test_audio_fingerprint_corrupt_payloads_yield_null(spark):
-    """Short clips (< 65 frames), non-PCM bytes, and truncated data
-    chunks yield NULL words, never a crash."""
-    from datapipeline_spike_spark.sources.multimodal import (
-        decode_audio_fingerprint,
-        synthetic_wav_pattern,
-    )
-
-    ok = synthetic_wav_pattern(seed=1, n_samples=65 * 64)
-    short = synthetic_wav_pattern(seed=1, n_samples=100)
-    rows = [(1, ok), (2, short), (3, b"not audio")]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in decode_audio_fingerprint(df).collect()}
-    assert out[1]["fp_w0"] is not None
-    assert out[2]["fp_w0"] is None and out[2]["fp_w1"] is None
-    assert out[3]["fp_w0"] is None
-
-
-def test_audio_neardup_pairs_match_duckdb(spark, sf_dir, oracle_con):
-    """The full staged query — planted family WAVs -> real decode ->
-    the GENERIC banded-Hamming join (dedup.dhash_neardup_pairs reused
-    unchanged on fingerprint words) — vs the DuckDB replay."""
-    from datapipeline_spike_spark.operators.dedup import dhash_neardup_pairs
-    from datapipeline_spike_spark.sources.multimodal import (
-        audio_family_media_from_documents,
-        decode_audio_fingerprint,
-    )
-
-    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 128)
-    fp = decode_audio_fingerprint(audio_family_media_from_documents(d))
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dhash_neardup_pairs(
-            fp, w0_col="fp_w0", w1_col="fp_w1"
-        ).collect()
-    }
-    want = oracle_con.execute(
-        f"""
-        WITH {_sql_audio_words("documents WHERE doc_id < 128")},
-        bands AS (
-          SELECT doc_id, w0, w1, 0 AS band_idx, w0 & 255 AS band_val FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 1, (w0 >> 8) & 255 FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 2, (w0 >> 16) & 255 FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 3, (w0 >> 24) & 255 FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 4, w1 & 255 FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 5, (w1 >> 8) & 255 FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 6, (w1 >> 16) & 255 FROM hx
-          UNION ALL SELECT doc_id, w0, w1, 7, (w1 >> 24) & 255 FROM hx
-        ),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-                 CAST(bit_count(xor(a.w0, b.w0))
-                      + bit_count(xor(a.w1, b.w1)) AS INT) AS hamming
-          FROM bands a JOIN bands b
-            ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-           AND a.doc_id < b.doc_id
-        )
-        SELECT id_a, id_b, hamming FROM cand WHERE hamming <= 6
-        """
-    ).df()
-    assert len(got) == len(want)
-    assert len(got) > 0
-    for _, w in want.iterrows():
-        assert got[(w["id_a"], w["id_b"])] == int(w["hamming"])
-    # exact plants: same (fam, jitter) -> hamming 0; never cross-family
-    for (a, b), h in got.items():
-        assert a % 16 == b % 16
-        if (a // 16) % 4 == (b // 16) % 4:
-            assert h == 0
-
-
-def test_audio_fingerprint_fuzz_never_crashes(spark):
-    """Fuzz contract for the staged audio decode (the PNG/HDF5 fuzz
-    posture): truncations, bit flips, and random prefixes of a valid
-    WAV must yield a row with either a correct or NULL fingerprint —
-    never an exception inside the scan. Deterministic corpus (seeded
-    positions), one Spark pass over all ~120 mutants."""
-    import struct as _struct
-
-    from datapipeline_spike_spark.sources.multimodal import (
-        decode_audio_fingerprint,
-        synthetic_wav_pattern,
-    )
-
-    base = synthetic_wav_pattern(seed=11, n_samples=65 * 64)
-    mutants: list[tuple[int, bytes]] = [(0, base)]
-    mid = 1
-    for cut in range(1, 41):  # truncations across the whole container
-        mutants.append((mid, base[: len(base) * cut // 41]))
-        mid += 1
-    for k in range(40):  # deterministic single-byte corruptions
-        pos = (k * 7919 + 13) % len(base)
-        b = bytearray(base)
-        b[pos] ^= 1 << (k % 8)
-        mutants.append((mid, bytes(b)))
-        mid += 1
-    for k in range(40):  # garbage prefixes / suffixes
-        junk = bytes((k * 31 + j) % 256 for j in range(k + 1))
-        mutants.append((mid, junk + base if k % 2 else base + junk))
-        mid += 1
-    df = spark.createDataFrame(mutants, "media_id long, payload binary")
-    rows = decode_audio_fingerprint(df).collect()  # must not raise
-    assert len(rows) == len(mutants)
-    by_id = {r["media_id"]: r for r in rows}
-    assert by_id[0]["fp_w0"] is not None  # the pristine clip decodes
-    for r in rows:  # NULL-ness is always PAIRED (w0 null <=> w1 null)
-        assert (r["fp_w0"] is None) == (r["fp_w1"] is None)
-
-
-def test_audio_registered_slice_is_not_vacuous(spark, sf_dir):
-    """The doc_id % 5 = 3 slice must still contain planted
-    same-(family, jitter) byte-identical clips (hamming 0) — an empty
-    registered result would pass the oracle compare trivially while
-    verifying nothing."""
-    rows = REGISTRY["audio_fingerprint_neardup"].spark(spark, sf_dir).collect()
-    assert rows
-    assert any(r["hamming"] == 0 for r in rows)
-    for r in rows:  # the energy-contour plant never bridges families
-        assert r["id_a"] % 16 == r["id_b"] % 16, r
-        if (r["id_a"] // 16) % 4 == (r["id_b"] // 16) % 4:
-            assert r["hamming"] == 0, r
-
-
-# --- minhash_band_tuning -------------------------------------------------------
-
-
-def test_minhash_band_tuning_analytic_properties(spark):
-    """The S-curve sanity anchors: b=1 -> p = s^n; r=1 (b=n) ->
-    p = 1-(1-s)^n; p monotone in s for every factorization; the
-    registered LSH default's threshold lands where its docstring
-    claims."""
-    from datapipeline_spike_spark.operators.sketches import (
-        minhash_band_tuning,
-    )
-
-    rows = minhash_band_tuning(spark, n_hashes=16).collect()
-    by = {}
-    for r in rows:
-        by.setdefault(r["bands"], []).append(r)
-    for b, rs in by.items():
-        rs.sort(key=lambda r: r["s"])
-        ps = [r["p_candidate"] for r in rs]
-        assert ps == sorted(ps), f"p not monotone for bands={b}"
-    one = {r["s"]: r["p_candidate"] for r in by[1]}
-    assert one[0.5] == pytest.approx(round(0.5**16, 6), abs=1e-6)
-    full = {r["s"]: r["p_candidate"] for r in by[16]}
-    assert full[0.5] == pytest.approx(round(1 - 0.5**16, 6), abs=1e-6)
-
-
-def test_band_tuning_registered_grid_is_the_factorization_table(spark, sf_dir):
-    """One row per (divisor of 128) x (19 similarity grid points);
-    p_candidate in [0, 1] and monotone in s per banding."""
-    rows = REGISTRY["minhash_band_tuning"].spark(spark, sf_dir).collect()
-    divisors = [b for b in range(1, 129) if 128 % b == 0]
-    assert len(rows) == len(divisors) * 19
-    by_band: dict[int, list] = {}
-    for r in rows:
-        assert r["n_hashes"] == 128
-        assert r["bands"] * r["rows_per_band"] == 128
-        assert 0.0 <= r["p_candidate"] <= 1.0
-        by_band.setdefault(r["bands"], []).append(r)
-    for b, rs in by_band.items():
-        rs.sort(key=lambda r: r["s"])
-        ps = [r["p_candidate"] for r in rs]
-        assert ps == sorted(ps), f"p not monotone for bands={b}"
-
-
-# --- oracle differentials --------------------------------------------------------
-# Each operator below is registered as the named query, whose oracle and
-# sf0.001 Spark build are the ones this check compares, so the check is that
-# query's differential (the shared ``oracle_check`` fixture).
-
-
-def test_cdc_chunk_dedup_matches_duckdb(oracle_check):
-    oracle_check("cdc_chunk_dedup")
-
-
-def test_containment_matches_duckdb(oracle_check):
-    oracle_check("ngram_containment_pairs")
-
-
-def test_dedup_span_removal_matches_duckdb(oracle_check):
-    oracle_check("dedup_span_removal")
-
-
-def test_exact_substr_runs_match_duckdb(oracle_check):
-    oracle_check("exact_substr_runs")
-
-
-def test_minhash_band_tuning_matches_duckdb(oracle_check):
-    oracle_check("minhash_band_tuning")
-
-
-def test_url_canonical_dedup_matches_duckdb(oracle_check):
-    oracle_check("url_canonical_dedup")

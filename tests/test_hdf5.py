@@ -4,8 +4,6 @@ Spark-side plumbing is the real contract)."""
 
 from __future__ import annotations
 
-import struct
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -705,29 +703,3 @@ def test_native_reader_fuzz_contract():
                 read_h5_datasets(blob[:cut])
             except Hdf5FormatError:
                 pass
-
-
-def test_ochk_continuation_cycle_fails_loud():
-    """ADVICE r10: a crafted continuation chain that revisits a block
-    must raise Hdf5FormatError, not loop unboundedly (lake payloads are
-    untrusted input)."""
-    from datapipeline_spike_spark.sources.hdf5_native import (
-        UNDEF,
-        Hdf5FormatError,
-        lookup3,
-        read_h5_datasets,
-    )
-
-    # v3 superblock + root OHDR whose only message is a continuation
-    # pointing BACK at the root OHDR itself (the tightest cycle)
-    ohdr_addr = 48
-    body = struct.pack("<QQ", ohdr_addr, 24)  # caddr = own block
-    root_msgs = struct.pack("<BHB", 0x10, len(body), 0) + body
-    head = b"OHDR" + struct.pack("<BBI", 2, 0x02, len(root_msgs))
-    oh = head + root_msgs
-    oh += struct.pack("<I", lookup3(oh))
-    sb = b"\x89HDF\r\n\x1a\n" + struct.pack("<BBBB", 3, 8, 8, 0)
-    sb += struct.pack("<QQQQ", 0, UNDEF, ohdr_addr + len(oh), ohdr_addr)
-    sb += struct.pack("<I", lookup3(sb))
-    with pytest.raises(Hdf5FormatError, match="cycle"):
-        read_h5_datasets(sb + oh)

@@ -8,7 +8,6 @@ differential is tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,30 +17,10 @@ from datapipeline_spike_spark.operators.text_stats import (
     zipf_profile,
 )
 from datapipeline_spike_spark.plans import REGISTRY
-from datapipeline_spike_spark.plans.registry import load
-
-SF = "/root/testdata/sf0.001"
-DOCS = f"{SF}/documents.parquet"
-
-_SQL_TOKS = (
-    "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9'']+'),"
-    " t -> t != '')"
-)
-
-# the engine's deterministic md5 [0,1) draw (operators/sampling.hash_u01)
-_SQL_U01_DOC = (
-    "(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-    " / 4294967296.0)"
-)
+from datapipeline_spike_spark.plans.registry import SQL_TOKS, SQL_U01_DOC, load
 
 
-def _con():
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{DOCS}'")
-    return con
-
-
-def test_zipf_profile_planted_distribution(spark):
+def test_zipf_profile_planted_distribution(spark, sf_dir):
     """An exactly Zipfian corpus (count(rank r) = N//r) must fit slope
     ~ -1 with near-perfect r2."""
     rows = []
@@ -56,7 +35,7 @@ def test_zipf_profile_planted_distribution(spark):
     # the driver's synthetic corpus is deliberately flat (slope ~ -0.18),
     # but its counts still decrease with rank and the fit is a valid
     # correlation
-    got = REGISTRY["zipf_profile"].spark(spark, SF).collect()[0]
+    got = REGISTRY["zipf_profile"].spark(spark, sf_dir).collect()[0]
     assert got["slope"] < 0
     assert 0.0 < got["r2"] <= 1.0
 
@@ -93,7 +72,7 @@ def test_kneser_ney_ranks_fluent_above_scrambled(spark):
     assert out[100] > out[101]
 
 
-def test_verdict_agreement_matrix_matches_duckdb(spark):
+def test_verdict_agreement_matrix_matches_duckdb(spark, sf_dir, oracle_con):
     """Agreement matrix vs a DuckDB replay on planted verdicts over the
     documents table (filters: quality floor, length floor, digit-free),
     including a NULL-abstain column and the kappa formula."""
@@ -101,7 +80,7 @@ def test_verdict_agreement_matrix_matches_duckdb(spark):
         verdict_agreement_matrix,
     )
 
-    docs = load(spark, SF, "documents")
+    docs = load(spark, sf_dir, "documents")
     verdicts = docs.select(
         (F.length("text") >= 200).alias("len_ok"),
         (F.size(F.split(F.lower("text"), "[^a-z0-9']+")) >= 40).alias("tok_ok"),
@@ -116,7 +95,7 @@ def test_verdict_agreement_matrix_matches_duckdb(spark):
         ).collect()
     }
     assert set(got) == {("len_ok", "tok_ok"), ("len_ok", "parity"), ("tok_ok", "parity")}
-    want = _con().execute(
+    want = oracle_con.execute(
         """
         WITH v AS (
           SELECT length(text) >= 200 AS len_ok,
@@ -205,7 +184,7 @@ def test_zipf_profile_degenerate_corpora(spark):
     assert r["n_fit"] == 0 and r["slope"] is None
 
 
-def test_dedup_span_removal_keep_first_policy(spark):
+def test_dedup_span_removal_keep_first_policy(spark, sf_dir):
     """Planted semantics: doc 1 and doc 2 share an 8-token license
     block inside otherwise unique text; the block survives ONLY in the
     canonical (lower-id) doc, and a fully unique doc loses nothing."""
@@ -227,18 +206,18 @@ def test_dedup_span_removal_keep_first_policy(spark):
     assert out[2]["retained_ratio"] < 1.0 == out[1]["retained_ratio"]
     # the registered form's planted header/footer triggers cross-doc
     # removal in every document but the canonical one(s)
-    rows = REGISTRY["dedup_span_removal"].spark(spark, SF).collect()
+    rows = REGISTRY["dedup_span_removal"].spark(spark, sf_dir).collect()
     assert sum(r["n_removed"] > 0 for r in rows) >= len(rows) - 1
 
 
-def test_temperature_mixture_matches_duckdb(spark):
+def test_temperature_mixture_matches_duckdb(spark, sf_dir, oracle_con):
     """Temperature mixture plan vs a full DuckDB replay on the
     documents table at tau=0.5, budget 30%, epoch cap 4."""
     from datapipeline_spike_spark.operators.sampling import (
         temperature_mixture_plan,
     )
 
-    d = load(spark, SF, "documents").select(
+    d = load(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
         F.size(F.array_remove(F.split(F.lower("text"), "[^a-z0-9']+"), "")).alias("tk"),
@@ -249,10 +228,10 @@ def test_temperature_mixture_matches_duckdb(spark):
             d, budget_frac=0.3, tau=0.5, max_epochs=4.0
         ).collect()
     }
-    want = _con().execute(
+    want = oracle_con.execute(
         f"""
         WITH d AS (
-          SELECT doc_id, lang, len({_SQL_TOKS}) AS tk FROM documents
+          SELECT doc_id, lang, len({SQL_TOKS.format(c="text")}) AS tk FROM documents
         ),
         by_g AS (
           SELECT lang, count(*) AS n_docs,
@@ -274,7 +253,7 @@ def test_temperature_mixture_matches_duckdb(spark):
           SELECT lang, count(*) AS n_kept_docs,
                  CAST(sum(tk) AS BIGINT) AS kept_tokens
           FROM d JOIN plan USING (lang)
-          WHERE {_SQL_U01_DOC} < least(1.0, epochs)
+          WHERE {SQL_U01_DOC} < least(1.0, epochs)
           GROUP BY 1
         )
         SELECT plan.lang, n_docs, n_tokens, p, target_tokens, epochs,

@@ -1,9 +1,8 @@
-"""Contract tests for the queries registered in plans/catalog_r11: the
+"""Contract tests for the queries promoted under ``staged-r10``: the
 verdict-matrix arity guard, the zero-token mixture-group contract and
-the OCHK continuation-cycle guard. The cohort tests pin the queries
-catalog_r11 registers and run each one's oracle differential (the shared
-``oracle_check`` fixture, also behind
-tests/test_entry.py::test_query_matches_oracle)."""
+the OCHK continuation-cycle guard. The cohort tests pin that cohort and
+run each one's oracle differential (the shared ``oracle_check`` fixture,
+also behind tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
@@ -12,10 +11,10 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-from datapipeline_spike_spark.plans import REGISTRY, catalog_r11
+from datapipeline_spike_spark.plans import REGISTRY
 
 
-# the queries catalog_r11 registers, in registration order
+# the queries tagged staged-r10, in registration order
 R11_MOVES = (
     "zipf_profile",
     "ngram_novelty_profile",
@@ -27,13 +26,10 @@ R11_MOVES = (
 
 
 def test_r11_moves_are_all_registered():
-    """Exactly these six queries are registered from catalog_r11."""
+    """Exactly these six queries carry the ``staged-r10`` tag; their
+    builders live in the domain catalogs."""
     assert len(R11_MOVES) == 6
-    got = [
-        name
-        for name, q in REGISTRY.items()
-        if getattr(q.spark, "__module__", None) == catalog_r11.__name__
-    ]
+    got = [name for name, q in REGISTRY.items() if "staged-r10" in q.tags]
     assert sorted(got) == sorted(R11_MOVES)
 
 

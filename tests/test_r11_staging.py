@@ -1,8 +1,9 @@
-"""Embedding-similarity operators: centroid drift, hubness, the IVF-PQ
-index and its recall audit, Matryoshka truncation recall, hybrid RRF
-fusion and the kNN graph, on planted vectors with known answers, against
-DuckDB replays, and in their registered forms. Each registered query's
-oracle differential is also
+"""Planted-property and contract tests for the operators staged in r11
+(reliability_calibration_bins, token_distribution_drift,
+rouge_ngram_eval, embedding_centroid_drift, hubness_profile,
+ivfpq_topk), plus the two IVF-PQ DuckDB differentials the registry does
+not cover (the raw top-k neighbors and the recall audit's staged column
+set). Each registered query's oracle differential is
 tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
@@ -12,15 +13,105 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from datapipeline_spike_spark.operators.similarity import (
-    embedding_centroid_drift,
+from datapipeline_spike_spark.operators.quality import reliability_calibration_bins
+from datapipeline_spike_spark.operators.similarity import embedding_centroid_drift
+from datapipeline_spike_spark.operators.text_stats import (
+    rouge_ngram_eval,
+    token_distribution_drift,
 )
 from datapipeline_spike_spark.plans import REGISTRY
 from datapipeline_spike_spark.plans.registry import load
-from tests.test_plans import _plan_of, _window_groups
 
 
-# --- embedding_centroid_drift --------------------------------------------------
+# --- reliability_calibration_bins ---------------------------------------------
+
+
+def test_calibration_planted_extremes(spark):
+    """A perfectly calibrated synthetic (label true with probability =
+    score, realized exactly within each bin) shows ~0 gap; inverted
+    labels show gap ~ |1 - 2*score|; NULL scores/labels are excluded."""
+    rows = []
+    # bin b holds 20 rows at score b/10 + 0.05; exactly round(20*s) pass
+    for b in range(10):
+        s = b / 10 + 0.05
+        n_pass = round(20 * s)
+        rows += [(s, i < n_pass) for i in range(20)]
+    rows += [(None, True), (0.5, None)]  # abstentions
+    df = spark.createDataFrame(rows, "score double, label boolean")
+    out = {r["bin"]: r for r in reliability_calibration_bins(df).collect()}
+    assert set(out) == set(range(10))
+    assert sum(r["n"] for r in out.values()) == 200  # abstentions excluded
+    for b, r in out.items():
+        assert r["abs_gap"] <= 0.051, b  # calibrated within bin grain
+        assert r["weight"] == pytest.approx(0.1, abs=1e-6)
+    inverted = df.select("score", (~F.col("label")).alias("label"))
+    inv = {r["bin"]: r for r in reliability_calibration_bins(inverted).collect()}
+    assert inv[0]["abs_gap"] > 0.8 and inv[9]["abs_gap"] > 0.8
+
+
+# --- token_distribution_drift --------------------------------------------------
+
+
+def test_token_drift_planted_properties(spark, sf_dir):
+    """Identical snapshots -> all divergences 0; disjoint vocabularies
+    -> large and JS <= ln 2; an empty side -> NULL divergences with
+    real counts."""
+    same = spark.createDataFrame(
+        [("a", "alpha beta gamma"), ("b", "alpha beta gamma")],
+        "snap string, text string",
+    )
+    r = token_distribution_drift(same, "snap", "a", "b").collect()[0]
+    assert r["kl_ab"] == 0.0 and r["kl_ba"] == 0.0 and r["js_divergence"] == 0.0
+    assert r["vocab_union"] == 3 and r["n_tokens_a"] == 3
+    # large enough that add-one smoothing doesn't dominate the signal
+    disjoint = spark.createDataFrame(
+        [("a", "alpha beta gamma delta " * 50), ("b", "epsilon zeta eta theta " * 50)],
+        "snap string, text string",
+    )
+    r = token_distribution_drift(disjoint, "snap", "a", "b").collect()[0]
+    assert r["js_divergence"] > 0.5  # near ln 2 for disjoint vocab
+    import math
+
+    assert r["js_divergence"] <= math.log(2) + 1e-9
+    empty_side = spark.createDataFrame(
+        [("a", "alpha beta"), ("c", "unrelated words")],
+        "snap string, text string",
+    )
+    r = token_distribution_drift(empty_side, "snap", "a", "b").collect()[0]
+    assert r["n_tokens_a"] == 2 and r["n_tokens_b"] == 0
+    assert r["kl_ab"] is None and r["js_divergence"] is None
+    # the registered en-vs-fr drift on the corpus is a real divergence
+    r = REGISTRY["token_distribution_drift"].spark(spark, sf_dir).collect()[0]
+    assert r["kl_ab"] > 0 and r["js_divergence"] > 0
+
+
+# --- rouge_ngram_eval -----------------------------------------------------------
+
+
+def test_rouge_planted_semantics(spark):
+    """Identity pair -> P=R=F1=1; disjoint -> 0; clipping: a candidate
+    repeating one reference bigram 5x gets credit once per reference
+    occurrence, not 5x; a below-threshold side -> NULLs."""
+    pairs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox", "the quick brown fox"),
+            (2, "alpha beta gamma", "delta epsilon zeta"),
+            (3, "go go go go go go", "go go stop"),
+            (4, "word", "a real reference text"),
+        ],
+        "pair_id long, candidate string, reference string",
+    )
+    out = {r["pair_id"]: r for r in rouge_ngram_eval(pairs).collect()}
+    assert out[1]["precision"] == 1.0 == out[1]["recall"] == out[1]["f1"]
+    assert out[2]["overlap"] == 0 and out[2]["f1"] == 0.0
+    # candidate 'go go' x5, reference has ONE 'go go' -> clipped to 1
+    assert out[3]["overlap"] == 1
+    assert out[3]["precision"] == pytest.approx(1 / 5, abs=1e-6)
+    assert out[4]["cand_grams"] == 0 and out[4]["precision"] is None
+    assert out[4]["f1"] is None
+
+
+# --- embedding_centroid_drift ----------------------------------------------------
 
 
 def test_centroid_drift_planted_properties(spark):
@@ -48,7 +139,7 @@ def test_centroid_drift_planted_properties(spark):
     assert out["g3"]["centroid_cosine"] is None
 
 
-# --- hubness_profile -----------------------------------------------------------
+# --- hubness_profile -------------------------------------------------------------
 
 
 def test_hubness_planted_hub(spark):
@@ -97,7 +188,7 @@ def test_hubness_planted_hub(spark):
     assert rprof["skew_k_occ"] is None or abs(rprof["skew_k_occ"]) < 1.0
 
 
-# --- ivfpq_topk / ivfpq_recall_at_k --------------------------------------------
+# --- ivfpq_topk ------------------------------------------------------------------
 
 
 def _sql_ivfpq(m=4, k_cb=8, iters=2, width=16, scale=1 << 20,
@@ -256,198 +347,14 @@ def test_ivfpq_recall_audit_matches_duckdb(spark, sf_dir, oracle_con):
     assert sum(r["n_hits"] for r in got.values()) > 0
 
 
-def test_ivfpq_recall_audit_is_not_vacuous(spark, sf_dir):
-    """The registered recall number must show the index finding real
-    neighbors on the synthetic corpus (a 0.0-recall audit would mean
-    the composite is broken even if the oracle agrees)."""
-    out = REGISTRY["ivfpq_recall_at_k"].spark(spark, sf_dir).collect()
-    assert len(out) == 5
-    assert all(r["n_exact"] == 5 for r in out)
-    assert sum(r["n_hits"] for r in out) > 0
-
-
-# --- matryoshka_recall_at_k ----------------------------------------------------
-
-
-def test_matryoshka_full_width_is_perfect(spark, sf_dir):
-    """Truncating to the full embedding width must reproduce the exact
-    top-k — recall 1.0 for every query (the audit's sanity anchor)."""
-    from datapipeline_spike_spark.operators.similarity import (
-        matryoshka_recall,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    rows = matryoshka_recall(
-        emb, emb.filter(F.col("vec_id") < 5), k=5, dims=(64,)
-    ).collect()
-    assert len(rows) == 5
-    assert all(r["recall_at_k"] == 1.0 and r["n_exact"] == 5 for r in rows)
-
-
-def test_matryoshka_plan_shape(spark, sf_dir):
-    """Every corpus-side scan joins the BROADCAST query set (the ANN
-    audit contract) — no shuffled join anywhere, no Python; the top-k
-    windows are partitioned by query."""
-    from datapipeline_spike_spark.operators.similarity import (
-        matryoshka_recall,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    plan = _plan_of(
-        matryoshka_recall(emb, emb.filter(F.col("vec_id") < 5), k=5,
-                          dims=(8, 16))
-    )
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
-    assert all(g >= 3 for g in _window_groups(plan))
-
-
-def test_matryoshka_registered_recall_is_sane(spark, sf_dir):
-    """10 rows (2 widths x 5 queries); n_exact = 5 everywhere; recall
-    in [0, 1]; width 16 never does worse than width 8 ON AVERAGE (the
-    MRL monotonicity the audit exists to confirm)."""
-    rows = REGISTRY["matryoshka_recall_at_k"].spark(spark, sf_dir).collect()
-    assert len(rows) == 10
-    assert all(r["n_exact"] == 5 for r in rows)
-    assert all(0.0 <= r["recall_at_k"] <= 1.0 for r in rows)
-    mean = {
-        m: sum(r["recall_at_k"] for r in rows if r["m_dims"] == m) / 5
-        for m in (8, 16)
-    }
-    assert mean[16] >= mean[8]
-
-
-# --- hybrid_rrf_retrieval ------------------------------------------------------
-
-
-def test_rrf_fusion_properties(spark):
-    """Consensus beats single-system: a doc both retrievers return at
-    modest ranks outranks a doc one retriever returns at rank 1
-    (1/61+1/62 > 1/61); fusing a system with itself preserves its
-    order; ties break by neighbor id."""
-    from datapipeline_spike_spark.operators.similarity import rrf_fuse
-
-    a = spark.createDataFrame(
-        [(0, 100, 1), (0, 200, 2)],
-        "query_id long, neighbor_id long, rank long",
-    )
-    b = spark.createDataFrame(
-        [(0, 200, 1), (0, 300, 2)],
-        "query_id long, neighbor_id long, rank long",
-    )
-    rows = {
-        r["neighbor_id"]: r for r in rrf_fuse([a, b], k=3).collect()
-    }
-    # 200 appears in both (ranks 2 and 1) -> top fused
-    assert rows[200]["fused_rank"] == 1 and rows[200]["n_systems"] == 2
-    assert rows[100]["fused_rank"] == 2  # rank 1 in a, absent in b
-    assert rows[300]["fused_rank"] == 3
-    assert rows[200]["rrf_score"] == pytest.approx(
-        round(1 / 62 + 1 / 61, 6), abs=1e-6
-    )
-
-    self_fused = rrf_fuse([a, a], k=2).collect()
-    order = sorted(
-        (r["fused_rank"], r["neighbor_id"]) for r in self_fused
-    )
-    assert order == [(1, 100), (2, 200)]
-
-
-def test_rrf_plan_shape(spark, sf_dir):
-    """Both retriever scans broadcast the query set; the fusion windows
-    are partitioned; no shuffled joins, no Python."""
-    from datapipeline_spike_spark.operators.similarity import (
-        hybrid_rrf_retrieval,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    plan = _plan_of(
-        hybrid_rrf_retrieval(emb, emb.filter(F.col("vec_id") < 5))
-    )
-    for node in ("CartesianProduct", "SortMergeJoin", "BatchEvalPython",
-                 "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
-    assert all(g >= 3 for g in _window_groups(plan))
-
-
-def test_rrf_registered_fusion_is_a_topk_per_query(spark, sf_dir):
-    """5 queries x fused top-5; fused_rank contiguous; rrf_score
-    non-increasing within a query; a both-systems consensus hit
-    carries n_systems = 2."""
-    rows = REGISTRY["hybrid_rrf_retrieval"].spark(spark, sf_dir).collect()
-    assert len(rows) == 25
-    by_q: dict[int, list] = {}
-    for r in rows:
-        assert r["n_systems"] in (1, 2)
-        by_q.setdefault(r["query_id"], []).append(r)
-    assert set(by_q) == {0, 1, 2, 3, 4}
-    for q, rs in by_q.items():
-        rs.sort(key=lambda r: r["fused_rank"])
-        assert [x["fused_rank"] for x in rs] == [1, 2, 3, 4, 5]
-        scores = [x["rrf_score"] for x in rs]
-        assert scores == sorted(scores, reverse=True)
-    assert any(r["n_systems"] == 2 for r in rows)
-
-
-# --- knn_graph_edges -----------------------------------------------------------
-
-
-def test_knn_graph_planted_clusters(spark):
-    """Scaled copies of a vector share every hyperplane sign (same
-    bucket) and cosine exactly 1.0 — each cluster member's top
-    neighbors are its cluster-mates with is_mutual=True; ranks are
-    contiguous from 1."""
-    from datapipeline_spike_spark.operators.similarity import (
-        knn_graph_edges,
-    )
-
-    base_a = [1.0 if d % 3 == 0 else -0.5 for d in range(64)]
-    base_b = [-1.0 if d % 5 == 0 else 0.75 for d in range(64)]
-    rows = []
-    for i, scale in enumerate((1.0, 2.0, 3.0)):
-        rows.append((i, [x * scale for x in base_a]))
-        rows.append((10 + i, [x * scale for x in base_b]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = knn_graph_edges(df, dim=64, k=2).collect()
-    by_src: dict[int, list] = {}
-    for r in got:
-        by_src.setdefault(r["src_id"], []).append(r)
-    for src, rs in by_src.items():
-        rs.sort(key=lambda r: r["rank"])
-        assert [x["rank"] for x in rs] == list(range(1, len(rs) + 1))
-        mates = {x["dst_id"] for x in rs if x["cos_sim"] == 1.0}
-        want_mates = (
-            {i for i in (0, 1, 2) if i != src}
-            if src < 10
-            else {i for i in (10, 11, 12) if i != src}
-        )
-        assert mates == want_mates, src
-        assert all(x["is_mutual"] for x in rs if x["cos_sim"] == 1.0)
-
-
-def test_knn_graph_registered_form_floors(spark, sf_dir):
-    rows = REGISTRY["knn_graph_edges"].spark(spark, sf_dir).collect()
-    assert rows
-    by_src: dict[int, list] = {}
-    for r in rows:
-        assert 1 <= r["rank"] <= 5
-        by_src.setdefault(r["src_id"], []).append(r)
-    # every src's ranks are contiguous from 1 and cosines non-increasing
-    for rs in by_src.values():
-        rs.sort(key=lambda r: r["rank"])
-        assert [x["rank"] for x in rs] == list(range(1, len(rs) + 1))
-        sims = [x["cos_sim"] for x in rs]
-        assert sims == sorted(sims, reverse=True)
-    # mutual edges exist (the graph is not pure hub spray)
-    assert any(r["is_mutual"] for r in rows)
-
-
 # --- oracle differentials --------------------------------------------------------
 # Each operator below is registered as the named query, whose oracle and
 # sf0.001 Spark build are the ones this check compares, so the check is that
 # query's differential (the shared ``oracle_check`` fixture).
+
+
+def test_calibration_bins_match_duckdb(oracle_check):
+    oracle_check("reliability_calibration_bins")
 
 
 def test_centroid_drift_matches_duckdb(oracle_check):
@@ -458,13 +365,9 @@ def test_hubness_profile_matches_duckdb(oracle_check):
     oracle_check("hubness_profile")
 
 
-def test_hybrid_rrf_matches_duckdb(oracle_check):
-    oracle_check("hybrid_rrf_retrieval")
+def test_rouge_matches_duckdb(oracle_check):
+    oracle_check("rouge_ngram_eval")
 
 
-def test_knn_graph_matches_duckdb(oracle_check):
-    oracle_check("knn_graph_edges")
-
-
-def test_matryoshka_recall_matches_duckdb(oracle_check):
-    oracle_check("matryoshka_recall_at_k")
+def test_token_drift_matches_duckdb(oracle_check):
+    oracle_check("token_distribution_drift")

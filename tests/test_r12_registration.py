@@ -1,18 +1,18 @@
-"""Contract tests for the queries registered in plans/catalog_r12: the
+"""Contract tests for the queries promoted under ``staged-r11``: the
 calibration-range contract and the recall-audit sanity floor for the
-registered IVF-PQ form. The cohort tests pin the queries catalog_r12
-registers and run each one's oracle differential (the shared
-``oracle_check`` fixture, also behind
-tests/test_entry.py::test_query_matches_oracle)."""
+registered IVF-PQ form. The cohort tests pin that cohort and run each
+one's oracle differential (the shared ``oracle_check`` fixture, also
+behind tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
 import pytest
 
-from datapipeline_spike_spark.plans import REGISTRY, catalog_r12
+from datapipeline_spike_spark.operators.quality import reliability_calibration_bins
+from datapipeline_spike_spark.plans import REGISTRY
 
 
-# the queries catalog_r12 registers, in registration order
+# the queries tagged staged-r11, in registration order
 R12_MOVES = (
     "reliability_calibration_bins",
     "token_distribution_drift",
@@ -24,13 +24,10 @@ R12_MOVES = (
 
 
 def test_r12_moves_are_all_registered():
-    """Exactly these six queries are registered from catalog_r12."""
+    """Exactly these six queries carry the ``staged-r11`` tag; their
+    builders live in the domain catalogs."""
     assert len(R12_MOVES) == 6
-    got = [
-        name
-        for name, q in REGISTRY.items()
-        if getattr(q.spark, "__module__", None) == catalog_r12.__name__
-    ]
+    got = [name for name, q in REGISTRY.items() if "staged-r11" in q.tags]
     assert sorted(got) == sorted(R12_MOVES)
 
 

@@ -8,23 +8,13 @@ tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
-import duckdb
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
+from datapipeline_spike_spark.plans.catalog_dedup import _sql_dhash_words
 from datapipeline_spike_spark.plans.registry import load
-
-SF = "/root/testdata/sf0.001"
-
-_SQL_U01 = "(('0x' || substr(md5({k}), 1, 8))::BIGINT / 4294967296.0)"
-
-
-def _con():
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    return con
 
 
 # --- watermark_greenlist_score --------------------------------------------------
@@ -95,16 +85,6 @@ def test_rank_normalize_planted_properties(spark):
 
 
 # --- ngram_containment_pairs ----------------------------------------------------
-
-_SQL_PAGES_QUOTE = """
-    pages AS (
-      SELECT d.doc_id,
-             CASE WHEN d.doc_id % 7 = 3 AND q.text IS NOT NULL
-                  THEN d.text || ' ' || q.text
-                  ELSE d.text END AS text
-      FROM documents d LEFT JOIN documents q ON q.doc_id = d.doc_id - 1
-    )
-"""
 
 
 def test_containment_planted_semantics(spark):
@@ -245,45 +225,7 @@ def test_doremi_huge_losses_no_overflow(spark):
 # --- image dHash near-dup path --------------------------------------------------
 
 
-def _sql_dhash_words() -> str:
-    """Per-doc (w0, w1) dHash words replayed from the planted family
-    pattern — 64 unrolled CASE terms, pixel k regenerated as
-    (k*k*(2*fam+3) + 5*k + jit*(k%7==0)) % 256 at the nearest-neighbor
-    sample grid positions."""
-
-    def px(k: str) -> str:
-        return (
-            f"((({k}) * ({k}) * (2 * fam + 3) + 5 * ({k})"
-            f" + CASE WHEN ({k}) % 7 = 0 THEN jit ELSE 0 END) % 256)"
-        )
-
-    def word(lo: int) -> str:
-        terms = []
-        for bi in range(lo, lo + 32):
-            r, c = bi // 8, bi % 8
-            ka = f"(({r} * h) // 8) * w + (({c} * w) // 9)"
-            kb = f"(({r} * h) // 8) * w + (({c + 1} * w) // 9)"
-            terms.append(
-                f"CASE WHEN {px(ka)} < {px(kb)}"
-                f" THEN {1 << (bi - lo)}::BIGINT ELSE 0 END"
-            )
-        return " + ".join(terms)
-
-    return f"""
-    m AS (
-      SELECT doc_id, CAST(doc_id % 16 AS BIGINT) AS fam,
-             CAST((doc_id // 16) % 4 AS BIGINT) AS jit
-      FROM documents
-    ),
-    dims AS (
-      SELECT doc_id, fam, jit, 9 + fam % 8 AS w, 8 + fam % 5 AS h FROM m
-    ),
-    hx AS (
-      SELECT doc_id, {word(0)} AS w0, {word(32)} AS w1 FROM dims
-    )"""
-
-
-def test_dhash_decode_matches_python_replay(spark):
+def test_dhash_decode_matches_python_replay(spark, sf_dir):
     """decode_image_dhash (real PNG bytes: chunk walk + inflate +
     unfilter + sample grid) equals the pure-Python dHash of the
     regenerated pattern for every doc."""
@@ -293,7 +235,7 @@ def test_dhash_decode_matches_python_replay(spark):
         image_family_media_from_documents,
     )
 
-    d = load(spark, SF, "documents").limit(64)
+    d = load(spark, sf_dir, "documents").limit(64)
     got = {
         r["media_id"]: (r["dhash_w0"], r["dhash_w1"])
         for r in decode_image_dhash(image_family_media_from_documents(d)).collect()
@@ -349,7 +291,7 @@ def test_dhash_corrupt_payloads_yield_null_not_crash(spark):
     assert out[3]["dhash_w0"] is None
 
 
-def test_dhash_pairs_match_duckdb(spark):
+def test_dhash_pairs_match_duckdb(spark, sf_dir, oracle_con):
     """The full staged query — planted family PNGs -> real decode ->
     banded candidate join -> exact Hamming — vs the DuckDB replay of
     hashes (from the pattern), bands, and popcount distances."""
@@ -359,15 +301,15 @@ def test_dhash_pairs_match_duckdb(spark):
         image_family_media_from_documents,
     )
 
-    d = load(spark, SF, "documents")
+    d = load(spark, sf_dir, "documents")
     hashes = decode_image_dhash(image_family_media_from_documents(d))
     got = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in dhash_neardup_pairs(hashes).collect()
     }
-    want = _con().execute(
+    want = oracle_con.execute(
         f"""
-        WITH {_sql_dhash_words()},
+        WITH {_sql_dhash_words("documents")},
         bands AS (
           -- 8x8-bit bands, replaying dedup.dhash_neardup_pairs'
           -- r13 layout (band i: word i//4, shift 8*(i%4)) — the twin
@@ -442,7 +384,7 @@ def test_dhash_max_hamming_contract(spark):
     assert dhash_neardup_pairs(df, max_hamming=7).count() == 0
 
 
-def test_dhash_planted_families(spark):
+def test_dhash_planted_families(spark, sf_dir):
     """Same (family, jitter) -> identical images -> Hamming 0; pairs
     never bridge families (distinct patterns differ way past the
     threshold on this plant); within a family across jitters at least
@@ -453,7 +395,7 @@ def test_dhash_planted_families(spark):
         image_family_media_from_documents,
     )
 
-    d = load(spark, SF, "documents").filter(F.col("doc_id") < 128)
+    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 128)
     hashes = decode_image_dhash(image_family_media_from_documents(d))
     pairs = dhash_neardup_pairs(hashes).collect()
     assert pairs

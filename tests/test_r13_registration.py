@@ -1,10 +1,9 @@
-"""Contract tests for the queries registered in plans/catalog_r13:
+"""Contract tests for the queries promoted under ``staged-r12``:
 registered-form sanity floors (the dhash slice must produce real pairs;
 doremi weights must be finite and normalized; the containment plant must
-produce quote pairs). The cohort tests pin the queries catalog_r13
-registers and run each one's oracle differential (the shared
-``oracle_check`` fixture, also behind
-tests/test_entry.py::test_query_matches_oracle)."""
+produce quote pairs). The cohort tests pin that cohort and run each
+one's oracle differential (the shared ``oracle_check`` fixture, also
+behind tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
@@ -12,10 +11,10 @@ import math
 
 import pytest
 
-from datapipeline_spike_spark.plans import REGISTRY, catalog_r13, rotation_preflight
+from datapipeline_spike_spark.plans import REGISTRY, rotation_preflight
 
 
-# the queries catalog_r13 registers, in registration order
+# the queries tagged staged-r12, in registration order
 R13_MOVES = (
     "watermark_greenlist_score",
     "quality_rank_normalize",
@@ -27,13 +26,10 @@ R13_MOVES = (
 
 
 def test_r13_moves_are_all_registered():
-    """Exactly these six queries are registered from catalog_r13."""
+    """Exactly these six queries carry the ``staged-r12`` tag; their
+    builders live in the domain catalogs."""
     assert len(R13_MOVES) == 6
-    got = [
-        name
-        for name, q in REGISTRY.items()
-        if getattr(q.spark, "__module__", None) == catalog_r13.__name__
-    ]
+    got = [name for name, q in REGISTRY.items() if "staged-r12" in q.tags]
     assert sorted(got) == sorted(R13_MOVES)
 
 

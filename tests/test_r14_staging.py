@@ -8,36 +8,16 @@ tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
-import duckdb
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
+from datapipeline_spike_spark.plans.catalog_dedup import _sql_audio_words
 from datapipeline_spike_spark.plans.registry import load
-
-SF = "/root/testdata/sf0.001"
-
-_SQL_U01 = "(('0x' || substr(md5({k}), 1, 8))::BIGINT / 4294967296.0)"
-
-
-def _con():
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
-    )
-    return con
 
 
 # --- exact_substr_runs ----------------------------------------------------------
-
-_SQL_PAGES_QUOTE = """
-    pages AS (
-      SELECT d.doc_id,
-             CASE WHEN d.doc_id % 7 = 3 AND q.text IS NOT NULL
-                  THEN d.text || ' ' || q.text
-                  ELSE d.text END AS text
-      FROM documents d LEFT JOIN documents q ON q.doc_id = d.doc_id - 1
-    )
-"""
 
 
 def test_exact_substr_planted_spans(spark):
@@ -168,40 +148,7 @@ def test_url_canonicalization_planted_rules(spark):
 # --- audio fingerprint near-dup path --------------------------------------------
 
 
-def _sql_audio_words(limit: int) -> str:
-    """Per-doc (w0, w1) fingerprint words replayed from the planted
-    waveform: frame energies are exact integer sums of |sample| over
-    64-sample frames, bit f = e[f+1] > e[f]."""
-    sample = (
-        "abs((((i * i * (2 * fam + 3) + 5 * i"
-        " + CASE WHEN i % 7 = 0 THEN jit ELSE 0 END) % 4001) - 2000))"
-    )
-    return f"""
-    m AS (
-      SELECT doc_id, CAST(doc_id % 16 AS BIGINT) AS fam,
-             CAST((doc_id // 16) % 4 AS BIGINT) AS jit
-      FROM documents WHERE doc_id < {limit}
-    ),
-    es AS (
-      SELECT doc_id,
-             list_transform(range(0, 65), f ->
-               list_sum(list_transform(range(f * 64, (f + 1) * 64),
-                 i -> {sample}))) AS e
-      FROM m
-    ),
-    hx AS (
-      SELECT doc_id,
-             list_sum(list_transform(range(0, 32), f ->
-               CASE WHEN e[f + 2] > e[f + 1]
-                    THEN (1::BIGINT << f) ELSE 0 END)) AS w0,
-             list_sum(list_transform(range(32, 64), f ->
-               CASE WHEN e[f + 2] > e[f + 1]
-                    THEN (1::BIGINT << (f - 32)) ELSE 0 END)) AS w1
-      FROM es
-    )"""
-
-
-def test_audio_fingerprint_decode_matches_python_replay(spark):
+def test_audio_fingerprint_decode_matches_python_replay(spark, sf_dir):
     """decode_audio_fingerprint (real WAV bytes: RIFF walk + int16
     unpack + frame energies) equals the pure-Python fingerprint of the
     regenerated waveform for every doc."""
@@ -211,7 +158,7 @@ def test_audio_fingerprint_decode_matches_python_replay(spark):
         fingerprint_bits_from_samples,
     )
 
-    d = load(spark, SF, "documents").filter(F.col("doc_id") < 64)
+    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
     got = {
         r["media_id"]: (r["fp_w0"], r["fp_w1"])
         for r in decode_audio_fingerprint(
@@ -249,7 +196,7 @@ def test_audio_fingerprint_corrupt_payloads_yield_null(spark):
     assert out[3]["fp_w0"] is None
 
 
-def test_audio_neardup_pairs_match_duckdb(spark):
+def test_audio_neardup_pairs_match_duckdb(spark, sf_dir, oracle_con):
     """The full staged query — planted family WAVs -> real decode ->
     the GENERIC banded-Hamming join (dedup.dhash_neardup_pairs reused
     unchanged on fingerprint words) — vs the DuckDB replay."""
@@ -259,7 +206,7 @@ def test_audio_neardup_pairs_match_duckdb(spark):
         decode_audio_fingerprint,
     )
 
-    d = load(spark, SF, "documents").filter(F.col("doc_id") < 128)
+    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 128)
     fp = decode_audio_fingerprint(audio_family_media_from_documents(d))
     got = {
         (r["id_a"], r["id_b"]): r["hamming"]
@@ -267,9 +214,9 @@ def test_audio_neardup_pairs_match_duckdb(spark):
             fp, w0_col="fp_w0", w1_col="fp_w1"
         ).collect()
     }
-    want = _con().execute(
+    want = oracle_con.execute(
         f"""
-        WITH {_sql_audio_words(128)},
+        WITH {_sql_audio_words("documents WHERE doc_id < 128")},
         bands AS (
           SELECT doc_id, w0, w1, 0 AS band_idx, w0 & 255 AS band_val FROM hx
           UNION ALL SELECT doc_id, w0, w1, 1, (w0 >> 8) & 255 FROM hx

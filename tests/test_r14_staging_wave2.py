@@ -10,13 +10,22 @@ tests/test_entry.py::test_query_matches_oracle."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
 from datapipeline_spike_spark.plans import REGISTRY
+from datapipeline_spike_spark.plans.catalog_text import (
+    SNIPPET_C,
+    SNIPPET_JS,
+    SNIPPET_PY,
+    _code_planted,
+    _lic_planted,
+)
+from datapipeline_spike_spark.plans.catalog_training import _chat_planted
 from datapipeline_spike_spark.plans.registry import load
-
-SF = "/root/testdata/sf0.001"
+from tests.test_plans import _plan_of, _window_groups
 
 
 # --- pagerank_host_authority --------------------------------------------------
@@ -55,40 +64,6 @@ def test_pagerank_literal_graph_vs_reference(spark):
 
 # --- code_detect_profile --------------------------------------------------------
 
-SNIPPET_PY = (
-    "def load(x): y = (x + 1) ; z = {\"k\": [1, 2]} ; return (y, z) ; "
-    "import os ; class App(object): pass ; lambda q: (q * 2) >= 0"
-)
-SNIPPET_JS = (
-    "function go(a) { var b = (a + 1); const c = { k: 1 }; "
-    "let d = [2]; return b + c.k + d[0]; } "
-    "function stop() { var e = 0; }"
-)
-SNIPPET_C = (
-    "#include <stdio.h> int main(void) { int x = (1 + 2); "
-    "printf(\"%d\", x); return (x == 3); }"
-)
-
-
-def _code_planted(spark):
-    d = load(spark, SF, "documents")
-    return d.select(
-        "doc_id",
-        "source",
-        F.when(
-            F.col("doc_id") % 7 == 2,
-            F.concat(
-                "text",
-                F.lit(" "),
-                F.when(F.col("doc_id") % 3 == 0, F.lit(SNIPPET_PY))
-                .when(F.col("doc_id") % 3 == 1, F.lit(SNIPPET_JS))
-                .otherwise(F.lit(SNIPPET_C)),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-
 
 def test_code_detect_planted_families(spark):
     """Each snippet classifies to its own family; keyword-rich but
@@ -118,35 +93,6 @@ def test_code_detect_planted_families(spark):
 # --- license_detect_profile -----------------------------------------------------
 
 
-def _lic_planted(spark):
-    d = load(spark, SF, "documents")
-    lic = F.element_at(
-        F.array(
-            F.lit("mit"),
-            F.lit("apache-2.0"),
-            F.lit("gpl-3.0-only"),
-            F.lit("bsd-3-clause"),
-            F.lit("cc-by-4.0"),
-        ),
-        (F.col("doc_id") % 5 + 1).cast("int"),
-    )
-    return d.select(
-        "doc_id",
-        "source",
-        F.when(
-            (F.col("doc_id") % 11).isin(1, 4, 8),
-            F.concat(
-                F.lit("spdx-license-identifier: "),
-                lic,
-                F.lit(" | "),
-                F.col("text"),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-
-
 def test_license_detect_priority_and_boundaries(spark):
     """Dual-mention texts classify to the FIRST (copyleft-first) match;
     'submit'/'limit' never fire the \\bmit\\b pattern."""
@@ -170,14 +116,14 @@ def test_license_detect_priority_and_boundaries(spark):
 # --- matryoshka_recall_at_k -----------------------------------------------------
 
 
-def test_matryoshka_full_width_is_perfect(spark):
+def test_matryoshka_full_width_is_perfect(spark, sf_dir):
     """Truncating to the full embedding width must reproduce the exact
     top-k — recall 1.0 for every query (the audit's sanity anchor)."""
     from datapipeline_spike_spark.operators.similarity import (
         matryoshka_recall,
     )
 
-    emb = load(spark, SF, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     rows = matryoshka_recall(
         emb, emb.filter(F.col("vec_id") < 5), k=5, dims=(64,)
     ).collect()
@@ -280,24 +226,7 @@ def test_curriculum_planted_phases(spark):
 # applied at staging time so registration can't inherit a regression) ---
 
 
-def _plan_of(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _window_groups(plan: str):
-    """Bracket-group counts for every Window node (3+ = partitioned,
-    2 = the unpartitioned scale-killer)."""
-    import re as _re
-
-    out = []
-    for line in plan.splitlines():
-        s = line.lstrip(" +-:|*(0123456789)")
-        if s.startswith("Window "):
-            out.append(len(_re.findall(r"\[[^\]]*\]", s)))
-    return out
-
-
-def test_pagerank_plan_shape(spark):
+def test_pagerank_plan_shape(spark, sf_dir):
     """Per-iteration joins are keyed (hash/sort-merge), never a
     cartesian; the only nested-loop crosses are the documented 1-row
     count/dangling broadcasts; no Python, no windows."""
@@ -306,14 +235,14 @@ def test_pagerank_plan_shape(spark):
         pagerank,
     )
 
-    plan = _plan_of(pagerank(host_link_graph(load(spark, SF, "documents"))))
+    plan = _plan_of(pagerank(host_link_graph(load(spark, sf_dir, "documents"))))
     assert "CartesianProduct" not in plan
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
                  "Window"):
         assert node not in plan, node
 
 
-def test_detectors_plan_shape(spark):
+def test_detectors_plan_shape(spark, sf_dir):
     """code_detect is map-only to its rollup (no joins, no windows, no
     Python); license_detect adds only the broadcast per-source join."""
     from datapipeline_spike_spark.operators.detectors import (
@@ -321,19 +250,19 @@ def test_detectors_plan_shape(spark):
         license_detect_profile,
     )
 
-    code = _plan_of(code_detect_profile(_code_planted(spark)))
+    code = _plan_of(code_detect_profile(_code_planted(spark, sf_dir)))
     for node in ("SortMergeJoin", "BroadcastHashJoin",
                  "BroadcastNestedLoopJoin", "CartesianProduct", "Window",
                  "BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert node not in code, node
-    lic = _plan_of(license_detect_profile(_lic_planted(spark)))
+    lic = _plan_of(license_detect_profile(_lic_planted(spark, sf_dir)))
     assert "BroadcastHashJoin" in lic
     for node in ("SortMergeJoin", "CartesianProduct", "Window",
                  "BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert node not in lic, node
 
 
-def test_matryoshka_plan_shape(spark):
+def test_matryoshka_plan_shape(spark, sf_dir):
     """Every corpus-side scan joins the BROADCAST query set (the ANN
     audit contract) — no shuffled join anywhere, no Python; the top-k
     windows are partitioned by query."""
@@ -341,7 +270,7 @@ def test_matryoshka_plan_shape(spark):
         matryoshka_recall,
     )
 
-    emb = load(spark, SF, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     plan = _plan_of(
         matryoshka_recall(emb, emb.filter(F.col("vec_id") < 5), k=5,
                           dims=(8, 16))
@@ -353,7 +282,7 @@ def test_matryoshka_plan_shape(spark):
     assert all(g >= 3 for g in _window_groups(plan))
 
 
-def test_vad_plan_shape(spark):
+def test_vad_plan_shape(spark, sf_dir):
     """The decode is the one Arrow stage (MapInPandas); the islands
     window is PARTITIONED by clip; no joins."""
     from datapipeline_spike_spark.sources.multimodal import (
@@ -363,7 +292,7 @@ def test_vad_plan_shape(spark):
 
     plan = _plan_of(
         audio_vad_segments(
-            vad_media_from_documents(load(spark, SF, "documents"))
+            vad_media_from_documents(load(spark, sf_dir, "documents"))
         )
     )
     assert "MapInPandas" in plan
@@ -374,7 +303,7 @@ def test_vad_plan_shape(spark):
     assert groups and all(g >= 3 for g in groups)
 
 
-def test_curriculum_plan_windows(spark):
+def test_curriculum_plan_windows(spark, sf_dir):
     """The doc-grain ntile window is PARTITIONED by source; exactly one
     unpartitioned window exists and it runs on the (sources x phases)
     plan grain AFTER the aggregate (bounded by construction)."""
@@ -382,7 +311,7 @@ def test_curriculum_plan_windows(spark):
         curriculum_phase_plan,
     )
 
-    plan = _plan_of(curriculum_phase_plan(load(spark, SF, "documents")))
+    plan = _plan_of(curriculum_phase_plan(load(spark, sf_dir, "documents")))
     groups = _window_groups(plan)
     assert len(groups) == 2
     assert sorted(groups) == [2, 3]
@@ -404,7 +333,7 @@ def test_curriculum_plan_windows(spark):
 # same gauntlet: full DuckDB differential + planted properties.
 
 
-def test_video_scene_cuts_planted(spark):
+def test_video_scene_cuts_planted(spark, sf_dir):
     """3-frame scenes produce exactly n_frames/3 shots of 3 (when every
     boundary actually changes pixels — replayed in pure Python); a
     constant video is ONE shot; a truncated payload contributes no
@@ -417,7 +346,7 @@ def test_video_scene_cuts_planted(spark):
 
     seeds = [4, 9]
     media = scene_media_from_documents(
-        load(spark, SF, "documents").filter(F.col("doc_id").isin(seeds))
+        load(spark, sf_dir, "documents").filter(F.col("doc_id").isin(seeds))
     )
     got = sorted(
         (r["media_id"], r["shot_idx"], r["start_frame"], r["n_frames"])
@@ -458,7 +387,7 @@ def test_video_scene_cuts_planted(spark):
 # --- crawl_frontier_priority ----------------------------------------------------
 
 
-def test_crawl_frontier_internal_consistency(spark):
+def test_crawl_frontier_internal_consistency(spark, sf_dir):
     """priority recomputes from the row's own published columns; dup
     rate stays in [0, 1) (a host's first page is never a dup); depth
     in [1, 4]."""
@@ -466,7 +395,7 @@ def test_crawl_frontier_internal_consistency(spark):
         crawl_frontier_priority,
     )
 
-    rows = crawl_frontier_priority(load(spark, SF, "documents")).collect()
+    rows = crawl_frontier_priority(load(spark, sf_dir, "documents")).collect()
     assert rows
     for r in rows:
         assert 0.0 <= r["dup_rate"] < 1.0
@@ -538,7 +467,7 @@ def test_span_corruption_hand_cases(spark):
             r2["target_len"]) == (1, 1, 3, 3)
 
 
-def test_wave3_plan_shapes(spark):
+def test_wave3_plan_shapes(spark, sf_dir):
     """Wave-3 pins: scene cuts = one Arrow decode + a partitioned
     window, no joins; frontier = keyed joins only (no cartesian, no
     Python, no data-grain window); anchors = partitioned window on the
@@ -555,7 +484,7 @@ def test_wave3_plan_shapes(spark):
         video_scene_cuts,
     )
 
-    docs = load(spark, SF, "documents")
+    docs = load(spark, sf_dir, "documents")
 
     scene = _plan_of(video_scene_cuts(scene_media_from_documents(docs)))
     assert "MapInPandas" in scene and "BatchEvalPython" not in scene
@@ -588,7 +517,7 @@ def test_wave3_plan_shapes(spark):
 # minhash_band_tuning — same gauntlet.
 
 
-def test_label_propagation_planted_communities(spark):
+def test_label_propagation_planted_communities(spark, sf_dir):
     """Two disjoint triangles each collapse to their min vertex id; the
     synchronous rounds replay a pure-Python reference on a path
     graph (deterministic smallest-label ties)."""
@@ -629,7 +558,7 @@ def test_label_propagation_planted_communities(spark):
     }
     assert got2 == labels
     # the registered form labels the host graph (a non-empty result)
-    reg = REGISTRY["label_propagation_communities"].spark(spark, SF)
+    reg = REGISTRY["label_propagation_communities"].spark(spark, sf_dir)
     assert reg.count() > 0
 
 
@@ -711,7 +640,7 @@ def test_minhash_band_tuning_analytic_properties(spark):
     assert full[0.5] == pytest.approx(round(1 - 0.5**16, 6), abs=1e-6)
 
 
-def test_wave4_plan_shapes(spark):
+def test_wave4_plan_shapes(spark, sf_dir):
     """Wave-4 pins: LPA rounds are keyed joins + two-level aggregates
     (no windows, no cartesian, no Python); vocab overlap's rank window
     is PARTITIONED and its only cross is the bounded sources x sources
@@ -727,7 +656,7 @@ def test_wave4_plan_shapes(spark):
         vocab_overlap_matrix,
     )
 
-    docs = load(spark, SF, "documents")
+    docs = load(spark, sf_dir, "documents")
 
     lpa = _plan_of(label_propagation_communities(host_link_graph(docs)))
     assert "CartesianProduct" not in lpa
@@ -773,7 +702,7 @@ def test_triangle_clustering_planted(spark):
     assert got[5]["degree"] == 1 and got[5]["clustering"] is None
 
 
-def test_triangle_plan_shape(spark):
+def test_triangle_plan_shape(spark, sf_dir):
     """Both triangle joins are equi joins (never cartesian/BNLJ), no
     Python, no windows."""
     from datapipeline_spike_spark.operators.graph import (
@@ -782,7 +711,7 @@ def test_triangle_plan_shape(spark):
     )
 
     plan = _plan_of(
-        triangle_clustering(host_link_graph(load(spark, SF, "documents")))
+        triangle_clustering(host_link_graph(load(spark, sf_dir, "documents")))
     )
     for node in ("CartesianProduct", "BroadcastNestedLoopJoin",
                  "BatchEvalPython", "ArrowEvalPython", "MapInPandas",
@@ -827,14 +756,14 @@ def test_rrf_fusion_properties(spark):
     assert order == [(1, 100), (2, 200)]
 
 
-def test_rrf_plan_shape(spark):
+def test_rrf_plan_shape(spark, sf_dir):
     """Both retriever scans broadcast the query set; the fusion windows
     are partitioned; no shuffled joins, no Python."""
     from datapipeline_spike_spark.operators.similarity import (
         hybrid_rrf_retrieval,
     )
 
-    emb = load(spark, SF, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     plan = _plan_of(
         hybrid_rrf_retrieval(emb, emb.filter(F.col("vec_id") < 5))
     )
@@ -846,36 +775,6 @@ def test_rrf_plan_shape(spark):
 
 # ============================ WAVE 7 =============================
 # chat_turn_stats / dpo_pair_plan (operators/sft.py) — same gauntlet.
-
-
-def _chat_planted(spark):
-    d = load(spark, SF, "documents")
-    turns = F.transform(
-        F.sequence(F.lit(0), (F.col("doc_id") % 4 + 1).cast("int")),
-        lambda i: F.concat(
-            F.when(
-                (
-                    i
-                    + F.when(F.col("doc_id") % 5 == 0, F.lit(1)).otherwise(
-                        F.lit(0)
-                    )
-                )
-                % 2
-                == 0,
-                F.lit("user: "),
-            ).otherwise(F.lit("assistant: ")),
-            F.col("text").substr(i * 7 + 1, F.lit(40)),
-        ),
-    )
-    return d.select(
-        "doc_id",
-        F.concat(
-            F.array_join(turns, "\n"),
-            F.when(
-                F.col("doc_id") % 7 == 3, F.lit("\n### footer ad")
-            ).otherwise(F.lit("")),
-        ).alias("text"),
-    )
 
 
 def test_chat_turn_stats_planted(spark):
@@ -954,7 +853,7 @@ def test_dpo_pair_plan_planted(spark):
     assert (got[4]["chosen_id"], got[4]["rejected_id"]) == (40, 42)
 
 
-def test_wave7_plan_shapes(spark):
+def test_wave7_plan_shapes(spark, sf_dir):
     """chat stats: one doc-keyed aggregate + a transcript-partitioned
     window, no joins beyond the noise-count merge, no Python; dpo: ONE
     window pass (no candidate self-join), prompt-partitioned."""
@@ -963,13 +862,13 @@ def test_wave7_plan_shapes(spark):
         dpo_pair_plan,
     )
 
-    chat = _plan_of(chat_turn_stats(_chat_planted(spark)))
+    chat = _plan_of(chat_turn_stats(_chat_planted(spark, sf_dir)))
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
                  "CartesianProduct", "BroadcastNestedLoopJoin"):
         assert node not in chat, node
     assert all(g >= 3 for g in _window_groups(chat))
 
-    cand = load(spark, SF, "documents").select(
+    cand = load(spark, sf_dir, "documents").select(
         (F.col("doc_id") % 50).alias("prompt_id"),
         F.col("doc_id").alias("cand_id"),
         (((F.col("doc_id") * 37) % 1000) / F.lit(1000.0)).alias("score"),

@@ -1,19 +1,19 @@
-"""Contract tests for the queries registered in plans/catalog_r15:
-registered-form sanity floors (the audio slice must produce real same-
-family pairs; BT strengths must be normalized and rank-consistent with
-the planted truth; the substr quote plant must surface long runs). The
-cohort tests pin the queries catalog_r15 registers and run each one's
-oracle differential (the shared ``oracle_check`` fixture, also behind
+"""Contract tests for the queries promoted under ``staged-r14``:
+registered-form sanity floors (the audio slice must produce real
+same-family pairs; BT strengths must be normalized and rank-consistent
+with the planted truth; the substr quote plant must surface long runs).
+The cohort tests pin that cohort and run each one's oracle differential
+(the shared ``oracle_check`` fixture, also behind
 tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
 import pytest
 
-from datapipeline_spike_spark.plans import REGISTRY, catalog_r15, rotation_preflight
+from datapipeline_spike_spark.plans import REGISTRY, rotation_preflight
 
 
-# the queries catalog_r15 registers, in registration order
+# the queries tagged staged-r14, in registration order
 R15_MOVES = (
     "exact_substr_runs",
     "cdc_chunk_dedup",
@@ -27,13 +27,10 @@ R15_MOVES = (
 
 
 def test_r15_moves_are_all_registered():
-    """Exactly these eight queries are registered from catalog_r15."""
+    """Exactly these eight queries carry the ``staged-r14`` tag; their
+    builders live in the domain catalogs."""
     assert len(R15_MOVES) == 8
-    got = [
-        name
-        for name, q in REGISTRY.items()
-        if getattr(q.spark, "__module__", None) == catalog_r15.__name__
-    ]
+    got = [name for name, q in REGISTRY.items() if "staged-r14" in q.tags]
     assert sorted(got) == sorted(R15_MOVES)
 
 

@@ -1,20 +1,19 @@
-"""Contract tests for the queries registered in plans/catalog_r16:
+"""Contract tests for the queries promoted under ``staged-r14-wave2``:
 registered-form sanity floors (the pagerank ranks must sum to 1 over the
 host graph; the detector plants must surface every family/license; the
 VAD corpus must produce real multi-segment clips; the curriculum
-schedule must be phase-major). The cohort tests pin the queries
-catalog_r16 registers and run each one's oracle differential (the shared
-``oracle_check`` fixture, also behind
-tests/test_entry.py::test_query_matches_oracle)."""
+schedule must be phase-major). The cohort tests pin that cohort and run
+each one's oracle differential (the shared ``oracle_check`` fixture,
+also behind tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
 import pytest
 
-from datapipeline_spike_spark.plans import REGISTRY, catalog_r16, rotation_preflight
+from datapipeline_spike_spark.plans import REGISTRY, rotation_preflight
 
 
-# the queries catalog_r16 registers, in registration order
+# the queries tagged staged-r14-wave2, in registration order
 R16_MOVES = (
     "pagerank_host_authority",
     "code_detect_profile",
@@ -26,13 +25,10 @@ R16_MOVES = (
 
 
 def test_r16_moves_are_all_registered():
-    """Exactly these six queries are registered from catalog_r16."""
+    """Exactly these six queries carry the ``staged-r14-wave2`` tag;
+    their builders live in the domain catalogs."""
     assert len(R16_MOVES) == 6
-    got = [
-        name
-        for name, q in REGISTRY.items()
-        if getattr(q.spark, "__module__", None) == catalog_r16.__name__
-    ]
+    got = [name for name, q in REGISTRY.items() if "staged-r14-wave2" in q.tags]
     assert sorted(got) == sorted(R16_MOVES)
 
 

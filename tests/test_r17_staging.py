@@ -18,17 +18,17 @@ Registration notes (measured on these staged plans at sf0.001):
   (hard_negative_pairs precedent) -> BNLJ_OK; rank window PARTITIONED.
 - min_k_prob_profile: BNLJ x1 — the 1-row smoothing-totals cross
   (unigram_logprob_score precedent) -> BNLJ_OK; both windows
-  PARTITIONED by document.
-"""
+  PARTITIONED by document."""
 
 from __future__ import annotations
+
+import math
 
 import pytest
 from pyspark.sql import functions as F
 
 from datapipeline_spike_spark.plans.registry import load
-
-SF = "/root/testdata/sf0.001"
+from tests.test_plans import _plan_of, _window_groups
 
 
 # --- hits_hub_authority ---------------------------------------------------------
@@ -165,7 +165,7 @@ def test_min_k_prob_hand_corpus(spark):
         assert g["min_k_avg_logprob"] <= g["avg_logprob"] + 1e-9
 
 
-def test_min_k_prob_tail_vs_mean_on_corpus(spark):
+def test_min_k_prob_tail_vs_mean_on_corpus(spark, sf_dir):
     """On the real corpus: the bottom-k tail is strictly informative —
     min_k mean <= full mean everywhere, strictly below for docs with
     token-count diversity; k_tokens = ceil(0.2 * n) clamped to >= 1."""
@@ -175,7 +175,7 @@ def test_min_k_prob_tail_vs_mean_on_corpus(spark):
         min_k_prob_profile,
     )
 
-    rows = min_k_prob_profile(load(spark, SF, "documents")).collect()
+    rows = min_k_prob_profile(load(spark, sf_dir, "documents")).collect()
     assert rows
     strict = 0
     for r in rows:
@@ -189,15 +189,7 @@ def test_min_k_prob_tail_vs_mean_on_corpus(spark):
 # --- plan pins ---------------------------------------------------------------------
 
 
-# one home for the nontrivial plan-text parsers (review r17: a second
-# copy would drift when a Spark upgrade changes node rendering)
-from tests.test_r14_staging_wave2 import (  # noqa: E402
-    _plan_of,
-    _window_groups,
-)
-
-
-def test_wave8_plan_shapes(spark):
+def test_wave8_plan_shapes(spark, sf_dir):
     """hits: keyed joins + 1-row broadcast crosses, ExistingRDD
     iteration barriers, no windows, no Python, no cartesian; knn:
     bucket equi-join + partitioned rank window + the auto-plane 1-row
@@ -214,7 +206,7 @@ def test_wave8_plan_shapes(spark):
         min_k_prob_profile,
     )
 
-    docs = load(spark, SF, "documents")
+    docs = load(spark, sf_dir, "documents")
 
     hits = _plan_of(hits_hub_authority(host_link_graph(docs)))
     assert "CartesianProduct" not in hits
@@ -223,7 +215,7 @@ def test_wave8_plan_shapes(spark):
                  "Window"):
         assert node not in hits, node
 
-    knn = _plan_of(knn_graph_edges(load(spark, SF, "embeddings"), dim=64))
+    knn = _plan_of(knn_graph_edges(load(spark, sf_dir, "embeddings"), dim=64))
     assert "CartesianProduct" not in knn
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert node not in knn, node
@@ -412,7 +404,7 @@ def test_min_k_prob_rejects_bad_k_frac(spark):
     assert full["min_k_avg_logprob"] == full["avg_logprob"]
 
 
-def test_wave9_plan_shapes(spark):
+def test_wave9_plan_shapes(spark, sf_dir):
     """kcore: semi-joins + keyed aggregates + ExistingRDD barriers, no
     BNLJ/window/Python (the 1-row convergence counts are driver-side,
     documented); diversity and best-of-n: pure keyed aggregates."""
@@ -425,7 +417,7 @@ def test_wave9_plan_shapes(spark):
         distinct_ngram_diversity,
     )
 
-    docs = load(spark, SF, "documents")
+    docs = load(spark, sf_dir, "documents")
 
     kc = _plan_of(kcore_membership(host_link_graph(docs), k=4))
     assert "ExistingRDD" in kc  # the peel barriers

@@ -1,17 +1,19 @@
-"""Contract tests for the queries registered in plans/catalog_r18:
-registered-form sanity floors for every entry. The cohort tests pin the
-queries catalog_r18 registers and run each one's oracle differential
-(the shared ``oracle_check`` fixture, also behind
+"""Contract tests for the queries promoted under ``staged-r17-wave8``:
+registered-form sanity floors for every entry. The cohort tests pin that
+cohort and run each one's oracle differential (the shared
+``oracle_check`` fixture, also behind
 tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 
-from datapipeline_spike_spark.plans import REGISTRY, catalog_r18, rotation_preflight
+from datapipeline_spike_spark.plans import REGISTRY, rotation_preflight
 
 
-# the queries catalog_r18 registers, in registration order
+# the queries tagged staged-r17-wave8, in registration order
 R18_MOVES = (
     "hits_hub_authority",
     "knn_graph_edges",
@@ -20,13 +22,10 @@ R18_MOVES = (
 
 
 def test_r18_moves_are_all_registered():
-    """Exactly these three queries are registered from catalog_r18."""
+    """Exactly these three queries carry the ``staged-r17-wave8`` tag;
+    their builders live in the domain catalogs."""
     assert len(R18_MOVES) == 3
-    got = [
-        name
-        for name, q in REGISTRY.items()
-        if getattr(q.spark, "__module__", None) == catalog_r18.__name__
-    ]
+    got = [name for name, q in REGISTRY.items() if "staged-r17-wave8" in q.tags]
     assert sorted(got) == sorted(R18_MOVES)
 
 

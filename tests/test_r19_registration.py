@@ -1,17 +1,17 @@
-"""Contract tests for the queries registered in plans/catalog_r19:
-registered-form sanity floors for every entry. The cohort tests pin the
-queries catalog_r19 registers and run each one's oracle differential
-(the shared ``oracle_check`` fixture, also behind
+"""Contract tests for the queries promoted under ``staged-r17-wave9``:
+registered-form sanity floors for every entry. The cohort tests pin that
+cohort and run each one's oracle differential (the shared
+``oracle_check`` fixture, also behind
 tests/test_entry.py::test_query_matches_oracle)."""
 
 from __future__ import annotations
 
 import pytest
 
-from datapipeline_spike_spark.plans import REGISTRY, catalog_r19, rotation_preflight
+from datapipeline_spike_spark.plans import REGISTRY, rotation_preflight
 
 
-# the queries catalog_r19 registers, in registration order
+# the queries tagged staged-r17-wave9, in registration order
 R19_MOVES = (
     "kcore_membership",
     "distinct_ngram_diversity",
@@ -20,13 +20,10 @@ R19_MOVES = (
 
 
 def test_r19_moves_are_all_registered():
-    """Exactly these three queries are registered from catalog_r19."""
+    """Exactly these three queries carry the ``staged-r17-wave9`` tag;
+    their builders live in the domain catalogs."""
     assert len(R19_MOVES) == 3
-    got = [
-        name
-        for name, q in REGISTRY.items()
-        if getattr(q.spark, "__module__", None) == catalog_r19.__name__
-    ]
+    got = [name for name, q in REGISTRY.items() if "staged-r17-wave9" in q.tags]
     assert sorted(got) == sorted(R19_MOVES)
 
 
